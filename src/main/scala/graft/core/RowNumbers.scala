@@ -87,14 +87,15 @@ object RowNumbers {
     * design; `spark.graft.rownumbers.cacheInput=false` restores the
     * recompute shape for callers whose upstream is a bare scan. */
   private def cacheForRange(df: DataFrame): (DataFrame, () => Unit) = {
-    val on = df.sparkSession.conf
-      .get("spark.graft.rownumbers.cacheInput", "true").toBoolean
-    if (!on) (df, () => ())
+    if (!cacheInput(df)) (df, () => ())
     else {
       val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (p, () => { p.unpersist(blocking = false); () })
     }
   }
+
+  private def cacheInput(df: DataFrame): Boolean =
+    df.sparkSession.conf.get("spark.graft.rownumbers.cacheInput", "true").toBoolean
 
   /** Attach `name` = step · (1-based row index in natural scan order —
     * (partition, offset) order, matching the reference's single-
@@ -106,13 +107,15 @@ object RowNumbers {
     // persist across zipWithIndex's two passes (the eager count job in
     // its constructor and the later numbering pass) — same reasoning
     // as scanCumsum: without it the child's post-shuffle work (sorts,
-    // projections) executes twice
-    val cached = df.rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // projections) executes twice. Gated like cacheForRange.
+    val on = cacheInput(df)
+    val cached =
+      if (on) df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else df.rdd
     val rdd = cached.zipWithIndex().map { case (r, i) =>
       Row.fromSeq(r.toSeq :+ (i + 1) * step)
     }
-    unpersistAfterFirstUse(spark, cached, rdd)
+    if (on) unpersistAfterFirstUse(spark, cached, rdd)
     spark.createDataFrame(rdd, schema)
   }
 

@@ -28,36 +28,8 @@ object Tables {
   // Relation METADATA cache — see graft.core.RelationCache.
   // `spark.read.parquet` re-lists files and re-infers schema as a
   // driver job on every call, so a 5-table dialect statement paid 5
-  // such jobs per execution. Entries are validated per hit against the
-  // path's local (mtime, length) — an externally rewritten table
-  // re-resolves. Non-local paths stat as (0, 0) and cache for the
-  // session (remote-catalog semantics) unless
-  // spark.graft.relationCache.enabled=false.
-
-  /** Cheap local freshness token: (mtime, length) for a file; for a
-    * DIRECTORY dataset, a fold over the direct children's (name,
-    * mtime) plus their total length — a Spark overwrite/append
-    * recreates or adds top-level part files (and rewrites _SUCCESS),
-    * so any Spark rewrite changes the token without a recursive
-    * listing. Non-local paths stat as (0, 0) and cache permanently —
-    * a remote catalog's semantics. */
-  private def stamp(path: String): (Long, Long) = {
-    val f = new java.io.File(path)
-    if (!f.isDirectory) (f.lastModified(), f.length())
-    else {
-      val kids = f.listFiles()
-      if (kids == null) (f.lastModified(), -1L)
-      else {
-        var h = f.lastModified() ^ (kids.length.toLong * 1315423911L)
-        var total = 0L
-        kids.foreach { k =>
-          h = h * 31 + k.getName.hashCode + k.lastModified()
-          total += k.length()
-        }
-        (h, total)
-      }
-    }
-  }
+  // such jobs per execution. Entries are validated per hit against
+  // RelationCache.stamp — an externally rewritten table re-resolves.
 
   // extension dispatch is case-INsensitive everywhere (GraftSession
   // lowercases keys, /files/ lists Data.XML as queryable) — match that
@@ -93,12 +65,13 @@ object Tables {
     }
 
   /** Load a direct path; CSV goes through the dialect-faithful
-    * inference pass (graft.sources.CsvSource). Resolved relations go
+    * inference pass (graft.sources.CsvSource), which caches its own
+    * inferred relation per file version. Every other format goes
     * through the same stamp-validated metadata cache as [[apply]]. */
   def load(spark: SparkSession, path: String): DataFrame =
-    cached(spark, path) {
+    if (ext(path) == "csv") graft.sources.CsvSource.read(spark, path)
+    else cached(spark, path) {
       ext(path) match {
-        case "csv"  => graft.sources.CsvSource.read(spark, path)
         case "json" => spark.read.json(path)
         case "orc"  => spark.read.orc(path)
         // Spark 4 ships XML natively; <row> is this engine's row element
@@ -109,5 +82,5 @@ object Tables {
 
   private def cached(spark: SparkSession, path: String)
       (build: => DataFrame): DataFrame =
-    RelationCache.getOrBuild(spark, s"tbl:$path", stamp(path))(build)
+    RelationCache.getOrBuild(spark, s"tbl:$path", RelationCache.stamp(path))(build)
 }

@@ -1315,7 +1315,45 @@ object IvfIndex {
     * branch id count — past that threshold Spark pushes a [min,max]
     * RANGE instead, which would read every page of the cell the id
     * span covers. [[servePq]] raises the session threshold to the
-    * wave budget for exactly that reason. */
+    * wave budget for exactly that reason while its eager waves scan,
+    * and restores it before returning. A single-wave gather stays
+    * lazy, so it scans later under the caller's own threshold. */
+
+  /** `spark.sql.parquet.pushdown.inFilterThreshold` raised to at
+    * least `min` while `body` runs, then restored — or unset if it was
+    * unset. Overlapping calls on one session share the raise, and the
+    * last one to leave restores the value the first one found, so
+    * concurrent serves neither cut each other's raise short nor leave
+    * it behind in the session. */
+  private object InFilterThreshold {
+    private val Key = "spark.sql.parquet.pushdown.inFilterThreshold"
+    // session -> (calls inside, value before the first one)
+    private val held =
+      new java.util.IdentityHashMap[SparkSession, (Int, Option[String])]()
+
+    def atLeast[A](spark: SparkSession, min: Int)(body: => A): A = {
+      held.synchronized {
+        // getAll holds only explicitly set keys (getOption would
+        // report the registered default as if it were set)
+        val (n, before) = Option(held.get(spark))
+          .getOrElse((0, spark.conf.getAll.get(Key)))
+        if (spark.conf.get(Key, "10").toInt < min) spark.conf.set(Key, min.toString)
+        held.put(spark, (n + 1, before))
+      }
+      try body
+      finally held.synchronized {
+        val (n, before) = held.get(spark)
+        if (n > 1) held.put(spark, (n - 1, before))
+        else {
+          held.remove(spark)
+          before match {
+            case Some(v) => spark.conf.set(Key, v)
+            case None => spark.conf.unset(Key)
+          }
+        }
+      }
+    }
+  }
 
   /** Per-cell pushed-vs-full decision: pushing reads ~one
     * [[PageRowLimit]]-row page per winner id (ids sharing a page
@@ -1528,11 +1566,7 @@ object IvfIndex {
         // constants). The literals are cast to the COLUMN's type:
         // comparing an int id column against long literals would wrap
         // the column in a cast, which defeats parquet pushdown
-        // entirely. The threshold bump keeps the parquet-side filter
-        // the same or-of-eq page filter the OR-chain shape pushed.
-        val thresholdKey = "spark.sql.parquet.pushdown.inFilterThreshold"
-        if (spark.conf.get(thresholdKey, "10").toInt < maxIdsPerWave)
-          spark.conf.set(thresholdKey, maxIdsPerWave.toString)
+        // entirely.
         def branch(c: Long, ids: Array[Long]): DataFrame =
           idx.filter(col("cell") === c)
             .filter(col("vec_id").isin(
@@ -1586,16 +1620,19 @@ object IvfIndex {
             // however many waves run. Waves bound PLAN size, not IO —
             // they submit CONCURRENTLY (bounded pool; Spark schedules
             // parallel jobs fine), so wall is ~max(wave), not Σ(wave).
+            // The waves scan here, inside this call, so the raised
+            // parquet In threshold (the same or-of-eq page filter the
+            // OR-chain shape pushed) is scoped to them.
             import scala.concurrent.{Await, ExecutionContext, Future}
             val pool = java.util.concurrent.Executors.newFixedThreadPool(
               math.min(math.max(1, gatherPool), waves.size))
             implicit val ec: ExecutionContext =
               ExecutionContext.fromExecutorService(pool)
-            try Await.result(
+            try InFilterThreshold.atLeast(spark, maxIdsPerWave)(Await.result(
               Future.sequence(waves.map { w => Future {
                 w.map((branch _).tupled).reduce(_ unionByName _)
                   .localCheckpoint(true)
-              }}), scala.concurrent.duration.Duration.Inf)
+              }}), scala.concurrent.duration.Duration.Inf))
             finally pool.shutdown()
           }
         val fullLeg: Option[DataFrame] =

@@ -2,7 +2,7 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.Executors
+import java.util.concurrent.{ExecutorService, Executors}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -25,6 +25,9 @@ final class QueryServer(graft: GraftSession, port: Int,
   private val spark: SparkSession = graft.spark
   private val jobGroup = "graft-query-server"
   @volatile private var server: HttpServer = _
+  // request-handler pool; stop() shuts it down so its (non-daemon)
+  // threads never outlive the server
+  @volatile private var pool: ExecutorService = _
 
   /** Live progress for the server's job group (the reference streams
     * per-query progress over its websocket, server.go TimedNotifier;
@@ -136,7 +139,8 @@ final class QueryServer(graft: GraftSession, port: Int,
     server.createContext("/info/", (ex: HttpExchange) => handleInfo(ex))
     server.createContext("/socket/", (ex: HttpExchange) =>
       respond(ex, 200, s"""{"Status":"ok","Port":$wsPortV}"""))
-    server.setExecutor(Executors.newFixedThreadPool(4))
+    pool = Executors.newFixedThreadPool(4)
+    server.setExecutor(pool)
     // the push channel binds first so GET /socket/ can never observe
     // the unset sidecar port once HTTP requests are possible
     wsPortV = ws.start()
@@ -164,6 +168,7 @@ final class QueryServer(graft: GraftSession, port: Int,
     pushing = false
     ws.stop()
     if (server != null) server.stop(0)
+    if (pool != null) pool.shutdown()
     spark.sparkContext.removeSparkListener(listener)
   }
 

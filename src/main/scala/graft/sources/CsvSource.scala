@@ -117,8 +117,32 @@ object CsvSource {
     when(t === "" || lower(t) === "null" || t === "NA", lit(null)).otherwise(t)
   }
 
-  /** Read a CSV with dialect inference. */
-  def read(spark: SparkSession, path: String, header: Boolean = true): DataFrame = {
+  /** Widest lattice type over one column's sampled cells (null cells
+    * as ""). LStr is the top of the lattice, so classification stops
+    * at the first cell that saturates the column — the remaining
+    * cells cannot change the type, and every non-date string cell
+    * would otherwise pay the full date-pattern chain in [[narrowest]]. */
+  def columnType(cells: Iterator[String]): LatType = {
+    var acc: LatType = LNull
+    while (acc != LStr && cells.hasNext) {
+      val t = narrowest(cells.next())
+      if (t.rank > acc.rank) acc = t
+    }
+    acc
+  }
+
+  /** Read a CSV with dialect inference. The inferred relation (the
+    * header job, the sample job and the type classification) is
+    * resolved once per file version: it sits in the session's
+    * [[graft.core.RelationCache]] under `csv:<header>:<path>` and is
+    * revalidated against the path's stamp on every call, so a
+    * rewritten file re-infers. Metadata only — every execution still
+    * scans the file. */
+  def read(spark: SparkSession, path: String, header: Boolean = true): DataFrame =
+    graft.core.RelationCache.getOrBuild(spark, s"csv:$header:$path",
+      graft.core.RelationCache.stamp(path))(infer(spark, path, header))
+
+  private def infer(spark: SparkSession, path: String, header: Boolean): DataFrame = {
     val raw0 = spark.read
       .option("header", header.toString)
       .option("inferSchema", "false")
@@ -129,11 +153,7 @@ object CsvSource {
     // bounded sample (reference samples ≤10k rows, utils.go:434)
     val sample = raw.limit(10000).collect()
     val types = raw.columns.indices.map { i =>
-      sample.foldLeft(LNull: LatType) { (acc, row) =>
-        val cell = if (row.isNullAt(i)) "" else row.getString(i)
-        val t = narrowest(cell)
-        if (t.rank > acc.rank) t else acc
-      }
+      columnType(sample.iterator.map(row => if (row.isNullAt(i)) "" else row.getString(i)))
     }
 
     val cols = raw.columns.zip(types).map { case (name, t) =>

@@ -948,10 +948,12 @@ class PlanSpec extends SparkSpec {
     // because a cell's members are sparse in the id space (a corpus-
     // wide id set overlaps every page's id range). Since r16 the
     // catalyst-side shape is one `In` per branch; at or below
-    // parquet.pushdown.inFilterThreshold (servePq raises it to the
-    // wave budget) ParquetFilters expands it to the same or-of-eq
-    // FilterApi predicate the old EqualTo chain pushed, so the column
-    // index still skips at page level per id. Occupancy is supplied
+    // parquet.pushdown.inFilterThreshold ParquetFilters expands it to
+    // the same or-of-eq FilterApi predicate the old EqualTo chain
+    // pushed, so the column index still skips at page level per id
+    // (servePq raises the threshold to the wave budget while its eager
+    // waves scan; a single lazy wave scans under the session's own
+    // threshold). Occupancy is supplied
     // as large so the per-cell flip keeps every cell pushed — the
     // 100 TB geometry, where cells are millions of rows.
     import org.apache.spark.sql.functions._
@@ -975,9 +977,10 @@ class PlanSpec extends SparkSpec {
     val pushed = p.split("\n").filter(_.contains("PushedFilters")).mkString("\n")
     // r16: the pushed shape is one In per (cell, wave-slice); Spark's
     // ParquetFilters expands an In at or below
-    // parquet.pushdown.inFilterThreshold (raised by servePq to the
-    // wave budget) into the SAME or-of-eq FilterApi predicate the old
-    // per-id EqualTo chain produced, so page-level skipping via the
+    // parquet.pushdown.inFilterThreshold into the SAME or-of-eq
+    // FilterApi predicate the old per-id EqualTo chain produced
+    // (servePq raises the threshold to the wave budget while its eager
+    // waves scan), so page-level skipping via the
     // column index is unchanged — the catalyst tree just stops paying
     // thousands of Or nodes per serve call
     assert(pushed.contains("In(vec_id"),

@@ -103,41 +103,49 @@ class R14OpsSpec extends SparkSpec {
     val q = batch(11, 3).localCheckpoint(true)
     val panel = panelOf(q).localCheckpoint(true)
     val idxFull = IvfIndex.readFull(spark, path)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def drained(): Int = {
-      var prev = -1
-      while (jobs.get != prev) { prev = jobs.get; Thread.sleep(200) }
-      prev
-    }
     val n = q.count()
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // AQE and broadcast materialization contribute their own jobs to
-      // any collect, so the pin is RELATIVE: the same gather on the
-      // same inputs, with vs without the threaded count — the threaded
-      // path must save at least one driver job (it collects pairs +
-      // winners in ONE job and skips the checkpoint), and the results
-      // must be identical
-      drained(); jobs.set(0)
-      val threaded = IvfIndex.servePq(idxFull, q, panel, 5, 20,
+    // AQE and broadcast materialization contribute their own jobs to
+    // any collect, so the pin is RELATIVE: the same gather on the
+    // same inputs, with vs without the threaded count — the threaded
+    // path must save at least one driver job (it collects pairs +
+    // winners in ONE job and skips the checkpoint), and the results
+    // must be identical
+    var threaded, unthreaded: org.apache.spark.sql.DataFrame = null
+    val jobsThreaded = jobsDuring {
+      threaded = IvfIndex.servePq(idxFull, q, panel, 5, 20,
         fixture.serving, fixture.books, knownBatchRows = Some(n))
-      val jobsThreaded = drained()
-      jobs.set(0)
-      val unthreaded = IvfIndex.servePq(idxFull, q, panel, 5, 20,
+    }
+    val jobsUnthreaded = jobsDuring {
+      unthreaded = IvfIndex.servePq(idxFull, q, panel, 5, 20,
         fixture.serving, fixture.books)
-      val jobsUnthreaded = drained()
-      assert(jobsThreaded < jobsUnthreaded,
-        s"the threaded count must drop ≥1 gather-construction job " +
-          s"($jobsThreaded vs $jobsUnthreaded)")
-      assert(collectServe(threaded) == collectServe(unthreaded),
-        "the job saving must not change serving results")
-      assert(collectServe(threaded).nonEmpty)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobsThreaded < jobsUnthreaded,
+      s"the threaded count must drop ≥1 gather-construction job " +
+        s"($jobsThreaded vs $jobsUnthreaded)")
+    assert(collectServe(threaded) == collectServe(unthreaded),
+      "the job saving must not change serving results")
+    assert(collectServe(threaded).nonEmpty)
+  }
+
+  test("servePq leaves the session conf exactly as it found it") {
+    // the gather raises parquet's In-pushdown threshold to the wave
+    // size while its eager waves scan (16 > the default 10 here); set
+    // or unset beforehand, the session must read the same afterwards
+    val key = "spark.sql.parquet.pushdown.inFilterThreshold"
+    val q = batch(3, 1)
+    val panel = panelOf(q)
+    val idxFull = IvfIndex.readFull(spark, path)
+    def serve() = collectServe(IvfIndex.servePq(idxFull, q, panel, 5, 20,
+      fixture.serving, fixture.books, maxIdsPerWave = 16))
+    spark.conf.unset(key)
+    val before = spark.conf.getAll
+    assert(serve().nonEmpty)
+    assert(spark.conf.getAll == before, "an unset threshold must stay unset")
+    spark.conf.set(key, "12")
+    try {
+      serve()
+      assert(spark.conf.get(key) == "12", "a set threshold must be restored")
+    } finally spark.conf.unset(key)
   }
 
   test("empty query batch serves an empty frame without re-evaluating anything") {
@@ -160,34 +168,21 @@ class R14OpsSpec extends SparkSpec {
     val q = batch(3, 2)
     val panel = panelOf(q)
     val idxFull = IvfIndex.readFull(spark, path)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def drained(): Int = {
-      var prev = -1
-      while (jobs.get != prev) { prev = jobs.get; Thread.sleep(200) }
-      prev
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      drained(); jobs.set(0)
-      val served = IvfIndex.servePq(idxFull, q, panel, 5, 20,
+    var served: org.apache.spark.sql.DataFrame = null
+    val construction = jobsDuring {
+      served = IvfIndex.servePq(idxFull, q, panel, 5, 20,
         fixture.serving, fixture.books, maxIdsPerWave = 8, maxWaves = 2)
-      val construction = drained()
-      // probed collect + shortlist ckpt + winners collect + <=2 waves,
-      // plus AQE/broadcast sub-jobs — generous but FAR below the
-      // unbounded-fragmentation count (the winner set here packs to
-      // dozens of 8-id waves without the repack bound)
-      assert(construction <= 12,
-        s"construction must honor the wave bound, ran $construction jobs")
-      val plain = IvfIndex.servePq(idxFull, q, panel, 5, 20,
-        fixture.serving, fixture.books)
-      assert(collectServe(served) == collectServe(plain),
-        "the wave bound must never change results")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // probed collect + shortlist ckpt + winners collect + <=2 waves,
+    // plus AQE/broadcast sub-jobs — generous but FAR below the
+    // unbounded-fragmentation count (the winner set here packs to
+    // dozens of 8-id waves without the repack bound)
+    assert(construction <= 12,
+      s"construction must honor the wave bound, ran $construction jobs")
+    val plain = IvfIndex.servePq(idxFull, q, panel, 5, 20,
+      fixture.serving, fixture.books)
+    assert(collectServe(served) == collectServe(plain),
+      "the wave bound must never change results")
   }
 
   test("sidecar CAS: a stale concurrent writer is refused loudly, never merged") {

@@ -174,40 +174,25 @@ class R15OpsSpec extends SparkSpec {
     val q = batch(61, 5).localCheckpoint(true)
     val panel = panelOf(q).localCheckpoint(true)
     val idxFull = IvfIndex.readFull(spark, gatherPath)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def drained(): Int = {
-      var prev = -1
-      while (jobs.get != prev) { prev = jobs.get; Thread.sleep(200) }
-      prev
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      drained(); jobs.set(0)
-      // honest tiny-cell occupancy -> the estimate proves saturation
-      val skipped = IvfIndex.servePq(idxFull, q, panel, 5, 20,
+    var skippedRows, analyzedRows: Seq[(Long, Long, Double, Long)] = Nil
+    // honest tiny-cell occupancy -> the estimate proves saturation
+    val jobsSkipped = jobsDuring {
+      skippedRows = collectServe(IvfIndex.servePq(idxFull, q, panel, 5, 20,
         gatherFixture.serving, gatherFixture.books,
-        cellRows = gatherFixture.counts)
-      val skippedRows = collectServe(skipped)
-      val jobsSkipped = drained()
-      jobs.set(0)
-      // occupancy withheld -> probedPages = 0, the estimate stays far
-      // under the push cap -> the exact winner analysis runs (and the
-      // winner set pushes; R14OpsSpec pins pushed ≡ fallback)
-      val analyzed = IvfIndex.servePq(idxFull, q, panel, 5, 20,
-        gatherFixture.serving, gatherFixture.books)
-      val analyzedRows = collectServe(analyzed)
-      val jobsAnalyzed = drained()
-      assert(jobsSkipped < jobsAnalyzed,
-        s"the saturation skip must drop ≥1 analysis job " +
-          s"($jobsSkipped vs $jobsAnalyzed)")
-      assert(skippedRows.nonEmpty && skippedRows == analyzedRows,
-        "the saturation skip must never change serving results")
-    } finally spark.sparkContext.removeSparkListener(listener)
+        cellRows = gatherFixture.counts))
+    }
+    // occupancy withheld -> probedPages = 0, the estimate stays far
+    // under the push cap -> the exact winner analysis runs (and the
+    // winner set pushes; R14OpsSpec pins pushed ≡ fallback)
+    val jobsAnalyzed = jobsDuring {
+      analyzedRows = collectServe(IvfIndex.servePq(idxFull, q, panel, 5, 20,
+        gatherFixture.serving, gatherFixture.books))
+    }
+    assert(jobsSkipped < jobsAnalyzed,
+      s"the saturation skip must drop ≥1 analysis job " +
+        s"($jobsSkipped vs $jobsAnalyzed)")
+    assert(skippedRows.nonEmpty && skippedRows == analyzedRows,
+      "the saturation skip must never change serving results")
   }
 
   test("per-cell flip mixes pushed and full branches under skewed occupancy") {

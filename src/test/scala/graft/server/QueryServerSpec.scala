@@ -29,6 +29,34 @@ class QueryServerSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("stop() leaves none of the server's request-handler threads alive") {
+    def poolThreads() = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala
+        .filter(t => t.isAlive && t.getName.matches("pool-\\d+-thread-\\d+")).toSet
+    }
+    val before = poolThreads()
+    val server = new QueryServer(GraftSession(spark, sf0001), port = 0)
+    val port = server.start()
+    val client = HttpClient.newHttpClient()
+    // concurrent requests so the handler pool starts several threads
+    val replies = (1 to 4).map { _ =>
+      client.sendAsync(
+        HttpRequest.newBuilder(URI.create(s"http://localhost:$port/query/"))
+          .POST(HttpRequest.BodyPublishers.ofString(
+            """{"query":"select count(r_regionkey) as n from region"}""")).build(),
+        HttpResponse.BodyHandlers.ofString())
+    }.map(_.join())
+    assert(replies.forall(_.body().contains(""""Status":"ok"""")))
+    val started = poolThreads() -- before
+    assert(started.nonEmpty, "requests must run on the server's handler pool")
+    server.stop()
+    val deadline = System.nanoTime() + 10L * 1000000000L
+    while (started.exists(_.isAlive) && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(!started.exists(_.isAlive),
+      s"handler threads alive after stop(): ${started.filter(_.isAlive).map(_.getName)}")
+  }
+
   test("repeated serve requests plan off the cached sidecar (no per-request reload)") {
     import org.apache.spark.sql.functions._
     import graft.operators.IvfIndex

@@ -101,4 +101,129 @@ class CsvSourceSpec extends SparkSpec {
     // divergence: the reference's Go parser yields a zero value)
     assert(df.filter("v IS NULL").count() == 1)
   }
+
+  // ---- inference early exit -----------------------------------------
+
+  /** The pre-early-exit classification: every cell folded. */
+  private def fullFold(cells: Seq[String]): CsvSource.LatType =
+    cells.foldLeft(CsvSource.LNull: CsvSource.LatType) { (acc, c) =>
+      val t = CsvSource.narrowest(c)
+      if (t.rank > acc.rank) t else acc
+    }
+
+  private val cellKinds: Seq[Seq[String]] = Seq(
+    Seq("42", "-3", "+7", "0"),                            // int
+    Seq("3.14", "1e5", ".5", "-2.0"),                      // float
+    Seq("007", "00501"),                                   // leading-zero id
+    Seq("2020-01-02", "2020-01-02 10:11:12", "02.01.2020"), // date
+    Seq("5 minutes", "72h3m", "100ms"),                    // duration
+    Seq("", "null", "NA", " "),                            // null
+    Seq("hello", "x y", "N/A"))                            // string
+
+  test("early-exit column typing equals the full fold: every order of every kind") {
+    val one = cellKinds.map(_.head)
+    one.permutations.foreach { cells =>
+      assert(CsvSource.columnType(cells.iterator) == fullFold(cells), cells.mkString("|"))
+    }
+  }
+
+  test("early-exit column typing equals the full fold: seeded random columns") {
+    val rnd = new scala.util.Random(20261017L)
+    val pool = cellKinds.flatten
+    (1 to 400).foreach { _ =>
+      // a skewed mix: some columns never see a string, some start or
+      // end with one
+      val kinds = rnd.shuffle(cellKinds).take(1 + rnd.nextInt(cellKinds.size)).flatten
+      val body = Seq.fill(rnd.nextInt(40))(
+        if (rnd.nextInt(10) == 0) pool(rnd.nextInt(pool.size)) else kinds(rnd.nextInt(kinds.size)))
+      val cells = rnd.nextInt(4) match {
+        case 0 => "hello" +: body
+        case 1 => body :+ "hello"
+        case _ => body
+      }
+      assert(CsvSource.columnType(cells.iterator) == fullFold(cells), cells.mkString("|"))
+    }
+  }
+
+  // ---- inferred-relation cache --------------------------------------
+
+  test("cache hit: an unchanged file returns the same relation with 0 Spark jobs") {
+    val f = Files.createTempDirectory("graftcsvhit").resolve("t.csv")
+    Files.writeString(f, "id,v\n1,a\n2,b\n")
+    var first, second: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { first = CsvSource.read(spark, f.toString) } > 0,
+      "a miss runs the header and sample jobs")
+    assert(jobsDuring { second = CsvSource.read(spark, f.toString) } == 0,
+      "a hit must not re-infer")
+    assert(second eq first)
+    // the direct-path loader shares the same entry
+    assert(graft.core.Tables.load(spark, f.toString) eq first)
+  }
+
+  test("cache: a same-length in-place rewrite in the same millisecond re-infers") {
+    import java.nio.file.attribute.{BasicFileAttributes, FileTime}
+    val f = Files.createTempDirectory("graftcsvrw").resolve("t.csv")
+    // both versions carry mtimes inside one millisecond, as a rewrite
+    // right after a write would on a fast disk
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:00.000000100Z")
+    Files.writeString(f, "id,v\n1,10\n2,20\n")
+    Files.setLastModifiedTime(f, FileTime.from(t0))
+    val before = CsvSource.read(spark, f.toString)
+    assert(before.schema("v").dataType.typeName == "long")
+    val key0 = Files.readAttributes(f, classOf[BasicFileAttributes]).fileKey
+    val len0 = Files.size(f)
+    Files.writeString(f, "id,v\n1,ab\n2,cd\n") // truncate + rewrite
+    Files.setLastModifiedTime(f, FileTime.from(t0.plusNanos(400)))
+    assume(Files.getLastModifiedTime(f) != FileTime.from(t0),
+      "the filesystem must keep sub-millisecond modification times")
+    assert(Files.getLastModifiedTime(f).toMillis == t0.toEpochMilli)
+    assert(Files.size(f) == len0)
+    assert(Files.readAttributes(f, classOf[BasicFileAttributes]).fileKey == key0,
+      "the rewrite must reuse the inode")
+    val after = CsvSource.read(spark, f.toString)
+    assert(!(after eq before))
+    assert(after.schema("v").dataType.typeName == "string")
+    assert(after.orderBy("id").collect().map(_.getString(1)).toSeq == Seq("ab", "cd"))
+  }
+
+  test("cache: a Spark-written CSV directory rewritten with overwrite re-infers") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graftcsvdir").resolve("d.csv").toString
+    Seq((1, 10), (2, 20)).toDF("id", "v")
+      .write.option("header", "true").csv(dir)
+    val before = CsvSource.read(spark, dir)
+    assert(before.schema("v").dataType.typeName == "long")
+    Seq((1, "x"), (2, "y"), (3, "z")).toDF("id", "v")
+      .write.mode("overwrite").option("header", "true").csv(dir)
+    val after = CsvSource.read(spark, dir)
+    assert(after.schema("v").dataType.typeName == "string")
+    assert(after.orderBy("id").collect().map(_.getString(1)).toSeq == Seq("x", "y", "z"))
+  }
+
+  test("cache: a header read and an nh read of one path are separate entries") {
+    val f = Files.createTempDirectory("graftcsvnh").resolve("t.csv")
+    Files.writeString(f, "id,v\n1,2\n3,4\n")
+    val hdr = CsvSource.read(spark, f.toString)
+    val nh = CsvSource.read(spark, f.toString, header = false)
+    assert(hdr.columns.toSeq == Seq("id", "v"))
+    assert(hdr.schema("id").dataType.typeName == "long")
+    assert(nh.columns.toSeq == Seq("col1", "col2"))
+    assert(nh.schema("col1").dataType.typeName == "string") // "id" is a cell
+    assert(nh.count() == 3 && hdr.count() == 2)
+    assert(CsvSource.read(spark, f.toString) eq hdr)
+    assert(CsvSource.read(spark, f.toString, header = false) eq nh)
+  }
+
+  test("cache off: spark.graft.relationCache.enabled=false re-infers every read") {
+    val f = Files.createTempDirectory("graftcsvoff").resolve("t.csv")
+    Files.writeString(f, "id,v\n1,a\n")
+    val key = "spark.graft.relationCache.enabled"
+    spark.conf.set(key, "false")
+    try {
+      var a, b: org.apache.spark.sql.DataFrame = null
+      assert(jobsDuring { a = CsvSource.read(spark, f.toString) } > 0)
+      assert(jobsDuring { b = CsvSource.read(spark, f.toString) } > 0)
+      assert(!(a eq b))
+    } finally spark.conf.unset(key)
+  }
 }
