@@ -30,7 +30,9 @@ def main():
     con = duckdb.connect()
     for p in glob.glob(f"{sf_dir}/*.parquet"):
         name = os.path.basename(p)[:-len(".parquet")]
-        con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
+        # a table written by Spark (graft.tools.ScaleDir) is a directory
+        src = f"{p}/*.parquet" if os.path.isdir(p) else p
+        con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{src}'")
     passed, failed = [], []
     for name, err in sorted(errors.items()):
         failed.append((name, f"spark build threw: {err}"))

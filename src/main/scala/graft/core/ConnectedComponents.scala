@@ -228,9 +228,8 @@ object ConnectedComponents {
       .localCheckpoint()
 
   /** [[run]] plus the number of propagation rounds executed — the
-    * observable the O(log d) pointer-jumping claim is probed on
-    * (ScaleProbe cc mode; a chain graph labels in ~log₂(diameter)
-    * rounds, not O(diameter)). */
+    * observable the O(log d) pointer-jumping claim is checked on (a
+    * chain graph labels in ~log₂(diameter) rounds, not O(diameter)). */
   def runCounted(edges: DataFrame, srcCol: String, dstCol: String,
       maxIters: Int = 20): (DataFrame, Int) =
     loopFrom(symmetrized(edges, srcCol, dstCol), maxIters)

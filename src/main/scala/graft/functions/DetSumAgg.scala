@@ -125,7 +125,7 @@ case class DetSum128(child: Expression)
     // compact: the scale-6 unscaled long (same HALF_UP rounding as the
     // (38,6) cast); evaluated only under `small`, so always in range.
     // For double children the per-row BigDecimal cast was the dominant
-    // Det-aggregate term (DecBench); DetDec.unscaled6 is the proven-
+    // Det-aggregate term; DetDec.unscaled6 is the proven-
     // equivalent all-float conversion (guide §4 — codegen'd static
     // call, no per-row allocation). Other child types keep the Cast:
     // integral/decimal casts are long-backed and already cheap, and

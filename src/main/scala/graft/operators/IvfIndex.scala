@@ -1450,8 +1450,7 @@ object IvfIndex {
     // checkpoint runs it exactly once, and the winner analysis, the
     // gather's pair join and the fallback all reuse the materialized
     // rows (never a second code scan, whatever shape is chosen)
-    val short0 = graft.core.Dbg.t("pq: shortlist plan")(
-      pqShortlist(pruned, panel, shortlist, serving, books))
+    val short0 = pqShortlist(pruned, panel, shortlist, serving, books)
     // the re-rank pairs each winner with its query ONCE: `queries` is
     // the unique (q_id, q_emb) batch, not the (possibly multi-probe)
     // per-cell panel — deduping the panel instead would plan a
@@ -1481,7 +1480,7 @@ object IvfIndex {
       knownBatchRows.exists(n => n * shortlist <= pushMax)
     val (short, pairsDf, winners, pushable) =
       if (smallBatch) {
-        val pairs = graft.core.Dbg.t("pq: shortlist collect")(short0.collect())
+        val pairs = short0.collect()
         val local = spark.createDataFrame(
           java.util.Arrays.asList(pairs: _*), short0.schema)
         val w = pairs.map(r => (r.get(2).asInstanceOf[Number].longValue(),
@@ -1639,8 +1638,7 @@ object IvfIndex {
           if (fullCellsFinal.isEmpty) None
           else Some(idx.filter(col("cell").isin(fullCellsFinal: _*))
             .select(col("vec_id").as("n_id"), col("embedding").as("n_emb")))
-        graft.core.Dbg.t("pq: gather+score plan")(
-          scoreOf((pushLegs ++ fullLeg).reduce(_ unionByName _)))
+        scoreOf((pushLegs ++ fullLeg).reduce(_ unionByName _))
       } else {
         // winner set past the driver-collect cap: broadcast-join
         // gather over the probed cells. At ≥cap distinct winners the
@@ -1649,6 +1647,6 @@ object IvfIndex {
         scoreOf(pruned.select(col("vec_id").as("n_id"),
           col("embedding").as("n_emb")))
       }
-    graft.core.Dbg.t("pq: rank plan")(rankTopK(scored, k))
+    rankTopK(scored, k)
   }
 }

@@ -513,8 +513,7 @@ object ApproxQueries {
       Some(embeddingDriftOracle)))
   }
 
-  /** x11's builder on an arbitrary events frame — shared with
-    * ScaleProbe: per-type 2^Δdays decayed counts against the frame's
+  /** x11's builder on an arbitrary events frame: per-type 2^Δdays decayed counts against the frame's
     * own max-ts (broadcast 1-row), pow absorbed by the Det decimal
     * sum. The streaming twin (StreamingOps.decayedCounts) is the same
     * aggregation against a FROZEN reference. */

@@ -104,8 +104,8 @@ object DedupQueries {
   def dupPagerank(s: SparkSession, dir: String, iters: Int = 3): DataFrame =
     dupPagerankOf(candidatePairs(s, dir), iters)
 
-  /** [[dupPagerank]] over an explicit candidate-pair frame — shared
-    * with ScaleProbe. `cutEvery` is the Bpe.scala lineage discipline:
+  /** [[dupPagerank]] over an explicit candidate-pair frame.
+    * `cutEvery` is the Bpe.scala lineage discipline:
     * past the gated iters=3 the per-round plan nesting would bloat
     * analysis long before the data hurts, so every `cutEvery`-th rank
     * frame is truncated to a materialized leaf (Lineage.cut) and the
@@ -167,9 +167,8 @@ object DedupQueries {
     sb.toString
   }
 
-  /** d17's builder over a signature frame (doc_id + mh0..mh{K-1}) —
-    * shared with ScaleProbe so the probe times exactly the gated
-    * sweep: for every banding of the K-perm signature, hot buckets
+  /** d17's builder over a signature frame (doc_id + mh0..mh{K-1}):
+    * for every banding of the K-perm signature, hot buckets
     * and candidate-pair work from bucket SIZES, never pairs. */
   def bandSweepOf(sig: DataFrame): DataFrame = {
     val keyed = Seq(1, 2, 4, 8).map { b =>
@@ -1018,7 +1017,7 @@ object DedupQueries {
     canonicalPickFromPairs(docs, candidateStarsOf(sigOf(docs)))
 
   /** [[canonicalPickOf]] with the candidate pairs injected — the
-    * d18-probe pattern: ScaleProbe feeds SALTED-signature pairs (edge
+    * d18-probe pattern: a caller can feed SALTED-signature pairs (edge
     * growth linear in copies by construction) so the pick's own
     * scaling is measured without the duplication-fixture's quadratic
     * pair artifact. */
@@ -1048,8 +1047,7 @@ object DedupQueries {
         when(col("rk") === 1, lit(1L)).otherwise(lit(0L)).as("keep"))
   }
 
-  /** d15's builder on an arbitrary documents frame — shared with
-    * ScaleProbe so the probe times exactly the gated plan. */
+  /** d15's builder on an arbitrary documents frame. */
   def containment(docs: DataFrame): DataFrame = {
     val sh = docs
       .select(col("doc_id"), explode(array_distinct(
@@ -1075,8 +1073,7 @@ object DedupQueries {
           lit(9L) * least(col("sa"), col("sb"))).as("is_dup"))
   }
 
-  /** d14's builder on an arbitrary documents frame — shared with
-    * ScaleProbe so the probe times exactly the gated plan. Window 4
+  /** d14's builder on an arbitrary documents frame. Window 4
     * over 5-gram hashes ⇒ guarantee length 8 tokens, expected
     * fingerprint density 2/(w+1) = 0.4 of the grams. */
   def winnowing(docs: DataFrame): DataFrame = {

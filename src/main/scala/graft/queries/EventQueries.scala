@@ -561,8 +561,7 @@ object EventQueries {
       |FROM wks JOIN fw USING (user_id)
       |GROUP BY cohort, wk""".stripMargin
 
-  /** e24's builder on an arbitrary events frame — shared with
-    * ScaleProbe: (user, week) distinct → user-keyed first-week min →
+  /** e24's builder on an arbitrary events frame: (user, week) distinct → user-keyed first-week min →
     * user-keyed join → (cohort, week) rollup, every exchange over a
     * frame that only SHRINKS. */
   def retentionCohortsOf(ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
@@ -608,8 +607,7 @@ object EventQueries {
       .filter(col("rk") <= k.toLong)
   }
 
-  /** e22's builder on an arbitrary events frame — shared with
-    * ScaleProbe: hourly (type, hour) counts scored against the
+  /** e22's builder on an arbitrary events frame: hourly (type, hour) counts scored against the
     * TRAILING 24 buckets' mean/stdev; windows run over the
     * (types × hours) frame, never events. */
   def rollingAnomaly(ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
@@ -716,8 +714,7 @@ object EventQueries {
       .select(col("user_id"), col("sw.start").as("s_start"),
         col("sw.end").as("s_end"), col("n_events"), col("sum_value"))
 
-  /** e13's builder on an arbitrary events frame — shared with
-    * ScaleProbe so the probe times exactly the gated plan. */
+  /** e13's builder on an arbitrary events frame. */
   def transitions(ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
@@ -735,7 +732,7 @@ object EventQueries {
   }
 
   /** e02's builder on an arbitrary events frame — shared with the Q
-    * gate, p04's composition, and ScaleProbe (r6fix mode).
+    * gate and p04's composition.
     * Sessionization: a >30 min silence starts a new session. Scale:
     * window partitioned by user_id — shuffles once on the session
     * key, no global ordering anywhere. */
@@ -786,9 +783,8 @@ object EventQueries {
       |     WHEN t_click > t_view THEN 2
       |     WHEN t_view IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)""".stripMargin
 
-  /** e06's builder on an arbitrary events frame — shared with
-    * ScaleProbe so the probe times exactly the gated plan (both
-    * frames, not just the cumulative sum). */
+  /** e06's builder on an arbitrary events frame (both frames, not
+    * just the cumulative sum). */
   def runningAggs(ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))

@@ -348,8 +348,8 @@ object PipelineQueries {
        |          / CAST(greatest(n_tokens, 1) AS DOUBLE), $MaxEpochs) AS epochs
        |      FROM w, t)""".stripMargin
 
-  /** p13's builder on an arbitrary (doc_id, source, text) frame —
-    * shared with ScaleProbe: calibration keep fused into the survivor
+  /** p13's builder on an arbitrary (doc_id, source, text) frame:
+    * calibration keep fused into the survivor
     * scan as a per-row bucket + broadcast-CDF join (never a doc_id
     * self-join), d19's canonical set as the one genuinely shuffling
     * join, then the budget mix over the survivors. */
@@ -401,8 +401,8 @@ object PipelineQueries {
     } finally prof.unpersist(blocking = false)
   }
 
-  /** p12's builder on an arbitrary (doc_id, source, text) frame —
-    * shared with ScaleProbe. Order key = the x10 multiplicative id
+  /** p12's builder on an arbitrary (doc_id, source, text) frame.
+    * Order key = the x10 multiplicative id
     * hash (exact integer arithmetic, mod-1e6 first so 64-bit ids
     * can't overflow ANSI), ties to doc_id. */
   def tokenBudgetMix(docs: org.apache.spark.sql.DataFrame,

@@ -1214,7 +1214,7 @@ object TextQueries {
       |FROM d JOIN s ON d.source = s.source""".stripMargin
 
   /** t32's builder on an arbitrary frame with an integer id column —
-    * shared with ScaleProbe and Sinks.saveShards' addressing. One
+    * shared with Sinks.saveShards' addressing. One
     * hash exchange on shard + per-shard window sort; no global sort. */
   def shardLayout(docs: DataFrame, nShards: Int): DataFrame =
     shardLayoutAll(docs.select(col("doc_id")), nShards)
@@ -1232,8 +1232,8 @@ object TextQueries {
       .drop("__h")
   }
 
-  /** t33's builder on an arbitrary (doc_id, source) frame — shared
-    * with ScaleProbe. One per-source window over the data; the source
+  /** t33's builder on an arbitrary (doc_id, source) frame. One
+    * per-source window over the data; the source
     * index and count sides are bounded-cardinality broadcasts. */
   def sourceInterleave(docsIn: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1252,8 +1252,7 @@ object TextQueries {
         (col("pos") * col("n_src") + col("sidx")).as("rank"))
   }
 
-  /** t20's builder on an arbitrary (doc_id, lang, text) frame — shared
-    * with ScaleProbe so the probe times exactly the gated plan. */
+  /** t20's builder on an arbitrary (doc_id, lang, text) frame. */
   def importanceWeights(docsIn: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val words = docsIn.select(col("doc_id"), col("lang"),
       explode(tokenHashes(col("text"))).as("w"))
@@ -1279,8 +1278,7 @@ object TextQueries {
           count(lit(1)).cast(DoubleType)).as("importance"))
   }
 
-  /** t24's builder on an arbitrary (doc_id, text) frame — shared with
-    * ScaleProbe so the probe times exactly the gated plan. Totals come
+  /** t24's builder on an arbitrary (doc_id, text) frame. Totals come
     * from the AGGREGATED tables, not the token stream — n_tok/n_big
     * consume the uni/bigram exchanges (vocab-sized) instead of
     * re-tokenizing the corpus per total (t21's lesson). */
@@ -1337,8 +1335,7 @@ object TextQueries {
       .otherwise(raw)
   }
 
-  /** t21's builder on an arbitrary (doc_id, text) frame — shared with
-    * ScaleProbe so the probe times exactly the gated plan.
+  /** t21's builder on an arbitrary (doc_id, text) frame.
     *
     * Structured so EVERY downstream consumer (corpus stats nd, df,
     * the scored postings) reads the ONE per-doc aggregation exchange:
@@ -1572,8 +1569,7 @@ object TextQueries {
     s"""SELECT $selectList FROM documents
        |WHERE ((doc_id % 1000000) * 2654435761) % $mod < $keep""".stripMargin
 
-  /** t35's builder — shared with ScaleProbe so the probe times
-    * exactly the gated plan. The four metrics come from ONE native
+  /** t35's builder. The four metrics come from ONE native
     * code-point pass (CodeSignalsExpr); the four-traversal HOF form
     * is kept as [[codeSignalsHof]] with bit-parity pinned in
     * TextFunctionsSpec. */
@@ -1672,8 +1668,7 @@ object TextQueries {
        |ELSE 'test' END AS split
        |FROM documents""".stripMargin
 
-  /** t27's builder on an arbitrary documents frame — shared with
-    * ScaleProbe so the probe times exactly the gated plan. One explode
+  /** t27's builder on an arbitrary documents frame. One explode
     * + one keyed agg for the line rules; the page-level substring
     * vetoes evaluate on the un-exploded side. */
   /** Word n-grams of a token array as space-joined strings — empty
@@ -1685,9 +1680,6 @@ object TextQueries {
         i => concat_ws(" ", (0 until n).map(j => element_at(w, i + j)): _*)))
       .otherwise(array().cast(ArrayType(StringType)))
 
-  /** t29's builder over an arbitrary documents frame — shared with
-    * ScaleProbe so the probe times exactly the gated plan. */
-  /** t30's builder — shared with ScaleProbe. */
   /** t02's quality score as a COLUMN over (text, text_profile(text)) —
     * shared by the t02 gate and fused compositions (p05's single-scan
     * row branch): per-row signals compose in one projection instead of
@@ -1881,7 +1873,7 @@ object TextQueries {
   }
 
   /** t28's rule bundle over an arbitrary documents frame — the fixture
-    * entry point for GopherRulesSpec's boundary cases and ScaleProbe. */
+    * entry point for GopherRulesSpec's boundary cases. */
   def gopherRules(docsIn: DataFrame): DataFrame = {
     val docs = docsIn.select(col("doc_id"), col("text"))
     val nW = greatest(col("n_words"), lit(1L)).cast(DoubleType)
@@ -2002,8 +1994,7 @@ object TextQueries {
        |FROM ($docToks))""".stripMargin
   }
 
-  /** t37's builder on an arbitrary (doc_id, text) frame — shared with
-    * ScaleProbe. Gram-keyed count + join back through one explicitly
+  /** t37's builder on an arbitrary (doc_id, text) frame. Gram-keyed count + join back through one explicitly
     * repartitioned explode (ReusedExchange, pinned); never doc pairs. */
   def shingleNovelty(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val sh = docs
@@ -2038,8 +2029,7 @@ object TextQueries {
           max(col("n")).cast(DoubleType)).as("entropy"))
   }
 
-  /** t40's builder on an arbitrary (doc_id, text) frame — shared with
-    * ScaleProbe: per-word VMR of per-doc counts (zeros via the exact
+  /** t40's builder on an arbitrary (doc_id, text) frame: per-word VMR of per-doc counts (zeros via the exact
     * moment identity), df ≥ 5, top-30 TakeOrdered. */
   def wordDispersion(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))

@@ -180,8 +180,7 @@ object VectorQueries {
   def centroidRows(s: SparkSession, dir: String): DataFrame =
     centroidRowsOf(Tables(s, dir, "embeddings"))
 
-  /** [[centroidRows]] on an arbitrary (label, embedding) frame —
-    * shared with ScaleProbe. */
+  /** [[centroidRows]] on an arbitrary (label, embedding) frame. */
   def centroidRowsOf(e: DataFrame): DataFrame =
     e.select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
       // BIGINT pos: the oracle's unnest(range(...)) is BIGINT-typed
@@ -858,7 +857,7 @@ object VectorQueries {
 
   /** v39's builder — embedding OOD/outlier scoring on an arbitrary
     * (vec_id, embedding) frame, shared with the `outliers` dialect
-    * statement and ScaleProbe: squared distance to the NEAREST
+    * statement: squared distance to the NEAREST
     * k-means centroid (the v06 fit), farthest `topN` vectors. The
     * fit collects k·d doubles once; the corpus then sees ONE
     * codegen'd narrow pass (nearest_centroid + centroid_dist, both
@@ -901,7 +900,7 @@ object VectorQueries {
       .select(col("vec_id"), col("embedding"), col("label")), probes, k)
 
   /** [[nprobeSweep]] on an arbitrary (vec_id, embedding, label)
-    * frame — shared with ScaleProbe. The exact-truth leg is the
+    * frame. The exact-truth leg is the
     * bruteKnn construction inlined on the same frame. */
   def nprobeSweepOf(el: DataFrame,
       probes: Seq[Int] = Seq(1, 2, 3), k: Int = 5): DataFrame = {
@@ -2932,8 +2931,7 @@ object VectorQueries {
        |WHERE rank <= $k""".stripMargin
   }
 
-  /** v26's builder on an arbitrary (vec_id, embedding) frame — shared
-    * with ScaleProbe: Hamming top-k over the packed sign-bit codes
+  /** v26's builder on an arbitrary (vec_id, embedding) frame: Hamming top-k over the packed sign-bit codes
     * for the vec_id < 5 query panel. The corpus side scans 16 bytes
     * per vector; distance is two XOR+popcount ops; WindowGroupLimit
     * prunes to k per query pre-shuffle. */
@@ -3148,9 +3146,9 @@ object VectorQueries {
        |         ELSE CAST(0 AS BIGINT) END)),
        |  (ba, bb) -> ba * 2 + bb)""".stripMargin
 
-  /** v18's builder on an arbitrary (vec_id, embedding) frame — shared
-    * with ScaleProbe; queries stay the 5 base-copy ids, so the probe
-    * holds the query count fixed while the candidate side scales. */
+  /** v18's builder on an arbitrary (vec_id, embedding) frame; queries
+    * stay the 5 ids vec_id < 5, so on a scaled corpus the query count
+    * holds fixed while the candidate side grows. */
   def mipsTopk(e: DataFrame): DataFrame = {
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -3165,8 +3163,7 @@ object VectorQueries {
     topKByMetric(scores, "ip", 10, asc = false)
   }
 
-  /** v17's builder on an arbitrary (vec_id, embedding) frame — shared
-    * with ScaleProbe so the probe times exactly the gated plan.
+  /** v17's builder on an arbitrary (vec_id, embedding) frame.
     * Two-step select: the RP_OUT element_at reads reference ONE
     * evaluation of the projection loop (CollapseProject keeps
     * multiply-referenced non-cheap aliases un-inlined). */
@@ -3221,8 +3218,7 @@ object VectorQueries {
       |                        AS BIGINT)) END AS code
       |  FROM dims JOIN stats USING (pos))""".stripMargin
 
-  /** v14's builder on an arbitrary (vec_id, embedding) frame — shared
-    * with ScaleProbe so the probe times exactly the gated plan. */
+  /** v14's builder on an arbitrary (vec_id, embedding) frame. */
   def sqCodes(e: DataFrame): DataFrame = {
     val err = (col("x") - col("deq")) * (col("x") - col("deq"))
     sqEnc(e)
@@ -3232,8 +3228,7 @@ object VectorQueries {
           count(lit(1)).cast(DoubleType)).as("mse"))
   }
 
-  /** v15's builder on an arbitrary (vec_id, embedding) frame — shared
-    * with ScaleProbe so the probe times exactly the gated plan. */
+  /** v15's builder on an arbitrary (vec_id, embedding) frame. */
   def embedNormalize(e: DataFrame): DataFrame = {
     val dims = e
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "xf")))
@@ -3428,7 +3423,7 @@ object VectorQueries {
 
   /** v33's builder: residual-ADC shortlist over [[ivfPqAdcScores]] →
     * broadcast gather of raw floats for the ~shortlist·q rows →
-    * exact-cosine re-rank to top-k. Shared with ScaleProbe. */
+    * exact-cosine re-rank to top-k. */
   def ivfPqRerank(e: DataFrame, shortlist: Int, k: Int): DataFrame = {
     val short = topKByMetric(ivfPqAdcScores(e), "adc", shortlist, asc = true)
       .select(col("q_id"), col("n_id"))

@@ -575,8 +575,7 @@ final class Planner(resolve: (String, Boolean) => DataFrame,
             q.select(col("q_id"), col("q_emb"),
               graft.functions.VectorExprs.nearest_cells(
                 col("q_emb"), means, d, st.probe.toInt).as("cells"))
-        val rows = graft.core.Dbg.t("serve: routing collect")(
-          cellsDf.limit((ServeMaxBatch + 1L).toInt).collect())
+        val rows = cellsDf.limit((ServeMaxBatch + 1L).toInt).collect()
         if (rows.length > ServeMaxBatch)
           throw PlanError(s"serve: query batch has more than $ServeMaxBatch " +
             s"rows (cap $ServeMaxBatch): serving batches must be " +
