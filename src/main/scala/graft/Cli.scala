@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
+import graft.core.Sessions
 import graft.sql.{GraftSession, Parser, Planner}
 import graft.sources.Sinks
 
@@ -91,16 +92,7 @@ object Cli {
       if (filled <= 0) sys.error("no query given (-c or stdin)") else new String(buf, 0, filled)
     }
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start()
 
     val statements = Parser.splitStatements(q)
     val results = runWithPrompt(password,

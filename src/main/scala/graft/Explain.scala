@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
+import graft.core.Sessions
 import graft.queries.Registry
 
 /** Plan inspector: prints the formatted physical plan of the named
@@ -10,15 +9,7 @@ import graft.queries.Registry
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.start("ERROR")
     val names = if (args.nonEmpty) args.toSeq else Registry.benchQueries.map(_.name)
     names.foreach { n =>
       println(s"\n═══ $n ═══")

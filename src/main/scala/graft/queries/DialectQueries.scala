@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.core.Sessions.workPath
 import graft.sql.GraftSession
 
 /** End-to-end dialect coverage: each entry is actual dialect TEXT
@@ -274,7 +275,7 @@ object DialectQueries {
     Q("s19_dialect_bucketed_join",
       (s, dir) => {
         val tag = java.lang.Integer.toHexString(dir.hashCode)
-        val wh = s"/tmp/graft_bucketed_$tag"
+        val wh = workPath(s, "bucketed", dir)
         val li = s"li_bk_$tag"; val ord = s"o_bk_$tag"
         graft.core.Bucketing.writeBucketed(
           graft.core.Tables(s, dir, "lineitem").select("l_orderkey", "l_suppkey"),
@@ -662,16 +663,16 @@ object DialectQueries {
 
     // The persisted-index lifecycle on the dialect surface — build,
     // serve, repair all run from the console against the same
-    // cell-partitioned layout the v45-v47 gates pin. Paths are
-    // SF-tagged so the three fixtures never collide.
+    // cell-partitioned layout the v45-v47 gates pin. Paths live in
+    // the application's work dir (Sessions.workPath), tagged by
+    // fixture dir, so neither two fixtures nor two processes collide.
     //
     // `index … into '<path>'`: cell-partitioned write + per-cell
     // build report, gated against the unrolled-Lloyd assignment's
     // GROUP BY cell.
     Q("s57_dialect_index",
       (s, dir) => GraftSession(s, dir).sql(
-        s"index vec_id, embedding from embeddings into " +
-          s"'/tmp/graft_s57_${java.lang.Integer.toHexString(dir.hashCode)}'"),
+        s"index vec_id, embedding from embeddings into '${workPath(s, "s57", dir)}'"),
       Some {
         val last = graft.queries.VectorQueries.KMEANS_ITERS
         s"""WITH ${VectorQueries.kmeansCtesSql()}
@@ -686,7 +687,7 @@ object DialectQueries {
     Q("s58_dialect_serve",
       (s, dir) => {
         val g = GraftSession(s, dir)
-        val p = s"/tmp/graft_s58_${java.lang.Integer.toHexString(dir.hashCode)}"
+        val p = workPath(s, "s58", dir)
         g.sql(s"index vec_id, embedding from embeddings into '$p'")
         g.sql(s"serve vec_id, embedding from '$p' top 5")
       },
@@ -698,7 +699,7 @@ object DialectQueries {
     Q("s59_dialect_repair_using",
       (s, dir) => {
         val g = GraftSession(s, dir)
-        val p = s"/tmp/graft_s59_${java.lang.Integer.toHexString(dir.hashCode)}"
+        val p = workPath(s, "s59", dir)
         g.sql(s"index vec_id, embedding from embeddings into '$p'")
         g.sql(s"repair vec_id, embedding from embeddings using '$p'")
       },
@@ -716,9 +717,8 @@ object DialectQueries {
       (s, dir) => {
         import org.apache.spark.sql.functions._
         val g = GraftSession(s, dir)
-        val tag = java.lang.Integer.toHexString(dir.hashCode)
-        val ip = s"/tmp/graft_s60_idx_$tag"
-        val qp = s"/tmp/graft_s60_q_$tag"
+        val ip = workPath(s, "s60_idx", dir)
+        val qp = workPath(s, "s60_q", dir)
         // the query-batch fixture is independent of the index build:
         // write it on a second driver thread so its jobs back-fill the
         // build's idle capacity instead of serializing after it
@@ -747,9 +747,8 @@ object DialectQueries {
       (s, dir) => {
         import org.apache.spark.sql.functions._
         val g = GraftSession(s, dir)
-        val tag = java.lang.Integer.toHexString(dir.hashCode)
-        val ip = s"/tmp/graft_s61_idx_$tag"
-        val qp = s"/tmp/graft_s61_q_$tag"
+        val ip = workPath(s, "s61_idx", dir)
+        val qp = workPath(s, "s61_q", dir)
         val fixture = concurrently {
           graft.core.Tables(s, dir, "embeddings")
             .filter(col("vec_id") % 11 === 3)
@@ -772,9 +771,8 @@ object DialectQueries {
       (s, dir) => {
         import org.apache.spark.sql.functions._
         val g = GraftSession(s, dir)
-        val tag = java.lang.Integer.toHexString(dir.hashCode)
-        val ip = s"/tmp/graft_s62_idx_$tag"
-        val ap = s"/tmp/graft_s62_arr_$tag"
+        val ip = workPath(s, "s62_idx", dir)
+        val ap = workPath(s, "s62_arr", dir)
         g.sql(s"index vec_id, embedding from embeddings into '$ip'")
         graft.core.Tables(s, dir, "embeddings")
           .filter(col("vec_id") % 7 === 3)
@@ -796,10 +794,9 @@ object DialectQueries {
       (s, dir) => {
         import org.apache.spark.sql.functions._
         val g = GraftSession(s, dir)
-        val tag = java.lang.Integer.toHexString(dir.hashCode)
-        val ip = s"/tmp/graft_s63_idx_$tag"
-        val a1 = s"/tmp/graft_s63_fresh_$tag"
-        val a2 = s"/tmp/graft_s63_rein_$tag"
+        val ip = workPath(s, "s63_idx", dir)
+        val a1 = workPath(s, "s63_fresh", dir)
+        val a2 = workPath(s, "s63_rein", dir)
         g.sql(s"index vec_id, embedding from embeddings into '$ip'")
         val e = graft.core.Tables(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
@@ -826,9 +823,8 @@ object DialectQueries {
       (s, dir) => {
         import org.apache.spark.sql.functions._
         val g = GraftSession(s, dir)
-        val tag = java.lang.Integer.toHexString(dir.hashCode)
-        val ip = s"/tmp/graft_s64_idx_$tag"
-        val qp = s"/tmp/graft_s64_q_$tag"
+        val ip = workPath(s, "s64_idx", dir)
+        val qp = workPath(s, "s64_q", dir)
         val fixture = concurrently {
           graft.core.Tables(s, dir, "embeddings")
             .filter(col("vec_id") % 11 === 3)
@@ -854,9 +850,8 @@ object DialectQueries {
       (s, dir) => {
         import org.apache.spark.sql.functions._
         val g = GraftSession(s, dir)
-        val tag = java.lang.Integer.toHexString(dir.hashCode)
-        val ip = s"/tmp/graft_s65_idx_$tag"
-        val qp = s"/tmp/graft_s65_q_$tag"
+        val ip = workPath(s, "s65_idx", dir)
+        val qp = workPath(s, "s65_q", dir)
         val fixture = concurrently {
           graft.core.Tables(s, dir, "embeddings")
             .filter(col("vec_id") % 11 === 3)
@@ -873,10 +868,11 @@ object DialectQueries {
 
     // Prepared-index serving — the LATENCY path the pushed gather
     // optimizes, benched without the build: the index and query batch
-    // are materialized ONCE per fixture (build-if-absent, keyed by dir
-    // + layout round so a format change can never serve a stale
-    // layout) and each bench pass times ONLY the serve statement —
-    // sidecar-cached routing, ADC shortlist, bounded re-rank gather.
+    // are materialized ONCE per fixture and application (build-if-
+    // absent in the work dir, which the application's stop deletes,
+    // so no older writer's layout is ever served) and each bench pass
+    // times ONLY the serve statement — sidecar-cached routing, ADC
+    // shortlist, bounded re-rank gather.
     // s60/s64 are dominated by their per-pass `index` build; this is
     // the number a serving loop actually sees, tracked round-over-
     // round in BENCH (VERDICT r13 ask #7). The deterministic build
@@ -886,12 +882,8 @@ object DialectQueries {
       (s, dir) => {
         import org.apache.spark.sql.functions._
         val g = GraftSession(s, dir)
-        val tag = java.lang.Integer.toHexString(dir.hashCode)
-        // r16: layout-round bump — the build now sizes layout files
-        // from the corpus (IvfIndex.LayoutRowsPerTask), so the
-        // prebuilt fixture must be laid out by the current writer
-        val ip = s"/tmp/graft_s66_idx_r16_$tag"
-        val qp = s"/tmp/graft_s66_q_r16_$tag"
+        val ip = workPath(s, "s66_idx", dir)
+        val qp = workPath(s, "s66_q", dir)
         // both fixtures must exist — a run crashed between the index
         // build and the batch write must not wedge every later run on
         // the half-present pair

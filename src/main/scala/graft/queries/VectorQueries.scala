@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{Det, Tables}
+import graft.core.Sessions.workPath
 import graft.queries.{OracleSql => O}
 
 /** Similarity search over the `embeddings` table (64-dim float
@@ -2408,8 +2409,7 @@ object VectorQueries {
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
-        val tag = java.lang.Integer.toHexString(dir.hashCode)
-        val path = s"/tmp/graft_ivf_part_$tag"
+        val path = workPath(s, "ivf_part", dir)
         graft.operators.IvfIndex.build(e, path)
         val idx = graft.operators.IvfIndex.read(s, path)
         val qs = idx.filter(col("vec_id") < 5)
@@ -2431,8 +2431,7 @@ object VectorQueries {
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
-        val tag = java.lang.Integer.toHexString(dir.hashCode)
-        val path = s"/tmp/graft_ivf_rep_$tag"
+        val path = workPath(s, "ivf_rep", dir)
         val old = graft.operators.IvfIndex.build(e, path)
         val refreshed = refreshedCenters(
           graft.operators.IvfIndex.read(s, path))
@@ -2452,8 +2451,7 @@ object VectorQueries {
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
-        val tag = java.lang.Integer.toHexString(dir.hashCode)
-        val path = s"/tmp/graft_ivf_up_$tag"
+        val path = workPath(s, "ivf_up", dir)
         val centers = graft.operators.IvfIndex.build(e, path)
         val arrivals = e.filter(col("vec_id") % 7 === 3)
           .select((col("vec_id") + lit(1000000L)).as("vec_id"),
@@ -2480,8 +2478,7 @@ object VectorQueries {
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
-        val tag = java.lang.Integer.toHexString(dir.hashCode)
-        val path = s"/tmp/graft_ivf_sup_$tag"
+        val path = workPath(s, "ivf_sup", dir)
         val centers = graft.operators.IvfIndex.build(e, path)
         val assigned = kmeansAssign(
           graft.streaming.StreamingOps.readEmbeddings(s, dir)
@@ -2519,8 +2516,7 @@ object VectorQueries {
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
-        val tag = java.lang.Integer.toHexString(dir.hashCode)
-        val path = s"/tmp/graft_ivf_app_$tag"
+        val path = workPath(s, "ivf_app", dir)
         val centers = graft.operators.IvfIndex.build(e, path)
         val fresh = e.filter(col("vec_id") % 7 === 3)
           .select((col("vec_id") + lit(1000000L)).as("vec_id"),
@@ -2550,8 +2546,7 @@ object VectorQueries {
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
-        val tag = java.lang.Integer.toHexString(dir.hashCode)
-        val path = s"/tmp/graft_ivf_sap_$tag"
+        val path = workPath(s, "ivf_sap", dir)
         val centers = graft.operators.IvfIndex.build(e, path)
         val assigned = kmeansAssign(
           graft.streaming.StreamingOps.readEmbeddings(s, dir)
@@ -2593,8 +2588,7 @@ object VectorQueries {
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
-        val tag = java.lang.Integer.toHexString(dir.hashCode)
-        val path = s"/tmp/graft_ivf_pqs_$tag"
+        val path = workPath(s, "ivf_pqs", dir)
         graft.operators.IvfIndex.build(e, path, pq = true)
         val side = graft.operators.IvfIndex.readSidecar(s, path).get
         val q = e.filter(col("vec_id") % 11 === 3)
@@ -2622,11 +2616,10 @@ object VectorQueries {
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
-        val tag = java.lang.Integer.toHexString(dir.hashCode)
-        val path = s"/tmp/graft_ivf_pqss_$tag"
+        val path = workPath(s, "ivf_pqss", dir)
         graft.operators.IvfIndex.build(e, path, pq = true)
-        val qdir = s"/tmp/graft_ivf_pqss_q_$tag"
-        val out = s"/tmp/graft_ivf_pqss_out_$tag"
+        val qdir = workPath(s, "ivf_pqss_q", dir)
+        val out = workPath(s, "ivf_pqss_out", dir)
         def wipe(p: String): Unit = {
           val d = java.nio.file.Paths.get(p)
           if (java.nio.file.Files.isDirectory(d)) {

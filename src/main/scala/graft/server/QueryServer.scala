@@ -9,6 +9,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Sessions
 import graft.sources.Sinks
 import graft.sql.{GraftSession, Parser, Planner}
 
@@ -441,14 +442,7 @@ object ServerMain {
     val pos = args.filterNot(flags)
     val port = pos.headOption.map(_.toInt).getOrElse(8060)
     val dir = pos.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start()
     val s = new QueryServer(GraftSession(spark, dir), port, bindAll)
     val actual = s.start()
     System.err.println(s"graft query server listening on :$actual " +

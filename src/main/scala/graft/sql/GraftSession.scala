@@ -26,6 +26,9 @@ final class GraftSession(val spark: SparkSession, defaultDir: Option[String] = N
   // themselves — lower to bound executor memory, or higher — made a
   // deliberate call this shared-session façade must not silently
   // revert; a small explicit value just gets the trade-off logged.
+  // Sessions built by graft.core.Sessions already carry 200k, so this
+  // write acts only on sessions built outside the engine: embedding
+  // applications and the perfbench harness.
   locally {
     val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     val cur = spark.conf.get(key, "128").toLong

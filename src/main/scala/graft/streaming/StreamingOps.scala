@@ -19,20 +19,22 @@ import org.apache.spark.sql.types._
   */
 object StreamingOps {
 
-  /** Streaming read of the events table in a fixture directory (the
-    * file source needs a directory — filter to the events file). The
-    * raw footer schema feeds readStream; Tables.normalizeNanoTs then
-    * yields a proper TimestampType `ts` whatever the writer encoded. */
-  /** Streaming read of one fixture table: footer-derived schema +
-    * a glob pinned to that table's file — the shared scaffold of the
-    * per-table readers below. */
+  /** Streaming read of one fixture table with its footer-derived
+    * schema — the shared scaffold of the per-table readers below. A
+    * directory table (`<table>.parquet/part-*`) streams from its own
+    * path; the file source needs a directory, so a single-file table
+    * streams from the fixture dir under a glob pinned to its file. */
   private def readTable(spark: SparkSession, dir: String, table: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/$table.parquet").schema
-    spark.readStream.schema(raw)
-      .option("pathGlobFilter", s"$table.parquet")
-      .parquet(dir)
+    val path = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
+    val raw = spark.read.parquet(path.toString).schema
+    val stream = spark.readStream.schema(raw)
+    if (path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(path).isDirectory) stream.parquet(path.toString)
+    else stream.option("pathGlobFilter", s"$table.parquet").parquet(dir)
   }
 
+  /** The events table as a stream; Tables.normalizeNanoTs yields a
+    * proper TimestampType `ts` whatever the writer encoded. */
   def readEvents(spark: SparkSession, dir: String): DataFrame =
     graft.core.Tables.normalizeNanoTs(readTable(spark, dir, "events"))
 

@@ -2,11 +2,10 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.core.Tables
+import graft.core.{Sessions, Tables}
 import graft.operators.QualityClassifier
 
 /** Dev tool: retrain the t25 quality classifier on EVERY given
@@ -19,8 +18,8 @@ import graft.operators.QualityClassifier
   * no t25 exception; the gate fails loudly if training ever drifts
   * from a snapshot.
   *
-  * MUST replicate Verify's session config exactly (local[cpus],
-  * shuffle.partitions=cpus, cpus from SPARK_GRAFT_CPUS else 4):
+  * This tool and Verify both build their session through
+  * [[graft.core.Sessions]], so run both with the same core count:
   * L-BFGS's treeAggregate sums partition partials in partition order,
   * so a different partitioning could change coefficients in the last
   * ulps — and the frozen snapshots must match what Verify retrains.
@@ -34,16 +33,7 @@ object FreezeQualityWeights {
     require(args.length >= 2, "usage: <sfDir>... <outFile>")
     val outFile = args.last
     val dirs = args.dropRight(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start()
 
     val snaps = dirs.map { sfDir =>
       val docs = Tables(spark, sfDir, "documents")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Registry-wide physical-plan lint: builds EVERY gated query's plan
   * at the given fixture and flags the scale anti-patterns —
@@ -37,14 +37,7 @@ object PlanLint {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outJson = args.lift(1)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.start("ERROR")
 
     // A SinglePartition exchange whose CHILD is an aggregate is the
     // universal global-agg shape: the exchange moves one PARTIAL row

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
 
-import graft.core.Tables
+import graft.core.{Sessions, Tables}
 
 /** Scaled fixture writer: `copies` key-shifted copies of every
   * [[graft.core.Tables.all]] table in `srcDir`, written as
@@ -71,13 +71,7 @@ object ScaleDir {
       sys.exit(2)
     }
     val Array(srcDir, copies, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start()
     try write(spark, srcDir, copies.toInt, outDir)
     finally spark.stop()
   }

@@ -478,7 +478,7 @@ class StreamingSpec extends SparkSpec {
     // the micro-batches, its refresh means equal a fresh batch scan of
     // the index bit-for-bit (each foreachBatch upsert recomputes the
     // touched cells' means), so monitoring/serving never re-aggregate
-    val sPath = s"/tmp/graft_ivf_sup_${java.lang.Integer.toHexString(sf0001.hashCode)}"
+    val sPath = graft.core.Sessions.workPath(spark, "ivf_sup", sf0001)
     val side = IvfIndex.readSidecar(spark, sPath).get
     assert(!side.pendingAppends && side.staleCells.isEmpty)
     val (means, _) = VectorQueries.refreshedCentersWithCounts(

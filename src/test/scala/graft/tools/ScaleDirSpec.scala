@@ -103,4 +103,12 @@ class ScaleDirSpec extends SparkSpec with BeforeAndAfterAll {
     assert(want.nonEmpty)
     assert(sorted(Registry.queries("q16_join_chain_agg")(spark, one)) == want)
   }
+
+  test("copies=1: a streaming gate reads a directory table's rows") {
+    def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    val gate = Registry.queries("e16_session_stream")
+    val want = sorted(gate(spark, sf0001))
+    assert(want.nonEmpty)
+    assert(sorted(gate(spark, one)) == want)
+  }
 }
