@@ -12,7 +12,7 @@ object Explain {
     val spark = Sessions.start("ERROR")
     val names = if (args.nonEmpty) args.toSeq else Registry.benchQueries.map(_.name)
     names.foreach { n =>
-      println(s"\n═══ $n ═══")
+      println(s"\n=== $n ===")
       Registry.queries(n)(spark, sfDir).explain("formatted")
     }
     spark.stop()

@@ -84,18 +84,9 @@ object RowNumbers {
     * phase (by which point the shuffle files exist), so its lifetime
     * is one call. Every internal call site feeds a narrow metadata
     * projection (ids + one long), so the cached bytes are small by
-    * design; `spark.graft.rownumbers.cacheInput=false` restores the
-    * recompute shape for callers whose upstream is a bare scan. */
-  private def cacheForRange(df: DataFrame): (DataFrame, () => Unit) = {
-    if (!cacheInput(df)) (df, () => ())
-    else {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (p, () => { p.unpersist(blocking = false); () })
-    }
-  }
-
-  private def cacheInput(df: DataFrame): Boolean =
-    df.sparkSession.conf.get("spark.graft.rownumbers.cacheInput", "true").toBoolean
+    * design. */
+  private def cacheForRange(df: DataFrame): DataFrame =
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Attach `name` = step · (1-based row index in natural scan order —
     * (partition, offset) order, matching the reference's single-
@@ -107,15 +98,12 @@ object RowNumbers {
     // persist across zipWithIndex's two passes (the eager count job in
     // its constructor and the later numbering pass) — same reasoning
     // as scanCumsum: without it the child's post-shuffle work (sorts,
-    // projections) executes twice. Gated like cacheForRange.
-    val on = cacheInput(df)
-    val cached =
-      if (on) df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df.rdd
+    // projections) executes twice
+    val cached = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val rdd = cached.zipWithIndex().map { case (r, i) =>
       Row.fromSeq(r.toSeq :+ (i + 1) * step)
     }
-    if (on) unpersistAfterFirstUse(spark, cached, rdd)
+    unpersistAfterFirstUse(spark, cached, rdd)
     spark.createDataFrame(rdd, schema)
   }
 
@@ -126,10 +114,10 @@ object RowNumbers {
       step: Double = 1.0, numPartitions: Option[Int] = None): DataFrame = {
     val parts = numPartitions.getOrElse(
       df.sparkSession.sessionState.conf.numShufflePartitions)
-    val (src, release) = cacheForRange(df)
+    val src = cacheForRange(df)
     try scanOrder(src.repartitionByRange(parts, order: _*)
       .sortWithinPartitions(order: _*), name, step)
-    finally release() // scanOrder's zipWithIndex count job already ran
+    finally src.unpersist(blocking = false) // scanOrder's zipWithIndex count job already ran
   }
 
   /** Attach `name` = inclusive running sum of LongType column `value`
@@ -167,10 +155,10 @@ object RowNumbers {
       name: String = "cum", numPartitions: Option[Int] = None): DataFrame = {
     val parts = numPartitions.getOrElse(
       df.sparkSession.sessionState.conf.numShufflePartitions)
-    val (src, release) = cacheForRange(df)
+    val src = cacheForRange(df)
     try scanCumsum(src.repartitionByRange(parts, order: _*)
       .sortWithinPartitions(order: _*), value, name)
-    finally release() // scanCumsum's offset collect already ran
+    finally src.unpersist(blocking = false) // scanCumsum's offset collect already ran
   }
 
   /** Per-KEY 1-based row numbering (`row_number() OVER (PARTITION BY
@@ -191,7 +179,7 @@ object RowNumbers {
     val parts = numPartitions.getOrElse(
       spark.sessionState.conf.numShufflePartitions)
     val sortCols = key.map(org.apache.spark.sql.functions.col) ++ order
-    val (src, release) = cacheForRange(df)
+    val src = cacheForRange(df)
     val keyed = src.repartitionByRange(parts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
     val kIdx = key.map(keyed.schema.fieldIndex)
@@ -211,7 +199,7 @@ object RowNumbers {
         if (cur != null) buf += ((cur, c))
         Iterator((i, buf.toSeq))
       }.collect()
-      finally release() // the collect ran the shuffle map off the cache
+      finally src.unpersist(blocking = false) // the collect ran the shuffle map off the cache
     // per (partition, key) start offset = rows of that key in EARLIER partitions
     val seen = scala.collection.mutable.Map.empty[Seq[Any], Long]
     val offsets = runs.sortBy(_._1).flatMap { case (i, ks) =>
@@ -254,7 +242,7 @@ object RowNumbers {
     val parts = numPartitions.getOrElse(
       spark.sessionState.conf.numShufflePartitions)
     val sortCols = key.map(org.apache.spark.sql.functions.col) ++ order
-    val (src, release) = cacheForRange(df)
+    val src = cacheForRange(df)
     val keyed = src.repartitionByRange(parts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
     val kIdx = key.map(keyed.schema.fieldIndex)
@@ -281,7 +269,7 @@ object RowNumbers {
         if (cur != null) buf += ((cur, s))
         Iterator((i, buf.toSeq))
       }.collect()
-      finally release() // the collect ran the shuffle map off the cache
+      finally src.unpersist(blocking = false) // the collect ran the shuffle map off the cache
     val seen = scala.collection.mutable.Map.empty[Seq[Any], Long]
     val offsets = runs.sortBy(_._1).flatMap { case (i, ks) =>
       ks.map { case (k, s) =>

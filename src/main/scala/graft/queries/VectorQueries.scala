@@ -747,9 +747,6 @@ object VectorQueries {
   def dirtyCells(oldC: Seq[(Int, Array[Double])],
       newC: Seq[(Int, Array[Double])], thresh: Double): Seq[Long] = {
     val newByCell = newC.toMap
-    if (sys.env.contains("GRAFT_DEBUG_REPAIR"))
-      oldC.foreach { case (cell, oc) => newByCell.get(cell).foreach(nc =>
-        println(s"[repair] cell=$cell move=${sqDistArr(oc, nc)}")) }
     oldC.collect {
       case (cell, oc) if !newByCell.contains(cell) ||
         sqDistArr(oc, newByCell(cell)) > thresh => cell.toLong

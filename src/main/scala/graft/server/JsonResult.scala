@@ -29,7 +29,7 @@ object JsonResult {
       df.schema.fields.map(_.dataType.typeName).toSeq, keep, clipped, query)
   }
 
-  private[server] def esc(s: String): String = s.flatMap {
+  private[graft] def esc(s: String): String = s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

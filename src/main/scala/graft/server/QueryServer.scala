@@ -6,12 +6,12 @@ import java.util.concurrent.{ExecutorService, Executors}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 import graft.core.Sessions
 import graft.sources.Sinks
 import graft.sql.{GraftSession, Parser, Planner}
+import graft.trace.JobListener
 
 /** Minimal HTTP query API (reference server.go:91-157): POST /query/
   * with JSON {"query": "..."} runs `;`-separated dialect statements and
@@ -32,11 +32,10 @@ final class QueryServer(graft: GraftSession, port: Int,
 
   /** Live progress for the server's job group (the reference streams
     * per-query progress over its websocket, server.go TimedNotifier;
-    * this is the polling analog — GET /progress/). Tracked via a
-    * SparkListener: jobs in flight, task counts for the current query. */
-  private val activeJobs = new AtomicInteger(0)
-  private val totalTasks = new AtomicLong(0)
-  private val doneTasks = new AtomicLong(0)
+    * this is the polling analog — GET /progress/): jobs in flight and
+    * task counts for the current burst of queries. A shared
+    * SparkContext may run foreign work, which carries no server tag. */
+  private val jobs = new JobListener(Set(jobGroup))
   // queries currently executing + the high-water mark (observable so
   // tests can prove requests truly overlap rather than timing them)
   private val inflight = new AtomicInteger(0)
@@ -86,14 +85,6 @@ final class QueryServer(graft: GraftSession, port: Int,
     } catch { case _: Exception => None }
     finally pendingPassword.compareAndSet(fut, null)
   }
-  // stages belonging to the server's job group — onTaskEnd carries no
-  // job-group property, so task completions are attributed via the
-  // stage→group mapping collected at submission (a shared SparkContext
-  // may run foreign work whose tasks must not count)
-  private val groupStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-  private def resetProgress(): Unit = {
-    totalTasks.set(0); doneTasks.set(0); groupStages.clear()
-  }
   // the inflight transition 0→1 and the reset must be one atomic step:
   // without the lock, two simultaneous requests can both pass the
   // n==1 check window and one clears the counters after the other's
@@ -102,30 +93,11 @@ final class QueryServer(graft: GraftSession, port: Int,
   private def beginQuery(): Unit = progressLock.synchronized {
     val n = inflight.incrementAndGet()
     peakInflight.accumulateAndGet(n, math.max)
-    if (n == 1) resetProgress() // progress window = current burst of queries
-  }
-  private val listener = new SparkListener {
-    private val groupJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    override def onJobStart(js: SparkListenerJobStart): Unit =
-      if (js.properties != null &&
-          jobGroup == js.properties.getProperty("spark.jobGroup.id")) {
-        groupJobs.add(js.jobId)
-        activeJobs.incrementAndGet()
-      }
-    override def onJobEnd(je: SparkListenerJobEnd): Unit =
-      if (groupJobs.remove(je.jobId)) activeJobs.decrementAndGet()
-    override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
-      if (ss.properties != null &&
-          jobGroup == ss.properties.getProperty("spark.jobGroup.id")) {
-        groupStages.add(ss.stageInfo.stageId)
-        totalTasks.addAndGet(ss.stageInfo.numTasks.toLong)
-      }
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-      if (groupStages.contains(te.stageId)) doneTasks.incrementAndGet()
+    if (n == 1) jobs.reset(jobGroup) // progress window = current burst of queries
   }
 
   def start(): Int = {
-    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.addSparkListener(jobs)
     // loopback-only by default (reference parity: non-localhost needs
     // the explicit danger flag, main.go:31); bindAll opens 0.0.0.0
     server = HttpServer.create(
@@ -170,7 +142,7 @@ final class QueryServer(graft: GraftSession, port: Int,
     ws.stop()
     if (server != null) server.stop(0)
     if (pool != null) pool.shutdown()
-    spark.sparkContext.removeSparkListener(listener)
+    spark.sparkContext.removeSparkListener(jobs)
   }
 
   /** Embedded console page (reference launches its GUI at /,
@@ -243,23 +215,23 @@ final class QueryServer(graft: GraftSession, port: Int,
         spark.sparkContext.setJobGroup(jobGroup, query, interruptOnCancel = true)
         val session = graft.fork(password)
         val planned = Parser.splitStatements(query).map(s => (s, session.sql(s)))
-        val savedPaths = savePath match {
-          case Some(base) =>
-            Sinks.savePaths(base, planned.size).zip(planned).map {
-              case (p, (_, df)) =>
-                // cache across the two consumers: the CSV save and
-                // the clipped JSON reply below would otherwise each
-                // run the full query from scratch
-                df.persist()
-                if (singleFile) Sinks.saveCsv(df, p)
-                else Sinks.saveCsvDir(df, p)
-            }
-          case None => Seq.empty[String]
-        }
-        val jsons = planned.map { case (stmt, df) => JsonResult.of(df, stmt) }
-        if (savePath.isDefined)
+        try {
+          val savedPaths = savePath match {
+            case Some(base) =>
+              Sinks.savePaths(base, planned.size).zip(planned).map {
+                case (p, (_, df)) =>
+                  // cache across the two consumers: the CSV save and
+                  // the clipped JSON reply below would otherwise each
+                  // run the full query from scratch
+                  df.persist()
+                  if (singleFile) Sinks.saveCsv(df, p)
+                  else Sinks.saveCsvDir(df, p)
+              }
+            case None => Seq.empty[String]
+          }
+          (planned.map { case (stmt, df) => JsonResult.of(df, stmt) }, savedPaths)
+        } finally if (savePath.isDefined) // a failed save or reply too
           planned.foreach(_._2.unpersist(blocking = false))
-        (jsons, savedPaths)
       } finally inflight.decrementAndGet()
     JsonResult.bundle(results, "ok", saved)
   }
@@ -340,10 +312,11 @@ final class QueryServer(graft: GraftSession, port: Int,
   }
 
   private def progressJson: String = {
-    val total = totalTasks.get
-    val done = math.min(doneTasks.get, total)
+    val t = jobs.totals(jobGroup)
+    val total = t.submitted.get
+    val done = math.min(t.tasks.get, total)
     val pct = if (total == 0) 0.0 else math.rint(1000.0 * done / total) / 10
-    s"""{"ActiveJobs":${activeJobs.get},"TasksDone":$done,"TasksTotal":$total,"Percent":$pct}"""
+    s"""{"ActiveJobs":${jobs.activeJobs(jobGroup)},"TasksDone":$done,"TasksTotal":$total,"Percent":$pct}"""
   }
 
   private def handleProgress(ex: HttpExchange): Unit =

@@ -6,7 +6,7 @@ import graft.SparkSpec
 class BucketingSpec extends SparkSpec {
 
   test("bucketed fact-fact join plans sort-merge with no exchange on either side") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_buckets").toString
+    val wh = freshDir("buckets").toString
     Bucketing.writeBucketed(Tables(spark, sf0001, "lineitem")
       .select("l_orderkey", "l_quantity", "l_extendedprice"),
       "li_b", "l_orderkey", 4, wh)
@@ -49,7 +49,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("dialect bjoin over pre-bucketed catalog tables is exchange-free on the join") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_buckets_dlg").toString
+    val wh = freshDir("buckets_dlg").toString
     Bucketing.writeBucketed(Tables(spark, sf0001, "lineitem")
       .select("l_orderkey", "l_suppkey"), "li_dlg", "l_orderkey", 4, wh)
     Bucketing.writeBucketed(Tables(spark, sf0001, "orders")

@@ -77,21 +77,4 @@ class RowNumbersSpec extends SparkSpec {
     assert(got.size == want.size)
     got.foreach { case (k, n) => assert(want(k) == n, s"$k: $n vs ${want(k)}") }
   }
-
-  test("cacheInput=false: scanOrder and global persist nothing") {
-    val key = "spark.graft.rownumbers.cacheInput"
-    val df = spark.range(0, 100, 1, 5).toDF("v")
-    def persisted() = spark.sparkContext.getPersistentRDDs.keySet
-    val before = persisted()
-    spark.conf.set(key, "false")
-    try {
-      // zipWithIndex's eager count job has run by the time scanOrder
-      // returns; a persisted input would be visible right here
-      val scanned = RowNumbers.scanOrder(df)
-      val ranged = RowNumbers.global(df, Seq(col("v")), numPartitions = Some(3))
-      assert(persisted() == before, "no RDD may be persisted while building")
-      assert(scanned.count() == 100 && ranged.count() == 100)
-      assert(persisted() == before, "no RDD may stay persisted")
-    } finally spark.conf.unset(key)
-  }
 }

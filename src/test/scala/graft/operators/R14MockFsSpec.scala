@@ -37,8 +37,8 @@ class R14MockFsSpec extends SparkSpec {
 
   test("the full index lifecycle runs on a non-file scheme (mockfs://)") {
     conf()
-    val local = "/tmp/graft_r14_mockfs_ref"
-    val remote = "mockfs:///tmp/graft_r14_mockfs_idx"
+    val local = s"$suiteDir/r14_mockfs_ref"
+    val remote = s"mockfs://$suiteDir/r14_mockfs_idx"
     // same deterministic build on both filesystems
     val centersL = IvfIndex.build(emb, local)
     val centersR = IvfIndex.build(emb, remote)
@@ -102,7 +102,7 @@ class R14MockFsSpec extends SparkSpec {
 
   test("a sharded (binary) sidecar round-trips through the non-file scheme") {
     conf()
-    val p = "mockfs:///tmp/graft_r14_mockfs_shards"
+    val p = s"mockfs://$suiteDir/r14_mockfs_shards"
     val fs = new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(new org.apache.hadoop.fs.Path(p), true)

@@ -30,9 +30,9 @@ class AnnRecallSpec extends SparkSpec {
     import graft.core.Tables
     import graft.sql.GraftSession
     val g = GraftSession(spark, sf0001)
-    val path = "/tmp/graft_recall_probe_idx"
+    val path = s"$suiteDir/recall_probe_idx"
     g.sql(s"index vec_id, embedding from embeddings into '$path'")
-    val qb = "/tmp/graft_recall_probe_q"
+    val qb = s"$suiteDir/recall_probe_q"
     Tables(spark, sf0001, "embeddings")
       .filter(col("vec_id") % 11 === 3)
       .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("embedding"))
@@ -83,9 +83,9 @@ class AnnRecallSpec extends SparkSpec {
     import graft.core.Tables
     import graft.sql.GraftSession
     val g = GraftSession(spark, sf0001)
-    val path = "/tmp/graft_recall_pq_sweep_idx"
+    val path = s"$suiteDir/recall_pq_sweep_idx"
     g.sql(s"index vec_id, embedding from embeddings into '$path' pq")
-    val qb = "/tmp/graft_recall_pq_sweep_q"
+    val qb = s"$suiteDir/recall_pq_sweep_q"
     Tables(spark, sf0001, "embeddings")
       .filter(col("vec_id") % 11 === 3)
       .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("embedding"))

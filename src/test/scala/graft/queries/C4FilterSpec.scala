@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** t27's C4 heuristics (Raffel et al. 2020 §2.2) on pages built to sit
@@ -14,8 +12,7 @@ class C4FilterSpec extends SparkSpec {
 
   private def run(docs: Seq[(Long, String)]) = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_c4").toFile
-    dir.deleteOnExit()
+    val dir = freshDir("c4").toFile
     docs.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite")

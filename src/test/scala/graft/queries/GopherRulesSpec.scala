@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** t28's Gopher rule bundle (Rae et al. 2021 App. A1.1) on documents
@@ -18,8 +16,7 @@ class GopherRulesSpec extends SparkSpec {
 
   private def run(docs: Seq[(Long, String)]) = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_gopher").toFile
-    dir.deleteOnExit()
+    val dir = freshDir("gopher").toFile
     docs.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite")

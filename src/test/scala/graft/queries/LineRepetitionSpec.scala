@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** t26's duplicate-line math can't fire on the gate corpus (no doc
@@ -11,8 +9,7 @@ class LineRepetitionSpec extends SparkSpec {
 
   test("duplicate-line fractions are exact on a boilerplate page") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_linerep").toFile
-    dir.deleteOnExit()
+    val dir = freshDir("linerep").toFile
     // doc 0: nav bar line x3 (len 7), body lines unique (len 5 each),
     //        blank + spaces-only lines must be ignored
     // doc 1: all lines unique

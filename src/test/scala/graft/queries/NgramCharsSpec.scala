@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** t29's char-weighted n-gram repetition on hand-computable fixtures:
@@ -11,8 +9,7 @@ class NgramCharsSpec extends SparkSpec {
 
   private def run(docs: Seq[(Long, String)]) = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_ngc").toFile
-    dir.deleteOnExit()
+    val dir = freshDir("ngc").toFile
     docs.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite")

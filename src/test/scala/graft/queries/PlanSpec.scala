@@ -607,7 +607,7 @@ class PlanSpec extends SparkSpec {
     // the 100 TB layout: big tables land partitioned (by date/type);
     // a dialect filter on the partition column must become a
     // PARTITION filter (directories never listed), not a row filter
-    val tmp = "/tmp/graft_part_events"
+    val tmp = s"$suiteDir/part_events"
     graft.core.Tables(spark, sf0001, "events")
       .write.mode("overwrite").partitionBy("event_type").parquet(tmp)
     val g = graft.sql.GraftSession(spark, sf0001)
@@ -960,7 +960,7 @@ class PlanSpec extends SparkSpec {
     import graft.operators.IvfIndex
     val e = graft.core.Tables(spark, sf0001, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val path = "/tmp/graft_planspec_pqpush"
+    val path = s"$suiteDir/planspec_pqpush"
     IvfIndex.build(e, path, pq = true)
     val side = IvfIndex.readSidecar(spark, path).get
     val q = e.filter(col("vec_id") % 17 === 5)
@@ -1011,7 +1011,7 @@ class PlanSpec extends SparkSpec {
     import graft.operators.IvfIndex
     val e = graft.core.Tables(spark, sf0001, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val path = "/tmp/graft_planspec_pqshort"
+    val path = s"$suiteDir/planspec_pqshort"
     IvfIndex.build(e, path, pq = true)
     val side = IvfIndex.readSidecar(spark, path).get
     val panel = e.filter(col("vec_id") < 5)

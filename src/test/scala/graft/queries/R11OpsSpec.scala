@@ -76,7 +76,7 @@ class R11OpsSpec extends SparkSpec {
   }
 
   test("upsert rewrites ONLY touched cells' files (untouched byte-identical)") {
-    val path = "/tmp/graft_r11_upsert_spec"
+    val path = s"$suiteDir/r11_upsert_spec"
     val centers = IvfIndex.build(emb, path)
     def cellFiles(): Map[String, Array[Byte]] = {
       import scala.jdk.CollectionConverters._
@@ -112,7 +112,7 @@ class R11OpsSpec extends SparkSpec {
   }
 
   test("upsert with an EXISTING id replaces the row (update, not duplicate)") {
-    val path = "/tmp/graft_r11_upsert_replace"
+    val path = s"$suiteDir/r11_upsert_replace"
     val centers = IvfIndex.build(emb, path)
     val n = emb.count()
     val rein = VectorQueries.kmeansAssign(
@@ -124,7 +124,7 @@ class R11OpsSpec extends SparkSpec {
   }
 
   test("serve off the layout equals the base-table search (the v45 contract)") {
-    val path = "/tmp/graft_r11_serve_spec"
+    val path = s"$suiteDir/r11_serve_spec"
     IvfIndex.build(emb, path)
     val idx = IvfIndex.read(spark, path)
     val panel = idx.filter(col("vec_id") < 5)

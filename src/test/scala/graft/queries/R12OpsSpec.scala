@@ -33,7 +33,7 @@ class R12OpsSpec extends SparkSpec {
     e.select(col("vec_id"), transform(col("embedding"), x => -x).as("embedding"))
 
   test("build writes the sidecar: serving = the fit, refresh/counts = the index") {
-    val path = "/tmp/graft_r12_sidecar_build"
+    val path = s"$suiteDir/r12_sidecar_build"
     val centers = IvfIndex.build(emb, path)
     val side = IvfIndex.readSidecar(spark, path).get
     assert(side.serving.map(_._1) == centers.map(_._1))
@@ -51,7 +51,7 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("upsert sweeps a re-ingested id out of its OLD cell (the cross-cell move)") {
-    val path = "/tmp/graft_r12_upsert_move"
+    val path = s"$suiteDir/r12_upsert_move"
     val centers = IvfIndex.build(emb, path)
     val oldCell = IvfIndex.read(spark, path)
       .filter(col("vec_id") === 0).head.getLong(2)
@@ -79,7 +79,7 @@ class R12OpsSpec extends SparkSpec {
     // the written frame — a cell whose every row moved away would keep
     // its old files and resurrect the deleted rows without the
     // vacated-cell fix
-    val path = "/tmp/graft_r12_vacate"
+    val path = s"$suiteDir/r12_vacate"
     val centers = IvfIndex.build(emb, path)
     val idx = IvfIndex.read(spark, path)
     val counts = idx.groupBy(col("cell")).count().collect()
@@ -109,7 +109,7 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("append writes O(batch) bytes: every pre-existing file byte-identical") {
-    val path = "/tmp/graft_r12_append_bytes"
+    val path = s"$suiteDir/r12_append_bytes"
     val centers = IvfIndex.build(emb, path)
     val before = cellFiles(path)
     val baseBytes = before.values.map(_.length.toLong).sum
@@ -140,7 +140,7 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("readLatest resolves a cross-cell re-ingest; compact makes plain read equal") {
-    val path = "/tmp/graft_r12_append_compact"
+    val path = s"$suiteDir/r12_append_compact"
     val centers = IvfIndex.build(emb, path)
     val n = emb.count()
     // seq 1: fresh ids; seq 2: re-ingest every 13th id with a negated
@@ -177,7 +177,7 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("upsert refuses un-compacted appends; ingest batches must be unique on vec_id") {
-    val path = "/tmp/graft_r12_guards"
+    val path = s"$suiteDir/r12_guards"
     val centers = IvfIndex.build(emb, path)
     val one = VectorQueries.kmeansAssign(emb.filter(col("vec_id") === 0), centers)
     intercept[IllegalArgumentException] {
@@ -192,7 +192,7 @@ class R12OpsSpec extends SparkSpec {
   }
 
   test("sidecar cache: second read is a hit; any write invalidates") {
-    val path = "/tmp/graft_r12_cache"
+    val path = s"$suiteDir/r12_cache"
     IvfIndex.build(emb, path)
     IvfIndex.SidecarCache.invalidate(path)
     val l0 = IvfIndex.SidecarCache.loadCount(path)
@@ -212,9 +212,9 @@ class R12OpsSpec extends SparkSpec {
     // follow the sidecar (proving serve never re-aggregates the index)
     import graft.sql.GraftSession
     val g = GraftSession(spark, sf0001)
-    val path = "/tmp/graft_r12_route_proof"
+    val path = s"$suiteDir/r12_route_proof"
     g.sql(s"index vec_id, embedding from embeddings into '$path'")
-    val qb = "/tmp/graft_r12_route_q"
+    val qb = s"$suiteDir/r12_route_q"
     emb.filter(col("vec_id") < 3)
       .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("embedding"))
       .coalesce(1).write.mode("overwrite").parquet(qb)
@@ -244,7 +244,7 @@ class R12OpsSpec extends SparkSpec {
   test("pq index: sidecar books round-trip bit-exact; ingest encodes arrivals") {
     import graft.sql.GraftSession
     val g = GraftSession(spark, sf0001)
-    val path = "/tmp/graft_r12_pq_idx"
+    val path = s"$suiteDir/r12_pq_idx"
     g.sql(s"index vec_id, embedding from embeddings into '$path' pq")
     val side = IvfIndex.readSidecar(spark, path).get
     assert(side.hasPq && side.books.size == VectorQueries.PQ_M)
@@ -261,7 +261,7 @@ class R12OpsSpec extends SparkSpec {
     }
     // ingest into a pq index encodes arrivals: stored codes equal a
     // direct encode of the same rows
-    val ap = "/tmp/graft_r12_pq_arr"
+    val ap = s"$suiteDir/r12_pq_arr"
     emb.filter(col("vec_id") < 7)
       .select((col("vec_id") + lit(8000L)).as("vec_id"), col("embedding"))
       .coalesce(1).write.mode("overwrite").parquet(ap)
@@ -279,7 +279,7 @@ class R12OpsSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getSeq[Byte](1).toSeq).toMap
     assert(stored == direct, "ingested codes must equal a direct encode")
     // and pq serving works on the upserted index
-    val qb = "/tmp/graft_r12_pq_q"
+    val qb = s"$suiteDir/r12_pq_q"
     emb.filter(col("vec_id") < 3)
       .select((col("vec_id") + lit(9000L)).as("vec_id"), col("embedding"))
       .coalesce(1).write.mode("overwrite").parquet(qb)
@@ -288,7 +288,7 @@ class R12OpsSpec extends SparkSpec {
     assert(served.columns.toSeq == Seq("q_id", "n_id", "sim", "rank"))
     assert(served.count() > 0 && served.filter(col("rank") > 3).count() == 0)
     // a plain index refuses pq serving with a clear error
-    val plain = "/tmp/graft_r12_pq_plain"
+    val plain = s"$suiteDir/r12_pq_plain"
     g.sql(s"index vec_id, embedding from embeddings into '$plain'")
     assertThrows[Exception](g.sql(
       s"serve vec_id, embedding from '$plain' query '$qb' top 3 pq"))
@@ -297,9 +297,9 @@ class R12OpsSpec extends SparkSpec {
   test("multi-probe serve: probe 2 is a superset-or-equal candidate pool (s61 ≡ oracle shape)") {
     import graft.sql.GraftSession
     val g = GraftSession(spark, sf0001)
-    val path = "/tmp/graft_r12_probe"
+    val path = s"$suiteDir/r12_probe"
     g.sql(s"index vec_id, embedding from embeddings into '$path'")
-    val qb = "/tmp/graft_r12_probe_q"
+    val qb = s"$suiteDir/r12_probe_q"
     emb.filter(col("vec_id") < 5)
       .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("embedding"))
       .coalesce(1).write.mode("overwrite").parquet(qb)

@@ -36,9 +36,9 @@ class R13OpsSpec extends SparkSpec {
   test("legacy layout: serve warns on the fallback, compact backfills, warning gone") {
     import graft.sql.GraftSession
     val g = GraftSession(spark, sf0001)
-    val path = "/tmp/graft_r13_legacy"
+    val path = s"$suiteDir/r13_legacy"
     g.sql(s"index vec_id, embedding from embeddings into '$path'")
-    val qb = "/tmp/graft_r13_legacy_q"
+    val qb = s"$suiteDir/r13_legacy_q"
     emb.filter(col("vec_id") % 17 === 5)
       .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("embedding"))
       .coalesce(1).write.mode("overwrite").parquet(qb)
@@ -72,7 +72,7 @@ class R13OpsSpec extends SparkSpec {
     // degrade to a compact-fixable state where reads stay exact, never
     // to superseded rows served as current (the reverse order's
     // failure mode, ADVICE r12)
-    val path = "/tmp/graft_r13_crash"
+    val path = s"$suiteDir/r13_crash"
     IvfIndex.build(emb, path)
     val base = IvfIndex.read(spark, path).collect()
       .map(r => (r.getLong(0), r.getLong(2))).sorted.toSeq
@@ -110,7 +110,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("maintenance rewrites preserve survivors' seq (upsert ≡ compact contract)") {
-    val path = "/tmp/graft_r13_seq_keep"
+    val path = s"$suiteDir/r13_seq_keep"
     val centers = IvfIndex.build(emb, path)
     // land a generation of appended rows at seq 1, then compact so the
     // files are duplicate-free but the rows KEEP their version
@@ -142,7 +142,7 @@ class R13OpsSpec extends SparkSpec {
     // SECOND compact scopes to rows above the first's watermark, and
     // must still find every superseded copy (including ones stranded
     // in other cells by a cross-cell re-assign)
-    val path = "/tmp/graft_r13_watermark"
+    val path = s"$suiteDir/r13_watermark"
     val centers = IvfIndex.build(emb, path)
     val n = IvfIndex.read(spark, path).count()
     val moved = emb.filter(col("vec_id") % 13 === 4)
@@ -173,7 +173,7 @@ class R13OpsSpec extends SparkSpec {
   }
 
   test("appendAndMaintain keeps per-cell file counts bounded across batches") {
-    val path = "/tmp/graft_r13_maintain"
+    val path = s"$suiteDir/r13_maintain"
     val centers = IvfIndex.build(emb, path)
     val bound = 2
     var fired = 0
@@ -201,7 +201,7 @@ class R13OpsSpec extends SparkSpec {
     // its ids into the gather scan; above PqGatherPushMax it falls back
     // to the lazy broadcast-join shape — the two must return the SAME
     // neighbors, sims and ranks (same cosine over the same rows)
-    val path = "/tmp/graft_r13_pushfall"
+    val path = s"$suiteDir/r13_pushfall"
     IvfIndex.build(emb, path, pq = true)
     val side = IvfIndex.readSidecar(spark, path).get
     val q = emb.filter(col("vec_id") % 17 === 5)
@@ -227,7 +227,7 @@ class R13OpsSpec extends SparkSpec {
     // gather's driver-side extraction must not assume LongType — and
     // its equality literals must be cast to the COLUMN's type, since
     // a cast wrapped around the column would defeat parquet pushdown
-    val path = "/tmp/graft_r13_intid"
+    val path = s"$suiteDir/r13_intid"
     val intEmb = emb.select(col("vec_id").cast("int").as("vec_id"),
       col("embedding"))
     IvfIndex.build(intEmb, path, pq = true)
@@ -262,7 +262,7 @@ class R13OpsSpec extends SparkSpec {
     // writing books=empty instead would flip hasPq to false and invert
     // the ingest shape guard: encoded arrivals refused, code-less
     // arrivals accepted into a mixed-schema index
-    val path = "/tmp/graft_r13_pq_backfill"
+    val path = s"$suiteDir/r13_pq_backfill"
     IvfIndex.build(emb, path, pq = true)
     val dir = java.nio.file.Paths.get(path, IvfIndex.SidecarDir)
     import scala.jdk.CollectionConverters._
@@ -281,11 +281,11 @@ class R13OpsSpec extends SparkSpec {
     // fail loudly before any broadcast, not OOM an executor
     import graft.sql.GraftSession
     val g = GraftSession(spark, sf0001)
-    val path = "/tmp/graft_r13_cap"
+    val path = s"$suiteDir/r13_cap"
     g.sql(s"index vec_id, embedding from embeddings into '$path' pq")
     val over = new graft.sql.Planner((_, _) => emb, None).ServeMaxBatch + 1L
     val probeVec = emb.limit(1).collect().head.getSeq[Float](1)
-    val qb = "/tmp/graft_r13_cap_q"
+    val qb = s"$suiteDir/r13_cap_q"
     spark.range(over).select(col("id").as("vec_id"),
         typedLit(probeVec).as("embedding"))
       .write.mode("overwrite").parquet(qb)

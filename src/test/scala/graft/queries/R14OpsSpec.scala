@@ -18,7 +18,7 @@ class R14OpsSpec extends SparkSpec {
   private lazy val emb = Tables(spark, sf0001, "embeddings")
     .select(col("vec_id"), col("embedding"))
 
-  private val path = "/tmp/graft_r14_gather"
+  private val path = s"$suiteDir/r14_gather"
   private lazy val fixture: IvfIndex.Sidecar = {
     IvfIndex.build(emb, path, pq = true)
     IvfIndex.readSidecar(spark, path).get
@@ -192,7 +192,7 @@ class R14OpsSpec extends SparkSpec {
     // the loser must fail loudly BEFORE its data files land (sidecar-
     // first commit order), not last-write-wins away the winner's
     // bookkeeping
-    val p = "/tmp/graft_r14_cas"
+    val p = s"$suiteDir/r14_cas"
     IvfIndex.build(emb, p)
     val s0 = IvfIndex.readSidecar(spark, p).get
     // writer A commits v+1
@@ -221,7 +221,7 @@ class R14OpsSpec extends SparkSpec {
   }
 
   test("sidecar sharding: a large-k sidecar round-trips bit-exact across shards") {
-    val p = "/tmp/graft_r14_shards"
+    val p = s"$suiteDir/r14_shards"
     // wipe any previous run (writeSidecar CAS would refuse version 1)
     val d = java.nio.file.Paths.get(p)
     if (java.nio.file.Files.isDirectory(d)) {
@@ -278,7 +278,7 @@ class R14OpsSpec extends SparkSpec {
     // FIELD kept counting — the reader must trust the field, and the
     // next writer must commit under the field+1 name so the new file
     // out-versions the legacy one
-    val p = "/tmp/graft_r14_legacyname"
+    val p = s"$suiteDir/r14_legacyname"
     IvfIndex.build(emb, p)
     val s = IvfIndex.readSidecar(spark, p).get
     val dir = java.nio.file.Paths.get(p, IvfIndex.SidecarDir)

@@ -58,7 +58,7 @@ class R15OpsSpec extends SparkSpec {
     // leaving the index unreadable. New rule: a shard version PAST
     // the max committed header survives unless aged (crashed-writer
     // sweep), and committed-but-retired versions still retire.
-    val path = "/tmp/graft_r15_retention"
+    val path = s"$suiteDir/r15_retention"
     wipe(path)
     val f = fs(path)
     IvfIndex.writeSidecar(spark, path, tinySidecar(1L, 1.0))
@@ -95,8 +95,8 @@ class R15OpsSpec extends SparkSpec {
       counts = (0 until k).map(c => c.toLong -> 1L).toMap,
       staleCells = Set.empty, pendingAppends = false, maxSeq = 0L,
       version = version)
-    val path = "/tmp/graft_r15_wholeness"
-    val stage = "/tmp/graft_r15_wholeness_stage"
+    val path = s"$suiteDir/r15_wholeness"
+    val stage = s"$suiteDir/r15_wholeness_stage"
     wipe(path); wipe(stage)
     IvfIndex.writeSidecar(spark, path, bigSidecar(1L, 1.0))
     // stage version 2 in a scratch dir (same writer code path), then
@@ -143,7 +143,7 @@ class R15OpsSpec extends SparkSpec {
 
   private lazy val emb = Tables(spark, sf0001, "embeddings")
     .select(col("vec_id"), col("embedding"))
-  private val gatherPath = "/tmp/graft_r15_gather"
+  private val gatherPath = s"$suiteDir/r15_gather"
   private lazy val gatherFixture: IvfIndex.Sidecar = {
     IvfIndex.build(emb, gatherPath, pq = true)
     IvfIndex.readSidecar(spark, gatherPath).get

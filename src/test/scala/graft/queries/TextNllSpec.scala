@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -13,8 +11,7 @@ class TextNllSpec extends SparkSpec {
 
   test("rare words fall through to the ln(1/N) OOV floor") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_nll").toFile
-    dir.deleteOnExit()
+    val dir = freshDir("nll").toFile
     // "common" appears 10 times, "rare" once -> N = 11, vocab = {common}
     val docs = Seq(
       (0L, "common common common common common", "en", "s", 30L),

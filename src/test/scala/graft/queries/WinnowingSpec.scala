@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** d14's winnowing contract (Schleimer et al. 2003): with k-gram width
@@ -14,8 +12,7 @@ class WinnowingSpec extends SparkSpec {
 
   private def run(docs: Seq[(Long, String)]) = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_winnow").toFile
-    dir.deleteOnExit()
+    val dir = freshDir("winnow").toFile
     docs.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite")

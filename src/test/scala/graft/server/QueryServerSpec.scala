@@ -69,8 +69,8 @@ class QueryServerSpec extends SparkSpec {
           .POST(HttpRequest.BodyPublishers.ofString(
             s"""{"query":"$q"}""")).build(),
         HttpResponse.BodyHandlers.ofString())
-      val ip = "/tmp/graft_qs_serve_idx"
-      val qb = "/tmp/graft_qs_serve_q"
+      val ip = s"$suiteDir/qs_serve_idx"
+      val qb = s"$suiteDir/qs_serve_q"
       assert(post(s"index vec_id, embedding from embeddings into '$ip'")
         .body().contains("\"Status\":\"ok\""))
       graft.core.Tables(spark, sf0001, "embeddings")
@@ -153,14 +153,14 @@ class QueryServerSpec extends SparkSpec {
       assert(rep.contains(""""Status":"ok"""") && rep.contains("cell_new"), rep)
       val sem = post("dedup semantic vec_id, embedding from embeddings")
       assert(sem.contains(""""Status":"ok"""") && sem.contains("keep"), sem)
-      val idx = post("index vec_id, embedding from embeddings into '/tmp/graft_qs_idx'")
+      val idx = post(s"index vec_id, embedding from embeddings into '$suiteDir/qs_idx'")
       assert(idx.contains(""""Status":"ok"""") && idx.contains("n_vecs"), idx)
-      val srv = post("serve vec_id, embedding from '/tmp/graft_qs_idx' top 3")
+      val srv = post(s"serve vec_id, embedding from '$suiteDir/qs_idx' top 3")
       assert(srv.contains(""""Status":"ok"""") && srv.contains("sim"), srv)
-      val sq = post("serve vec_id, embedding from '/tmp/graft_qs_idx' " +
-        "query '/tmp/graft_qs_idx' top 2")
+      val sq = post(s"serve vec_id, embedding from '$suiteDir/qs_idx' " +
+        s"query '$suiteDir/qs_idx' top 2")
       assert(sq.contains(""""Status":"ok"""") && sq.contains("rank"), sq)
-      val rpu = post("repair vec_id, embedding from embeddings using '/tmp/graft_qs_idx'")
+      val rpu = post(s"repair vec_id, embedding from embeddings using '$suiteDir/qs_idx'")
       assert(rpu.contains(""""Status":"ok"""") && rpu.contains("cell_new"), rpu)
     } finally server.stop()
   }
@@ -420,7 +420,7 @@ class QueryServerSpec extends SparkSpec {
     val port = server.start()
     try {
       val client = HttpClient.newHttpClient()
-      val dir = java.nio.file.Files.createTempDirectory("graft_websave")
+      val dir = freshDir("websave")
       // single-file mode, multi-statement → base.csv and base-2.csv
       val base = s"$dir/out.csv"
       val resp = client.send(
@@ -451,6 +451,29 @@ class QueryServerSpec extends SparkSpec {
       val pdir = new java.io.File(s"$dir/par.csv")
       assert(pdir.isDirectory, "default save mode keeps parallel part files")
       assert(pdir.listFiles().exists(f => f.getName.startsWith("part-")), "part files expected")
+    } finally server.stop()
+  }
+
+  test("a failed savePath save returns an error and leaves nothing cached") {
+    val server = new QueryServer(GraftSession(spark, sf0001), port = 0)
+    val port = server.start()
+    try {
+      // a regular file where the save needs a directory: unwritable
+      // whoever runs the suite
+      val blocker = freshDir("websave_fail").resolve("file")
+      java.nio.file.Files.writeString(blocker, "x")
+      val stmt = "select n_name from nation"
+      val body = HttpClient.newHttpClient().send(
+        HttpRequest.newBuilder(URI.create(s"http://localhost:$port/query/"))
+          .POST(HttpRequest.BodyPublishers.ofString(
+            s"""{"query":"$stmt","savePath":"$blocker/out.csv"}"""))
+          .build(),
+        HttpResponse.BodyHandlers.ofString()).body()
+      assert(body.contains(""""Status":"error"""), body)
+      // storageLevel looks the plan up in the shared cache manager
+      assert(GraftSession(spark, sf0001).sql(stmt).storageLevel ==
+        org.apache.spark.storage.StorageLevel.NONE,
+        "the failed save's frame must not stay cached")
     } finally server.stop()
   }
 

@@ -47,7 +47,7 @@ class CsvSourceSpec extends SparkSpec {
   }
 
   test("csv read: inference, widening, headerless naming") {
-    val dir = Files.createTempDirectory("graftcsv")
+    val dir = freshDir("csv")
     val f = dir.resolve("sample.csv")
     Files.writeString(f,
       """id,amount,when,span,tag,zip
@@ -74,7 +74,7 @@ class CsvSourceSpec extends SparkSpec {
   }
 
   test("quoted cells keep embedded commas; cells trim on read (selector.go:301)") {
-    val dir = Files.createTempDirectory("graftquoted")
+    val dir = freshDir("quoted")
     val f = dir.resolve("quoted.csv")
     Files.writeString(f,
       "name,note,num\n" +
@@ -89,7 +89,7 @@ class CsvSourceSpec extends SparkSpec {
   }
 
   test("inference samples only the first 10k rows (reference utils.go:434)") {
-    val dir = Files.createTempDirectory("graftcutoff")
+    val dir = freshDir("cutoff")
     val f = dir.resolve("mixed.csv")
     val sb = new StringBuilder("v\n")
     (1 to 10000).foreach(i => sb.append(i).append('\n'))
@@ -148,7 +148,7 @@ class CsvSourceSpec extends SparkSpec {
   // ---- inferred-relation cache --------------------------------------
 
   test("cache hit: an unchanged file returns the same relation with 0 Spark jobs") {
-    val f = Files.createTempDirectory("graftcsvhit").resolve("t.csv")
+    val f = freshDir("csvhit").resolve("t.csv")
     Files.writeString(f, "id,v\n1,a\n2,b\n")
     var first, second: org.apache.spark.sql.DataFrame = null
     assert(jobsDuring { first = CsvSource.read(spark, f.toString) } > 0,
@@ -162,7 +162,7 @@ class CsvSourceSpec extends SparkSpec {
 
   test("cache: a same-length in-place rewrite in the same millisecond re-infers") {
     import java.nio.file.attribute.{BasicFileAttributes, FileTime}
-    val f = Files.createTempDirectory("graftcsvrw").resolve("t.csv")
+    val f = freshDir("csvrw").resolve("t.csv")
     // both versions carry mtimes inside one millisecond, as a rewrite
     // right after a write would on a fast disk
     val t0 = java.time.Instant.parse("2024-01-01T00:00:00.000000100Z")
@@ -188,7 +188,7 @@ class CsvSourceSpec extends SparkSpec {
 
   test("cache: a Spark-written CSV directory rewritten with overwrite re-infers") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graftcsvdir").resolve("d.csv").toString
+    val dir = freshDir("csvdir").resolve("d.csv").toString
     Seq((1, 10), (2, 20)).toDF("id", "v")
       .write.option("header", "true").csv(dir)
     val before = CsvSource.read(spark, dir)
@@ -201,7 +201,7 @@ class CsvSourceSpec extends SparkSpec {
   }
 
   test("cache: a header read and an nh read of one path are separate entries") {
-    val f = Files.createTempDirectory("graftcsvnh").resolve("t.csv")
+    val f = freshDir("csvnh").resolve("t.csv")
     Files.writeString(f, "id,v\n1,2\n3,4\n")
     val hdr = CsvSource.read(spark, f.toString)
     val nh = CsvSource.read(spark, f.toString, header = false)
@@ -215,7 +215,7 @@ class CsvSourceSpec extends SparkSpec {
   }
 
   test("cache off: spark.graft.relationCache.enabled=false re-infers every read") {
-    val f = Files.createTempDirectory("graftcsvoff").resolve("t.csv")
+    val f = freshDir("csvoff").resolve("t.csv")
     Files.writeString(f, "id,v\n1,a\n")
     val key = "spark.graft.relationCache.enabled"
     spark.conf.set(key, "false")

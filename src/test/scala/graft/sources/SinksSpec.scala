@@ -26,19 +26,19 @@ class SinksSpec extends SparkSpec {
     import spark.implicits._
     val df = (1 to 100).toDF("x").repartition(4)
 
-    val single = Sinks.saveCsv(df, "/tmp/graft_sink_single")
-    assert(single == "/tmp/graft_sink_single.csv")
+    val single = Sinks.saveCsv(df, s"$suiteDir/sink_single")
+    assert(single == s"$suiteDir/sink_single.csv")
     // reference parity: a plain .csv file at the path, not a part dir
     val f = new java.io.File(single)
     assert(f.isFile, "saveCsv must leave a single .csv FILE, not a Spark part directory")
     assert(scala.io.Source.fromFile(f).getLines().length == 101) // header + 100
 
     // overwriting a previous save (and a legacy directory-shaped one) works
-    val again = Sinks.saveCsv(df.limit(5), "/tmp/graft_sink_single")
+    val again = Sinks.saveCsv(df.limit(5), s"$suiteDir/sink_single")
     assert(new java.io.File(again).isFile)
     assert(scala.io.Source.fromFile(again).getLines().length == 6)
 
-    val par = Sinks.saveCsvDir(df, "/tmp/graft_sink_par")
+    val par = Sinks.saveCsvDir(df, s"$suiteDir/sink_par")
     val parts = new java.io.File(par).listFiles().count(f => f.getName.startsWith("part-"))
     assert(parts == 4, "parallel save must not coalesce")
     // content round-trips
@@ -53,7 +53,7 @@ class SinksSpec extends SparkSpec {
     // writer thread is still draining partition 1.
     val slow = udf { (i: Long) => if (i >= 50) Thread.sleep(40); i }
     val df = spark.range(0, 100, 1, 2).select(slow(col("id")).as("id"))
-    val path = "/tmp/graft_sink_stream.csv"
+    val path = s"$suiteDir/sink_stream.csv"
     new java.io.File(path).delete()
     @volatile var done = false
     val t = new Thread(() => { Sinks.saveCsvStreaming(df, path); done = true })
@@ -93,8 +93,8 @@ class SinksSpec extends SparkSpec {
       (4, 1.25, "", "  padded  "),
       (5, 0.5, "café 見本", "carriage\rreturn")
     ).toDF("i", "d", "s1", "s2").coalesce(1)
-    val a = Sinks.saveCsv(df, "/tmp/graft_sink_ab_atomic")
-    val b = Sinks.saveCsvStreaming(df, "/tmp/graft_sink_ab_stream")
+    val a = Sinks.saveCsv(df, s"$suiteDir/sink_ab_atomic")
+    val b = Sinks.saveCsvStreaming(df, s"$suiteDir/sink_ab_stream")
     val fa = java.nio.file.Files.readString(java.nio.file.Paths.get(a))
     val fb = java.nio.file.Files.readString(java.nio.file.Paths.get(b))
     assert(fa == fb, s"atomic:\n$fa\nstreaming:\n$fb")
@@ -119,7 +119,7 @@ class SinksSpec extends SparkSpec {
     val micros = Seq(500L, 1500L, 90500000L)
     val df = micros.toDF("us")
       .select((col("us") * expr("INTERVAL 1 MICROSECOND")).as("dur"))
-    val path = Sinks.saveCsv(df, "/tmp/graft_sink_durcsv")
+    val path = Sinks.saveCsv(df, s"$suiteDir/sink_durcsv")
     val back = CsvSource.read(spark, path)
     assert(back.schema.head.dataType.typeName.startsWith("interval"),
       s"re-ingested type: ${back.schema.head.dataType}")
@@ -139,7 +139,7 @@ class SinksSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select(col("doc_id"), col("source"))
     val n = 8
-    val path = Sinks.saveShards(docs, "doc_id", n, "/tmp/graft_sink_shards")
+    val path = Sinks.saveShards(docs, "doc_id", n, s"$suiteDir/sink_shards")
 
     // every shard dir exists and the union round-trips the corpus
     val back = spark.read.parquet(path)
@@ -166,7 +166,7 @@ class SinksSpec extends SparkSpec {
   test("saveShardedResult lands the `shard` statement's output in pos order") {
     val layout = graft.sql.GraftSession(spark, sf0001)
       .sql("shard doc_id from documents into 4")
-    val path = Sinks.saveShardedResult(layout, "/tmp/graft_sink_shardstmt")
+    val path = Sinks.saveShardedResult(layout, s"$suiteDir/sink_shardstmt")
     val back = spark.read.parquet(path)
     assert(back.count() == layout.count())
     val dirs = new java.io.File(path).listFiles()
@@ -179,7 +179,7 @@ class SinksSpec extends SparkSpec {
     // a result without shard/pos is rejected loudly
     assertThrows[IllegalArgumentException](
       Sinks.saveShardedResult(
-        spark.read.parquet(s"$sf0001/documents.parquet"), "/tmp/graft_sink_bad"))
+        spark.read.parquet(s"$sf0001/documents.parquet"), s"$suiteDir/sink_bad"))
 
     // ROUND-TRIP: the sharded layout reads back through the dialect
     // FROM (partition discovery recovers the shard column), so the

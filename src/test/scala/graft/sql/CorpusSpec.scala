@@ -13,7 +13,7 @@ import graft.SparkSpec
 class CorpusSpec extends SparkSpec {
 
   lazy val dir: Path = {
-    val d = Files.createTempDirectory("graftcorpus")
+    val d = freshDir("corpus")
     // parking.csv — cols per FIXTURES.md evidence table
     val hdr = (1 to 40).map(i => if (i == 7) "Issue Date" else s"h$i").mkString(",")
     val states = Seq("NY", "NJ", "VA", "FL", "MA")

@@ -200,7 +200,7 @@ class PlannerSpec extends SparkSpec {
     // two-file fixture: b.csv is LARGER (Spark's scan packs files by
     // size descending, so partition order would visit b first) but
     // lexicographically later — the contract says a.csv numbers first
-    val dir = java.nio.file.Files.createTempDirectory("graft_multifile")
+    val dir = freshDir("multifile")
     java.nio.file.Files.writeString(dir.resolve("a.csv"),
       "task\na1\na2\na3\n")
     java.nio.file.Files.writeString(dir.resolve("b.csv"),
@@ -222,7 +222,7 @@ class PlannerSpec extends SparkSpec {
     // b.csv is LARGER (size-desc packing scans it first — and when both
     // tiny files pack into ONE partition, its rows get the smaller mids)
     // but lexicographically later: the contract says a.csv's row wins
-    val dir = java.nio.file.Files.createTempDirectory("graft_distinct2f")
+    val dir = freshDir("distinct2f")
     java.nio.file.Files.writeString(dir.resolve("a.csv"),
       "key,src\nk1,a1\nk2,a2\n")
     java.nio.file.Files.writeString(dir.resolve("b.csv"),
@@ -240,7 +240,7 @@ class PlannerSpec extends SparkSpec {
     // same shape: bare `src` alongside count() must take the LAST row
     // in contract order = b.csv's final row per key, even though the
     // size-desc scan visits b.csv's rows first (smaller mids)
-    val dir = java.nio.file.Files.createTempDirectory("graft_lw2f")
+    val dir = freshDir("lw2f")
     java.nio.file.Files.writeString(dir.resolve("a.csv"),
       "key,src\nk1,a1\nk2,a2\n")
     java.nio.file.Files.writeString(dir.resolve("b.csv"),
@@ -257,7 +257,7 @@ class PlannerSpec extends SparkSpec {
   }
 
   test("JSON files in FROM: direct path and relative-to-dir resolution") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json")
+    val dir = freshDir("json")
     java.nio.file.Files.writeString(dir.resolve("items.json"),
       """{"a": 1, "b": "x"}
         |{"a": 7, "b": "y"}
@@ -276,7 +276,7 @@ class PlannerSpec extends SparkSpec {
   }
 
   test("ORC files in FROM: same query answers as the parquet original") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc")
+    val dir = freshDir("orc")
     val nation = spark.read.parquet(s"$sf0001/nation.parquet")
     nation.write.mode("overwrite").orc(dir.resolve("nation.orc").toString)
     val g = GraftSession(spark, sf0001)
@@ -292,7 +292,7 @@ class PlannerSpec extends SparkSpec {
   }
 
   test("XML files in FROM: direct path, relative resolution, <row> row tag") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_xml")
+    val dir = freshDir("xml")
     java.nio.file.Files.writeString(dir.resolve("items.xml"),
       """<rows>
         |  <row><a>1</a><b>x</b></row>
@@ -313,7 +313,7 @@ class PlannerSpec extends SparkSpec {
     // ext dispatch is case-insensitive, so Items.CSV loads — the
     // alias must strip '.CSV' too or qualified column resolution
     // breaks on the dotted name (review finding r4)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ucase")
+    val dir = freshDir("ucase")
     java.nio.file.Files.writeString(dir.resolve("Items.CSV"),
       "a,b\n1,x\n7,y\n3,z\n")
     val g2 = GraftSession(spark, sf0001)
@@ -526,7 +526,7 @@ class PlannerSpec extends SparkSpec {
   }
 
   test("pipeline statements run on inferred-schema CSV sources") {
-    val p = "/tmp/graft_stmt_docs.csv"
+    val p = s"$suiteDir/stmt_docs.csv"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
       """id,body
         |1,alpha beta gamma delta
@@ -707,7 +707,7 @@ class PlannerSpec extends SparkSpec {
 
   test("index/serve/repair-using statements: the persisted lifecycle end-to-end") {
     import org.apache.spark.sql.functions.{col, sum}
-    val p = "/tmp/graft_plannerspec_idx"
+    val p = s"$suiteDir/plannerspec_idx"
     // build: per-cell report covers the whole corpus
     val rep = g.sql(s"index vec_id, embedding from embeddings into '$p'")
     assert(rep.columns.toSeq == Seq("cell", "n_vecs"))
@@ -724,10 +724,10 @@ class PlannerSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     assert(viaIdx == inMem, "indexed repair must equal the in-memory path")
     // clean errors: missing index path, not-an-index directory
-    assertThrows[Exception](g.sql("serve vec_id, embedding from '/tmp/graft_nonexistent_idx'"))
+    assertThrows[Exception](g.sql(s"serve vec_id, embedding from '$suiteDir/nonexistent_idx'"))
     // external batch: every query routes to ONE cell and gets ≤ k hits
     import org.apache.spark.sql.functions.countDistinct
-    val qb = "/tmp/graft_plannerspec_qbatch"
+    val qb = s"$suiteDir/plannerspec_qbatch"
     g.sql("select vec_id, embedding from embeddings where vec_id < 7")
       .select((col("vec_id") + org.apache.spark.sql.functions.lit(5000L))
         .as("vec_id"), col("embedding"))
@@ -737,15 +737,15 @@ class PlannerSpec extends SparkSpec {
     assert(ext.agg(countDistinct(col("q_id"))).head.getLong(0) == 7L)
     assert(ext.filter(col("rank") > 2).count() == 0)
     assertThrows[Exception](
-      g.sql(s"serve vec_id, embedding from '$p' query '/tmp/graft_no_such_batch'"))
+      g.sql(s"serve vec_id, embedding from '$p' query '$suiteDir/no_such_batch'"))
   }
 
   test("ingest/compact statements: the append lifecycle end-to-end, clean errors") {
     import org.apache.spark.sql.functions.{col, lit, sum}
-    val p = "/tmp/graft_plannerspec_ing"
+    val p = s"$suiteDir/plannerspec_ing"
     g.sql(s"index vec_id, embedding from embeddings into '$p'")
     val n = g.sql("select vec_id from embeddings").count()
-    val ap = "/tmp/graft_plannerspec_arr"
+    val ap = s"$suiteDir/plannerspec_arr"
     g.sql("select vec_id, embedding from embeddings where vec_id < 7")
       .select((col("vec_id") + lit(7000L)).as("vec_id"), col("embedding"))
       .write.mode("overwrite").parquet(ap)
@@ -765,8 +765,8 @@ class PlannerSpec extends SparkSpec {
     assert(g.sql(s"serve vec_id, embedding from '$p' top 2").count() > 0)
     // clean errors: not-an-index paths
     assertThrows[Exception](
-      g.sql(s"ingest vec_id, embedding from '$ap' into '/tmp/graft_no_such_idx'"))
-    assertThrows[Exception](g.sql("compact '/tmp/graft_no_such_idx'"))
+      g.sql(s"ingest vec_id, embedding from '$ap' into '$suiteDir/no_such_idx'"))
+    assertThrows[Exception](g.sql(s"compact '$suiteDir/no_such_idx'"))
   }
 
   test("drift statement executes: self-drift is zero, builder-equal, clean errors") {

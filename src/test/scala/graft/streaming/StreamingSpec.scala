@@ -111,8 +111,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("continuous shard landing assigns every doc its batch shard") {
-    val out = "/tmp/graft_stream_shards"
-    val ckpt = "/tmp/graft_stream_shards_ckpt"
+    val out = s"$suiteDir/stream_shards"
+    val ckpt = s"$suiteDir/stream_shards_ckpt"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
     val q = StreamingOps.streamShards(
@@ -187,7 +187,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("realtime CSV export writes streamed rows to disk") {
-    val out = java.nio.file.Files.createTempDirectory("graftstream")
+    val out = freshDir("stream")
     val q = StreamingOps.saveRealtimeCsv(
       StreamingOps.readEvents(spark, sf0001)
         .select("event_id", "ts", "event_type", "value"),
@@ -459,7 +459,7 @@ class StreamingSpec extends SparkSpec {
     val e = Tables(spark, sf0001, "embeddings")
       .select(col("vec_id"), col("embedding"))
     // batch reference: v47's shape on a fresh layout
-    val bPath = "/tmp/graft_spec_sup_batch"
+    val bPath = s"$suiteDir/spec_sup_batch"
     val centers = IvfIndex.build(e, bPath)
     val arrivals = e.filter(col("vec_id") % 7 === 3)
       .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("embedding"))
@@ -496,7 +496,7 @@ class StreamingSpec extends SparkSpec {
     import graft.queries.VectorQueries
     val e = Tables(spark, sf0001, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val path = "/tmp/graft_spec_sup_pq"
+    val path = s"$suiteDir/spec_sup_pq"
     val centers = IvfIndex.build(e, path, pq = true)
     val side = IvfIndex.readSidecar(spark, path).get
     // assignment AND encoding are stateless projections, so the same
@@ -541,11 +541,11 @@ class StreamingSpec extends SparkSpec {
     import graft.queries.VectorQueries
     val e = Tables(spark, sf0001, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val path = "/tmp/graft_spec_sam_idx"
+    val path = s"$suiteDir/spec_sam_idx"
     val centers = IvfIndex.build(e, path)
     // stage 6 pre-assigned arrival batches as one file each, so
     // maxFilesPerTrigger=1 replays them as 6 distinct micro-batches
-    val src = "/tmp/graft_spec_sam_src"
+    val src = s"$suiteDir/spec_sam_src"
     val dir = java.nio.file.Paths.get(src)
     if (java.nio.file.Files.isDirectory(dir)) {
       import scala.jdk.CollectionConverters._
@@ -616,7 +616,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.IvfIndex
     val e = Tables(spark, sf0001, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val path = "/tmp/graft_spec_serveonline_idx"
+    val path = s"$suiteDir/spec_serveonline_idx"
     IvfIndex.build(e, path, pq = true)
     val side = IvfIndex.readSidecar(spark, path).get
     val q0 = e.filter(col("vec_id") % 7 === 2)
@@ -630,8 +630,8 @@ class StreamingSpec extends SparkSpec {
           .foreach(java.nio.file.Files.delete)
       }
     }
-    val qdir = "/tmp/graft_spec_serveonline_q"
-    val out = "/tmp/graft_spec_serveonline_out"
+    val qdir = s"$suiteDir/spec_serveonline_q"
+    val out = s"$suiteDir/spec_serveonline_out"
     wipe(qdir); wipe(out)
     (0 until 3).foreach(i => q0.filter(pmod(col("q_id"), lit(3)) === i)
       .coalesce(1).write.mode("append").parquet(qdir))
@@ -660,7 +660,7 @@ class StreamingSpec extends SparkSpec {
     import graft.queries.VectorQueries
     val e = Tables(spark, sf0001, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val path = "/tmp/graft_spec_serveonline_pending"
+    val path = s"$suiteDir/spec_serveonline_pending"
     val centers = IvfIndex.build(e, path, pq = true)
     // leave un-compacted appended rows behind
     val side0 = IvfIndex.readSidecar(spark, path).get
@@ -673,10 +673,10 @@ class StreamingSpec extends SparkSpec {
     val stream = spark.readStream
       .schema(e.select(col("vec_id").as("q_id"),
         col("embedding").as("q_emb")).schema)
-      .parquet("/tmp/graft_spec_serveonline_q")
+      .parquet(s"$suiteDir/spec_serveonline_q")
     val err = intercept[IllegalArgumentException] {
       graft.streaming.StreamingOps.serveOnline(
-        spark, stream, path, 5, 20, "/tmp/graft_spec_serveonline_out2")
+        spark, stream, path, 5, 20, s"$suiteDir/spec_serveonline_out2")
     }
     assert(err.getMessage.contains("un-compacted appends"))
   }
@@ -692,7 +692,7 @@ class StreamingSpec extends SparkSpec {
     import graft.queries.VectorQueries
     val e = Tables(spark, sf0001, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val path = "/tmp/graft_spec_serveonline_mut"
+    val path = s"$suiteDir/spec_serveonline_mut"
     val centers = IvfIndex.build(e, path, pq = true)
     val side = IvfIndex.readSidecar(spark, path).get
     val q0 = e.filter(col("vec_id") % 7 === 2)
@@ -706,8 +706,8 @@ class StreamingSpec extends SparkSpec {
           .foreach(java.nio.file.Files.delete)
       }
     }
-    val qdir = "/tmp/graft_spec_serveonline_mut_q"
-    val out = "/tmp/graft_spec_serveonline_mut_out"
+    val qdir = s"$suiteDir/spec_serveonline_mut_q"
+    val out = s"$suiteDir/spec_serveonline_mut_out"
     wipe(qdir); wipe(out)
     // batch 1's file exists at start; a ProcessingTime trigger keeps
     // the stream alive for files landing AFTER the index mutation
@@ -759,7 +759,7 @@ class StreamingSpec extends SparkSpec {
     import graft.queries.VectorQueries
     val e = Tables(spark, sf0001, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val path = "/tmp/graft_spec_serveonline_follow"
+    val path = s"$suiteDir/spec_serveonline_follow"
     val centers = IvfIndex.build(e, path, pq = true)
     val side0 = IvfIndex.readSidecar(spark, path).get
     def wipe(p: String): Unit = {
@@ -770,8 +770,8 @@ class StreamingSpec extends SparkSpec {
           .foreach(java.nio.file.Files.delete)
       }
     }
-    val qdir = "/tmp/graft_spec_serveonline_follow_q"
-    val out = "/tmp/graft_spec_serveonline_follow_out"
+    val qdir = s"$suiteDir/spec_serveonline_follow_q"
+    val out = s"$suiteDir/spec_serveonline_follow_out"
     wipe(qdir); wipe(out)
     val q1 = e.filter(col("vec_id") % 7 === 2)
       .select((col("vec_id") + lit(1000000L)).as("q_id"),
@@ -860,7 +860,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.IvfIndex
     val e = Tables(spark, sf0001, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val path = "/tmp/graft_spec_serveonline_window"
+    val path = s"$suiteDir/spec_serveonline_window"
     IvfIndex.build(e, path, pq = true)
     val side = IvfIndex.readSidecar(spark, path).get
     def wipe(p: String): Unit = {
@@ -871,9 +871,9 @@ class StreamingSpec extends SparkSpec {
           .foreach(java.nio.file.Files.delete)
       }
     }
-    val qdir = "/tmp/graft_spec_serveonline_window_q"
-    val out = "/tmp/graft_spec_serveonline_window_out"
-    val stash = java.nio.file.Paths.get("/tmp/graft_spec_serveonline_window_stash")
+    val qdir = s"$suiteDir/spec_serveonline_window_q"
+    val out = s"$suiteDir/spec_serveonline_window_out"
+    val stash = java.nio.file.Paths.get(s"$suiteDir/spec_serveonline_window_stash")
     wipe(qdir); wipe(out); wipe(stash.toString)
     java.nio.file.Files.createDirectories(stash)
     val q1 = e.filter(col("vec_id") % 7 === 2)
@@ -944,7 +944,7 @@ class StreamingSpec extends SparkSpec {
     import graft.queries.VectorQueries
     val e = Tables(spark, sf0001, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val path = "/tmp/graft_spec_serveonline_grace"
+    val path = s"$suiteDir/spec_serveonline_grace"
     val centers = IvfIndex.build(e, path, pq = true)
     val side0 = IvfIndex.readSidecar(spark, path).get
     def wipe(p: String): Unit = {
@@ -955,8 +955,8 @@ class StreamingSpec extends SparkSpec {
           .foreach(java.nio.file.Files.delete)
       }
     }
-    val qdir = "/tmp/graft_spec_serveonline_grace_q"
-    val out = "/tmp/graft_spec_serveonline_grace_out"
+    val qdir = s"$suiteDir/spec_serveonline_grace_q"
+    val out = s"$suiteDir/spec_serveonline_grace_out"
     wipe(qdir); wipe(out)
     val q1 = e.filter(col("vec_id") % 7 === 2)
       .select((col("vec_id") + lit(1000000L)).as("q_id"),
@@ -1011,7 +1011,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.IvfIndex
     val e = Tables(spark, sf0001, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val path = "/tmp/graft_spec_serveonline_genuine"
+    val path = s"$suiteDir/spec_serveonline_genuine"
     IvfIndex.build(e, path, pq = true)
     def wipe(p: String): Unit = {
       val d = java.nio.file.Paths.get(p)
@@ -1021,8 +1021,8 @@ class StreamingSpec extends SparkSpec {
           .foreach(java.nio.file.Files.delete)
       }
     }
-    val qdir = "/tmp/graft_spec_serveonline_genuine_q"
-    val out = "/tmp/graft_spec_serveonline_genuine_out"
+    val qdir = s"$suiteDir/spec_serveonline_genuine_q"
+    val out = s"$suiteDir/spec_serveonline_genuine_out"
     wipe(qdir); wipe(out)
     // a permanently broken gather: every cell directory gone, header
     // intact, and nobody ever commits a new generation

@@ -7,7 +7,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, FloatType, TimestampType}
-import org.scalatest.BeforeAndAfterAll
 
 import graft.{SparkEntry, SparkSpec}
 import graft.core.Tables
@@ -16,9 +15,9 @@ import graft.queries.Registry
 /** ScaleDir's output contract: N key-shifted copies that replicate
   * joins inside a copy, split into many files, readable through
   * Tables with the source schema. */
-class ScaleDirSpec extends SparkSpec with BeforeAndAfterAll {
+class ScaleDirSpec extends SparkSpec {
 
-  private lazy val root: Path = Files.createTempDirectory("graft_scaledir")
+  private lazy val root: Path = freshDir("scaledir")
   private lazy val two: String = {
     val d = root.resolve("x2").toString
     ScaleDir.write(spark, sf0001, 2, d); d
@@ -26,11 +25,6 @@ class ScaleDirSpec extends SparkSpec with BeforeAndAfterAll {
   private lazy val one: String = {
     val d = root.resolve("x1").toString
     ScaleDir.write(spark, sf0001, 1, d); d
-  }
-
-  override def afterAll(): Unit = {
-    Files.walk(root).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    super.afterAll()
   }
 
   /** The key columns every copy shifts, stated here rather than read
