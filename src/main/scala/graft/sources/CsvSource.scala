@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.CellKernels.csv_cell
 import graft.sql.Durations
 
 /** CSV source with the reference's schema-inference semantics
@@ -17,8 +18,9 @@ import graft.sql.Durations
   *  - headerless files (`nh`) get col1..colN names.
   *
   * The sample is a bounded driver-side collect (10k rows — same bound
-  * as the reference); the *cast* of the full data is distributed
-  * column algebra, so the scan itself stays parallel at any scale.
+  * as the reference); the *cast* of the full data is one distributed
+  * native expression per column (graft.functions.CsvCell), so the scan
+  * itself stays parallel at any scale.
   */
 object CsvSource {
   sealed abstract class LatType(val rank: Int)
@@ -29,20 +31,49 @@ object CsvSource {
   case object LDur extends LatType(4)
   case object LStr extends LatType(5)
 
-  private val leadingZeroInt = """^0\d+$""".r
-  private val intRe = """^[+-]?\d+$""".r
-  private val floatRe = """^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$""".r
-
   /** Narrowest lattice type of one cell (reference getNarrowestType). */
   def narrowest(cell: String): LatType = {
     val v = cell.trim
     if (v.isEmpty || v.equalsIgnoreCase("null") || v == "NA") LNull
-    else if (leadingZeroInt.matches(v)) LStr
-    else if (intRe.matches(v)) LInt
-    else if (floatRe.matches(v)) LFloat
-    else if (Durations.parse(v).isDefined) LDur
-    else if (parseDate(v).isDefined) LDate
-    else LStr
+    else numeric(v) match {
+      case null =>
+        if (Durations.parse(v).isDefined) LDur
+        else if (parseDate(v).isDefined) LDate
+        else LStr
+      case t => t
+    }
+  }
+
+  /** The numeric shapes in one scan over ASCII digits: `[+-]?\d+` is
+    * LInt, except an unsigned `0\d+` (a leading-zero id, reference
+    * utils.go:385-386), which is LStr; `[+-]?(\d+\.?\d*|\.\d+)`
+    * with an optional `[eE][+-]?\d+` is LFloat; anything else is null. */
+  private def numeric(v: String): LatType = {
+    val n = v.length
+    def digitsFrom(i: Int): Int = {
+      var j = i
+      while (j < n && v.charAt(j) >= '0' && v.charAt(j) <= '9') j += 1
+      j
+    }
+    val signed = v.charAt(0) == '+' || v.charAt(0) == '-'
+    val a = if (signed) 1 else 0
+    var i = digitsFrom(a)
+    val intDigits = i - a
+    if (i == n && intDigits > 0)
+      return if (!signed && intDigits > 1 && v.charAt(0) == '0') LStr else LInt
+    var mantissa = intDigits > 0
+    if (i < n && v.charAt(i) == '.') {
+      val j = digitsFrom(i + 1)
+      mantissa ||= j > i + 1
+      i = j
+    }
+    if (!mantissa) return null
+    if (i < n && (v.charAt(i) == 'e' || v.charAt(i) == 'E')) {
+      val s = if (i + 1 < n && (v.charAt(i + 1) == '+' || v.charAt(i + 1) == '-')) i + 2 else i + 1
+      i = digitsFrom(s)
+      if (i == s) return null
+    }
+    if (i == n) LFloat else null
   }
 
   /** Permissive date parsing (the reference uses dateparse.ParseAny) —
@@ -59,12 +90,6 @@ object CsvSource {
         Math.floorDiv(us.longValue, 1000000L),
         (Math.floorMod(us.longValue, 1000000L) * 1000L).toInt,
         java.time.ZoneOffset.UTC))
-
-  /** Spark-side date cast mirroring [[parseDate]]'s pattern chain —
-    * one native expression instead of an 8-way try_to_timestamp
-    * coalesce (graft.functions.ParseAnyTimestamp). */
-  private def castDate(c: Column): Column =
-    graft.functions.ParseAnyTimestamp.parse_any_ts(c)
 
   /** Spark-side duration cast: `N unit` and compact Go forms
     * (`1h30m`, `-1h30m`, `100ms`) to DayTimeIntervalType — column
@@ -112,11 +137,6 @@ object CsvSource {
     when(secs.isNotNull, make_dt_interval(lit(0), lit(0), lit(0), secs))
   }
 
-  private def nullify(c: Column): Column = {
-    val t = trim(c)
-    when(t === "" || lower(t) === "null" || t === "NA", lit(null)).otherwise(t)
-  }
-
   /** Widest lattice type over one column's sampled cells (null cells
     * as ""). LStr is the top of the lattice, so classification stops
     * at the first cell that saturates the column — the remaining
@@ -156,18 +176,19 @@ object CsvSource {
       columnType(sample.iterator.map(row => if (row.isNullAt(i)) "" else row.getString(i)))
     }
 
+    // one native kernel per cell: trim, null recognition and the
+    // parse in one pass. A cell outside the sampled type becomes null
+    // instead of failing the scan (the reference zeroes unparseable
+    // cells, selector.go:305-322 — null is our analog; one bad cell
+    // must never kill a 100 TB read)
     val cols = raw.columns.zip(types).map { case (name, t) =>
-      val base = nullify(col(name))
-      // try_cast: cells outside the sampled type become null instead of
-      // failing the scan under ANSI mode (the reference zeroes
-      // unparseable cells, selector.go:305-322 — null is our analog;
-      // one bad cell must never kill a 100 TB read)
+      val c = col(name)
       (t match {
-        case LNull | LStr => base
-        case LInt => base.try_cast(LongType)
-        case LFloat => base.try_cast(DoubleType)
-        case LDate => castDate(base)
-        case LDur => castDuration(base)
+        case LNull | LStr => csv_cell(c, StringType)
+        case LInt => csv_cell(c, LongType)
+        case LFloat => csv_cell(c, DoubleType)
+        case LDate => csv_cell(c, TimestampNTZType)
+        case LDur => castDuration(csv_cell(c, StringType))
       }).as(name)
     }
     raw.select(cols.toSeq: _*)

@@ -19,13 +19,8 @@ object Sinks {
       val c = col(f.name)
       (f.dataType match {
         case _: DoubleType | _: FloatType =>
-          // Go %.10g strips trailing zeros (reference value.go:494);
-          // Java %g keeps them — normalize to the Go form
-          val g = format_string("%.10g", c)
-          val noExpZeros = regexp_replace(g, "\\.?0+e", "e")
-          val plain = regexp_replace(regexp_replace(g, "(\\.\\d*?)0+$", "$1"), "\\.$", "")
-          when(c.isNull, lit(null))
-            .otherwise(when(g.contains("e"), noExpZeros).otherwise(plain))
+          // %.10g with trailing zeros stripped (reference value.go:494)
+          graft.functions.CellKernels.format_g10(c)
         case _: TimestampType | _: TimestampNTZType =>
           // reference formats dates with Go's "2006-01-02 15:04:05"
           // layout — seconds precision, fraction dropped (value.go:494);

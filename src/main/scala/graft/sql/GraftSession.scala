@@ -117,7 +117,11 @@ final class GraftSession(val spark: SparkSession, defaultDir: Option[String] = N
           // no-exchange sort-merge join (the 100 TB fact-fact path,
           // SCALE_r3: 3.1×). A plain path read would lose the
           // bucketing and shuffle both sides every query.
-          defaultDir.flatMap(d => scala.util.Try(Tables(spark, d, key)).toOption) match {
+          // An absolute path names its own file, never a data-dir
+          // table: probing `<dir>/<abs path>.parquet` first would cost
+          // each fresh session a failed read.
+          val inDir = if (new java.io.File(name).isAbsolute) None else defaultDir
+          inDir.flatMap(d => scala.util.Try(Tables(spark, d, key)).toOption) match {
             case Some(df) => register(key, df); df
             case None if new java.io.File(resolvePath(name)).isDirectory =>
               // an extensionless DIRECTORY path is a written dataset —

@@ -20,7 +20,8 @@ import org.apache.spark.scheduler._
   * that lists it, the job the DAG scheduler submits it for.
   *
   * Per tag it keeps running counts and one row per job; `reset` starts
-  * a tag's window afresh. */
+  * a tag's window afresh. A job tagged by a watched group keeps its row
+  * only while it runs, and a succeeded one drops its stages too. */
 final class JobListener(groups: Set[String] = Set.empty) extends SparkListener {
   import JobListener._
 
@@ -44,7 +45,18 @@ final class JobListener(groups: Set[String] = Set.empty) extends SparkListener {
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit =
-    Option(jobs.get(e.jobId)).foreach(_.end = e.time)
+    Option(jobs.get(e.jobId)).foreach { j =>
+      j.end = e.time
+      // a watched group is read only through `totals` and `activeJobs`:
+      // keeping its finished rows would grow without bound on a server
+      // that never goes idle, and slow every stage submission's scan.
+      // A failed or cancelled job's killed tasks end after the job
+      // does, so its stages stay, to be counted, until the next reset.
+      if (groups(j.tag)) {
+        jobs.remove(j.id)
+        if (e.jobResult == JobSucceeded) j.stageIds.foreach(stages.remove)
+      }
+    }
 
   override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
     val tag = tagOf(e.properties)

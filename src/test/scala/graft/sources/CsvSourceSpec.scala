@@ -145,6 +145,55 @@ class CsvSourceSpec extends SparkSpec {
     }
   }
 
+  // ---- sampler numeric scan -----------------------------------------
+
+  /** The regex classification the sampler's char scan replaced. */
+  private def regexNarrowest(cell: String): CsvSource.LatType = {
+    import CsvSource._
+    val leadingZeroInt = """^0\d+$""".r
+    val intRe = """^[+-]?\d+$""".r
+    val floatRe = """^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$""".r
+    val v = cell.trim
+    if (v.isEmpty || v.equalsIgnoreCase("null") || v == "NA") LNull
+    else if (leadingZeroInt.matches(v)) LStr
+    else if (intRe.matches(v)) LInt
+    else if (floatRe.matches(v)) LFloat
+    else if (Durations.parse(v).isDefined) LDur
+    else if (parseDate(v).isDefined) LDate
+    else LStr
+  }
+
+  private def sameAsRegex(cells: Iterable[String]): Unit = cells.foreach { c =>
+    assert(CsvSource.narrowest(c) == regexNarrowest(c), s"'$c'")
+  }
+
+  test("sampler scan equals the regex classification: named shapes") {
+    sameAsRegex(Seq("5", "+5", "-5", "+", "-", ".5", "5.", ".", "-.5", "+5.e3", "5.5.5",
+      "1e5", "1E+5", "1e-05", "1e", "1e+", "e5", ".e5", "1.5e5.5", "0", "00", "007", "-007",
+      "+007", "0.5", "007.5", "0e5", " 42 ", "\t42", "42\n", "4 2", "١٢٣", "٣.٥", "１２３",
+      "12a", "0x10", "1d", "Infinity", "NaN", "1,000", "1h", "2020-01-02", "null", "NA"))
+  }
+
+  test("sampler scan equals the regex classification: every cell of up to 4 symbols") {
+    val alphabet = Seq("0", "7", "+", "-", ".", "e", "E", " ", "\t", "١", "x")
+    val cells = (1 to 4).scanLeft(Seq("")) { (prev, _) =>
+      for (p <- prev; a <- alphabet) yield p + a
+    }.flatten
+    assert(cells.size == 16105)
+    sameAsRegex(cells)
+  }
+
+  test("sampler scan equals the regex classification: seeded random cells") {
+    import org.scalacheck.Gen
+    val sym = Gen.frequency(8 -> Gen.numChar, 2 -> Gen.oneOf('+', '-', '.', 'e', 'E', ' '),
+      1 -> Gen.oneOf('\t', '٣', 'a', '０'))
+    val cell = Gen.choose(0, 12).flatMap(n => Gen.listOfN(n, sym)).map(_.mkString)
+    val cells = (0 until 5000).flatMap(i =>
+      cell(Gen.Parameters.default, org.scalacheck.rng.Seed(20261018L + i)))
+    assert(cells.size == 5000)
+    sameAsRegex(cells)
+  }
+
   // ---- inferred-relation cache --------------------------------------
 
   test("cache hit: an unchanged file returns the same relation with 0 Spark jobs") {

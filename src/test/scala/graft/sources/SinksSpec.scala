@@ -190,4 +190,34 @@ class SinksSpec extends SparkSpec {
     assert(counts.agg(org.apache.spark.sql.functions.sum(col("n")))
       .collect()(0).getDouble(0) == layout.count().toDouble)
   }
+
+  test("export in miniature: both CSV savers read back through CsvSource") {
+    import spark.implicits._
+    import java.time.LocalDateTime
+    val ts = LocalDateTime.parse("2024-01-02T03:04:05.678")
+    val df = Seq(
+      (1L, Some(9007199254740993L), Some(1234.5), Some(0.1f), Double.NaN, Some(ts), "a,b"),
+      (2L, Some(-5L), Some(0.1 + 0.2), Some(3.0f), Double.PositiveInfinity,
+        Some(ts.plusDays(40)), "NA"),
+      (3L, Some(0L), Some(1e20), Some(-2.5f), -0.0, None, "  pad "),
+      (4L, None, None, None, 1.5e-7, Some(ts.minusYears(30)), "x"))
+      .toDF("id", "big", "price", "ratio", "odd", "ts", "name")
+    val wantTypes = Seq("id" -> "long", "big" -> "long", "price" -> "double",
+      "ratio" -> "double", "odd" -> "string", "ts" -> "timestamp_ntz", "name" -> "string")
+    val sec = LocalDateTime.parse("2024-01-02T03:04:05")
+    // doubles come back at %.10g; a column holding NaN or Infinity
+    // comes back as strings; seconds precision; "NA" and "" are null
+    val wantRows = Seq(
+      Seq(1L, 9007199254740993L, 1234.5, 0.1000000015, "NaN", sec, "a,b"),
+      Seq(2L, -5L, 0.3, 3.0, "Infinity", sec.plusDays(40), null),
+      Seq(3L, 0L, 1e20, -2.5, "-0", null, "pad"),
+      Seq(4L, null, null, null, "1.5e-07", sec.minusYears(30), "x"))
+    def back(path: String): Unit = {
+      val r = CsvSource.read(spark, path)
+      assert(r.schema.fields.map(f => f.name -> f.dataType.typeName).toSeq == wantTypes, path)
+      assert(r.orderBy("id").collect().map(_.toSeq).toSeq == wantRows, path)
+    }
+    back(Sinks.saveCsvStreaming(df, s"$suiteDir/rt_stream"))
+    back(Sinks.saveCsvDir(df.repartition(2), s"$suiteDir/rt_dir"))
+  }
 }

@@ -952,6 +952,21 @@ class PlannerSpec extends SparkSpec {
       "every column reports the same row count")
   }
 
+  test("an absolute extensionless FROM path is read as itself, never probed under the data dir") {
+    import spark.implicits._
+    val data = freshDir("absdata").toString
+    val target = s"$suiteDir/abs_work/t"
+    Seq(1L, 2L, 3L).toDF("v").write.parquet(target)
+    // a decoy where a data-dir probe of the path would look
+    Seq(99L).toDF("v").write.parquet(s"$data/${target.toLowerCase}.parquet")
+    val got = GraftSession(spark, data).sql(s"select v from $target").as[Long].collect()
+    assert(got.sorted.toSeq == Seq(1L, 2L, 3L))
+    // a colon before any slash is no URI scheme to the absoluteness
+    // test: the name reaches the catalog lookup, which rejects it
+    val e = intercept[Exception](GraftSession(spark, data).table("a:b"))
+    assert(!String.valueOf(e.getMessage).contains("URI"), e)
+  }
+
   test("nested session() gets a dedicated error, not 'not allowed here'") {
     val e = intercept[Exception] {
       g.sql("select session(ts, '30 minutes', session(ts, '1 hours', user_id)) from events")

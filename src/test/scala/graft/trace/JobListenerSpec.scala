@@ -74,11 +74,44 @@ class JobListenerSpec extends SparkSpec {
     assert(tasks == 15)
     assert(listener.jobRows("t").size == 1 && listener.totals("t").tasks.get == 3)
     assert(listener.jobRows("other").size == 1 && listener.totals("other").tasks.get == 3)
-    assert(listener.jobRows("watched").size == 1 && listener.totals("watched").tasks.get == 3)
+    // a watched group keeps counts, not rows, once its jobs end
+    assert(listener.jobRows("watched").isEmpty && listener.totals("watched").tasks.get == 3)
     assert(listener.jobRows("unwatched").isEmpty && listener.totals("unwatched").tasks.get == 0)
     listener.reset("t")
     assert(listener.jobRows("t").isEmpty && listener.totals("t").tasks.get == 0)
     assert(listener.jobRows("other").size == 1, "a reset touches one tag only")
+  }
+
+  test("a watched group keeps no rows for its finished jobs: 200 jobs, no reset") {
+    val listener = new JobListener(Set("watched"))
+    val sc = spark.sparkContext
+    val (tasks, _, _) = watch(listener) {
+      sc.setJobGroup("watched", "watched")
+      try (1 to 200).foreach(_ => sc.parallelize(1 to 4, 2).count())
+      finally sc.clearJobGroup()
+    }
+    assert(tasks == 400)
+    assert(listener.jobRows("watched").isEmpty && listener.activeJobs("watched") == 0)
+    val t = listener.totals("watched")
+    assert(t.tasks.get == 400 && t.submitted.get == 400)
+  }
+
+  test("a failed watched-group job still counts the tasks that end after it") {
+    val listener = new JobListener(Set("watched"))
+    val sc = spark.sparkContext
+    watch(listener) {
+      sc.setJobGroup("watched", "watched")
+      // one task throws at once; its sibling ends after the job has failed
+      try intercept[Exception] {
+        sc.parallelize(0 until 2, 2).foreach { i =>
+          if (i == 0) throw new IllegalStateException("boom") else Thread.sleep(1500)
+        }
+      } finally sc.clearJobGroup()
+      Thread.sleep(2500) // the sibling's end, well past the job's
+    }
+    val t = listener.totals("watched")
+    assert(t.submitted.get == 2 && t.tasks.get == 2, (t.submitted.get, t.tasks.get))
+    assert(listener.jobRows("watched").isEmpty && listener.activeJobs("watched") == 0)
   }
 
   test("a Profile record's phases sum to its wall, with no error") {
