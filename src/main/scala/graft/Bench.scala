@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Sessions
+import graft.core.{Materialize, Sessions}
 import graft.queries.Registry
 
 /** Per-round benchmark: times the headline queries (Registry bench
@@ -24,9 +24,10 @@ object Bench {
     val spark = Sessions.start()
 
     val bench = Registry.benchQueries
-    def materialize(name: String): Unit =
+    def materialize(name: String): Unit = Materialize.statement {
       Registry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
+    }
 
     // warm-up (untimed); per-query guard so one failure can't abort
     // the round's benchmark before the JSON line prints

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-import graft.core.Sessions
+import graft.core.{Materialize, Sessions}
 import graft.sql.{GraftSession, Parser, Planner}
 import graft.sources.Sinks
 
@@ -94,88 +94,90 @@ object Cli {
 
     val spark = Sessions.start()
 
-    val statements = Parser.splitStatements(q)
-    val results = runWithPrompt(password,
-      // readPassword returns null on EOF (Ctrl-D): degrade to None so
-      // the original "password required" PlanError surfaces, not an NPE
-      () => Option(System.console())
-        .flatMap(c => Option(c.readPassword("password: ")))
-        .map(new String(_))) { pw =>
-      val session = new GraftSession(spark, dir, pw)
-      statements.map(session.sql)
-    }
-    if (explainOnly) {
-      // plan inspection without execution — the CLI twin of the web
-      // console's POST /explain/: formatted physical plans show
-      // PushedFilters/PartitionFilters/broadcasts before any job runs
-      results.zipWithIndex.foreach { case (df, i) =>
-        println(s"-- statement ${i + 1} --")
-        println(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
+    Materialize.statement { // planning through the last save or print
+      val statements = Parser.splitStatements(q)
+      val results = runWithPrompt(password,
+        // readPassword returns null on EOF (Ctrl-D): degrade to None so
+        // the original "password required" PlanError surfaces, not an NPE
+        () => Option(System.console())
+          .flatMap(c => Option(c.readPassword("password: ")))
+          .map(new String(_))) { pw =>
+        val session = new GraftSession(spark, dir, pw)
+        statements.map(session.sql)
       }
-      spark.stop(); return
-    }
-    if (Seq(save, saveDir, saveShards, saveParquet, saveJsonl).count(_.isDefined) > 1)
-      sys.error("--save, --save-dir, --save-shards, --save-parquet and --save-jsonl are mutually exclusive")
-    if (partitionBy.isDefined && saveParquet.isEmpty)
-      sys.error("--partition-by requires --save-parquet")
-    if (coalesceN.isDefined && saveParquet.isEmpty && saveDir.isEmpty &&
-        saveJsonl.isEmpty)
-      sys.error("--coalesce requires --save-parquet, --save-jsonl or --save-dir")
-    if (coalesceN.exists(_ < 1)) sys.error("--coalesce must be at least 1")
-    (save, saveDir) match {
-      case _ if saveParquet.isDefined =>
-        // parquet dataset per statement — the format a downstream
-        // Spark/training loader actually reads; parallel write.
-        // --partition-by lands hive-style <col>=v/ dirs so downstream
-        // dialect filters on that column become PARTITION filters
-        // (pruned listings, never a full scan — pinned in PlanSpec)
-        val base = saveParquet.get
-        Sinks.savePaths(base, results.size).map(_.stripSuffix(".csv"))
-          .zip(results).foreach { case (p, df) =>
-            // --coalesce N caps output files — the small-files
-            // compaction primitive: `-c "select * from <dir>"
-            // --save-parquet <dest> --coalesce 8` rewrites a
-            // fragmented dataset into N files without a shuffle
-            val dfn = coalesceN.fold(df)(df.coalesce)
-            val w = dfn.write.mode("overwrite")
-            partitionBy.fold(w)(c => w.partitionBy(c.split(",").toIndexedSeq: _*))
-              .parquet(p)
-            System.err.println(s"saved $p/")
-          }
-      case _ if saveJsonl.isDefined =>
-        // JSON-lines dataset per statement — the interchange format of
-        // most open text-corpus releases; parallel partitioned write
-        val base = saveJsonl.get
-        Sinks.savePaths(base, results.size).map(_.stripSuffix(".csv"))
-          .zip(results).foreach { case (p, df) =>
-            coalesceN.fold(df)(df.coalesce).write.mode("overwrite").json(p)
-            System.err.println(s"saved $p/")
-          }
-      case _ if saveShards.isDefined =>
-        // physical training-shard layout: requires the `shard`
-        // statement's (doc_id, shard, pos) output; lands sorted
-        // shard=K/ parquet dirs (Sinks.saveShardedResult)
-        val base = saveShards.get
-        Sinks.savePaths(base, results.size).map(_.stripSuffix(".csv"))
-          .zip(results).foreach { case (p, df) =>
-            Sinks.saveShardedResult(df, p); System.err.println(s"saved $p/")
-          }
-      case (Some(base), _) =>
-        // streaming form: rows reach the file as the query runs, like
-        // the reference's realtime save (files.go:85-156)
-        Sinks.savePaths(base, results.size).zip(results).foreach {
-          case (p, df) => Sinks.saveCsvStreaming(df, p); System.err.println(s"saved $p")
+      if (explainOnly) {
+        // plan inspection without execution — the CLI twin of the web
+        // console's POST /explain/: formatted physical plans show
+        // PushedFilters/PartitionFilters/broadcasts before any job runs
+        results.zipWithIndex.foreach { case (df, i) =>
+          println(s"-- statement ${i + 1} --")
+          println(df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
         }
-      case (None, Some(base)) =>
-        // parallel mode: each partition writes its own part file
-        Sinks.savePaths(base, results.size).map(_.stripSuffix(".csv"))
-          .zip(results).foreach { case (p, df) =>
-            Sinks.saveCsvDir(coalesceN.fold(df)(df.coalesce), p)
-            System.err.println(s"saved $p/")
-          }
-      case _ =>
-        results.foreach(Sinks.printCsv(_))
+      } else {
+        if (Seq(save, saveDir, saveShards, saveParquet, saveJsonl).count(_.isDefined) > 1)
+          sys.error("--save, --save-dir, --save-shards, --save-parquet and --save-jsonl are mutually exclusive")
+        if (partitionBy.isDefined && saveParquet.isEmpty)
+          sys.error("--partition-by requires --save-parquet")
+        if (coalesceN.isDefined && saveParquet.isEmpty && saveDir.isEmpty &&
+            saveJsonl.isEmpty)
+          sys.error("--coalesce requires --save-parquet, --save-jsonl or --save-dir")
+        if (coalesceN.exists(_ < 1)) sys.error("--coalesce must be at least 1")
+        (save, saveDir) match {
+          case _ if saveParquet.isDefined =>
+            // parquet dataset per statement — the format a downstream
+            // Spark/training loader actually reads; parallel write.
+            // --partition-by lands hive-style <col>=v/ dirs so downstream
+            // dialect filters on that column become PARTITION filters
+            // (pruned listings, never a full scan — pinned in PlanSpec)
+            val base = saveParquet.get
+            Sinks.savePaths(base, results.size).map(_.stripSuffix(".csv"))
+              .zip(results).foreach { case (p, df) =>
+                // --coalesce N caps output files — the small-files
+                // compaction primitive: `-c "select * from <dir>"
+                // --save-parquet <dest> --coalesce 8` rewrites a
+                // fragmented dataset into N files without a shuffle
+                val dfn = coalesceN.fold(df)(df.coalesce)
+                val w = dfn.write.mode("overwrite")
+                partitionBy.fold(w)(c => w.partitionBy(c.split(",").toIndexedSeq: _*))
+                  .parquet(p)
+                System.err.println(s"saved $p/")
+              }
+          case _ if saveJsonl.isDefined =>
+            // JSON-lines dataset per statement — the interchange format of
+            // most open text-corpus releases; parallel partitioned write
+            val base = saveJsonl.get
+            Sinks.savePaths(base, results.size).map(_.stripSuffix(".csv"))
+              .zip(results).foreach { case (p, df) =>
+                coalesceN.fold(df)(df.coalesce).write.mode("overwrite").json(p)
+                System.err.println(s"saved $p/")
+              }
+          case _ if saveShards.isDefined =>
+            // physical training-shard layout: requires the `shard`
+            // statement's (doc_id, shard, pos) output; lands sorted
+            // shard=K/ parquet dirs (Sinks.saveShardedResult)
+            val base = saveShards.get
+            Sinks.savePaths(base, results.size).map(_.stripSuffix(".csv"))
+              .zip(results).foreach { case (p, df) =>
+                Sinks.saveShardedResult(df, p); System.err.println(s"saved $p/")
+              }
+          case (Some(base), _) =>
+            // streaming form: rows reach the file as the query runs, like
+            // the reference's realtime save (files.go:85-156)
+            Sinks.savePaths(base, results.size).zip(results).foreach {
+              case (p, df) => Sinks.saveCsvStreaming(df, p); System.err.println(s"saved $p")
+            }
+          case (None, Some(base)) =>
+            // parallel mode: each partition writes its own part file
+            Sinks.savePaths(base, results.size).map(_.stripSuffix(".csv"))
+              .zip(results).foreach { case (p, df) =>
+                Sinks.saveCsvDir(coalesceN.fold(df)(df.coalesce), p)
+                System.err.println(s"saved $p/")
+              }
+          case _ =>
+            results.foreach(Sinks.printCsv(_))
+        }
+      }
     }
     spark.stop()
   }

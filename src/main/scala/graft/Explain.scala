@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Sessions
+import graft.core.{Materialize, Sessions}
 import graft.queries.Registry
 
 /** Plan inspector: prints the formatted physical plan of the named
@@ -13,7 +13,7 @@ object Explain {
     val names = if (args.nonEmpty) args.toSeq else Registry.benchQueries.map(_.name)
     names.foreach { n =>
       println(s"\n=== $n ===")
-      Registry.queries(n)(spark, sfDir).explain("formatted")
+      Materialize.statement(Registry.queries(n)(spark, sfDir).explain("formatted"))
     }
     spark.stop()
   }

@@ -60,7 +60,7 @@ object BucketGuard {
     //    are salted into ⌈n/maxBucket⌉ hash-chunks and joined
     //    within-chunk, with the representative replicated into every
     //    chunk so the chunked join also emits the connectivity star.
-    // The aggregated bucket set is CHECKPOINTED eagerly (r16): the
+    // The aggregated bucket set is CUT eagerly (r16): the
     // r15 shape relied on ReuseExchange to share the banding exchange
     // between the benign leg, the marker filter and the hot join, but
     // leg-specific pushed filters specialize the subtrees and the
@@ -73,11 +73,9 @@ object BucketGuard {
     // job against the materialized blocks — the hot branch (its
     // second banding pass, salt join and union) is not planned at
     // all, which is result-identical by construction (union with a
-    // provably empty side).
-    val agg = bands.repartition(col("band"), col("bkey"))
-      .groupBy(col("band"), col("bkey"))
-      .agg(graft.functions.BucketAggExprs.bounded_bucket(col(id), maxBucket).as("__b"))
-      .localCheckpoint()
+    // provably empty side). The returned plan reads the cut, so the
+    // enclosing Materialize.statement releases it.
+    val agg = aggregated(bands, id, maxBucket)
     val pairCmp: (Column, Column) => Column =
       if (directed) (a, b) => a =!= b else (a, b) => a < b
     val benign = agg.filter(col("__b.n") <= maxBucket)
@@ -122,10 +120,7 @@ object BucketGuard {
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     // same materialize-once + skip-empty-hot-leg shape as
     // [[boundedPairs]] (see the note there)
-    val agg = bands.repartition(col("band"), col("bkey"))
-      .groupBy(col("band"), col("bkey"))
-      .agg(graft.functions.BucketAggExprs.bounded_bucket(col(id), maxBucket).as("__b"))
-      .localCheckpoint()
+    val agg = aggregated(bands, id, maxBucket)
     val benign = agg.filter(col("__b.n") <= maxBucket)
       .select(col("__b.rep").as("__rep"), explode(col("__b.members")).as("__m"))
       .filter(col("__m") =!= col("__rep"))
@@ -141,6 +136,12 @@ object BucketGuard {
       .select(col("__rep").as(outA), col(id).as(outB))
     benign.union(hotStars).distinct()
   }
+
+  /** Per (band, bkey): the capped member aggregate `__b`, cut. */
+  private def aggregated(bands: DataFrame, id: String, maxBucket: Int): DataFrame =
+    Materialize.cut(bands.repartition(col("band"), col("bkey"))
+      .groupBy(col("band"), col("bkey"))
+      .agg(graft.functions.BucketAggExprs.bounded_bucket(col(id), maxBucket).as("__b")))
 
   /** Buckets the guard degraded: (band, bkey, n, rep) for every bucket
     * over `maxBucket`. Operational visibility — log/count this next to

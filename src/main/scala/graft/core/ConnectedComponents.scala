@@ -26,9 +26,10 @@ import org.apache.spark.sql.functions._
   * vertices that appear in it — candidate pairs, a vanishing fraction
   * of the corpus; singleton documents never enter the iteration. Each
   * round is one shuffle keyed on vertex id (edges join labels, groupBy
-  * min). `localCheckpoint` after each round truncates the lineage so
-  * plan size stays constant across iterations instead of growing a
-  * nested-join tree the optimizer re-analyzes every round.
+  * min). A [[Materialize.cut]] after each round keeps the plan one size
+  * instead of a nested-join tree re-analyzed every round; the final
+  * round, which the labels read, is released by the enclosing
+  * [[Materialize.statement]].
   */
 object ConnectedComponents {
 
@@ -108,7 +109,7 @@ object ConnectedComponents {
         }
         Iterator.single(java.util.Arrays.copyOf(a, m))
       }.collect()
-    unpersistCheckpoint(sym)
+    Materialize.release(sym)
     // union-find with path halving; union by min id, so every root is
     // its component's minimum — exactly the loop's converged label
     val parent = new LongLongMap(1 << 16)
@@ -218,14 +219,13 @@ object ConnectedComponents {
     }
   }
 
-  /** The symmetrized, deduplicated, eagerly checkpointed edge list the
-    * loop (and the fast path's size check) runs on. */
+  /** The symmetrized, deduplicated, eagerly cut edge list the loop (and
+    * the fast path's size check) runs on. */
   private def symmetrized(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame =
-    edges.select(col(srcCol).as("id"), col(dstCol).as("nbr"))
+    Materialize.cut(edges.select(col(srcCol).as("id"), col(dstCol).as("nbr"))
       .union(edges.select(col(dstCol).as("id"), col(srcCol).as("nbr")))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
 
   /** [[run]] plus the number of propagation rounds executed — the
     * observable the O(log d) pointer-jumping claim is checked on (a
@@ -235,16 +235,11 @@ object ConnectedComponents {
     loopFrom(symmetrized(edges, srcCol, dstCol), maxIters)
 
   private def loopFrom(sym: DataFrame, maxIters: Int): (DataFrame, Int) = {
-    var labels = sym.select(col("id")).distinct()
-      .withColumn("lbl", col("id"))
-      .localCheckpoint()
-    // each round's localCheckpoint pins a fresh copy of the label set
-    // in block storage; without explicit release up to maxIters copies
-    // stay resident for the job's life. Dataset.unpersist() is a no-op
-    // here (it only consults the CacheManager, not the checkpointed
-    // RDD), so the superseded round's backing RDD is unpersisted
-    // directly once the new round is materialized.
-    var liveChk: DataFrame = labels
+    // each round's cut (id, lbl, and from round 1 the pre-round `old`)
+    // is released once the next round is materialized, so at most two
+    // label-set copies are resident at a time
+    var labels = Materialize.cut(sym.select(col("id")).distinct()
+      .withColumn("lbl", col("id")))
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIters) {
@@ -260,25 +255,21 @@ object ConnectedComponents {
       // The pre-round label rides along as `old`, so the convergence
       // check below is a filter over the checkpointed round output —
       // not another join against the previous labels.
-      val next = stepped
+      val next = Materialize.cut(stepped
         .join(stepped.select(col("id").as("lbl"), col("lbl").as("plbl")),
           Seq("lbl"), "left")
         .select(col("id"), col("old"),
-          coalesce(col("plbl"), col("lbl")).as("lbl"))
-        .localCheckpoint()
+          coalesce(col("plbl"), col("lbl")).as("lbl")))
       changed = next.filter(col("lbl") =!= col("old")).count()
-      unpersistCheckpoint(liveChk) // next is materialized; prior round's blocks are dead
-      liveChk = next
-      labels = next.select(col("id"), col("lbl"))
+      Materialize.release(labels) // next is materialized; prior round's blocks are dead
+      labels = next
       iter += 1
     }
-    unpersistCheckpoint(sym) // the loop is over; the edge list is no longer needed
+    Materialize.release(sym) // the loop is over; the edge list is no longer needed
     if (changed > 0)
       System.err.println(
         s"[graft] connected components hit maxIters=$maxIters still changing " +
           s"($changed labels); returning partial labeling")
-    (labels, iter)
+    (labels.select(col("id"), col("lbl")), iter)
   }
-
-  private def unpersistCheckpoint(df: DataFrame): Unit = Lineage.release(df)
 }

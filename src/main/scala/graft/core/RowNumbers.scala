@@ -27,66 +27,15 @@ import org.apache.spark.sql.types._
   */
 object RowNumbers {
 
-  /** Release `cached` as soon as the first job that materializes
-    * `out` completes, instead of waiting for the ContextCleaner: a
-    * long-lived session (Console/QueryServer) running repeated large
-    * cumsums would otherwise accumulate corpus-sized resident/spilled
-    * copies until the driver GC notices the dead references. The
-    * listener matches the first job whose lineage contains `out`
-    * (job-start RDDInfos), unpersists on its completion, and removes
-    * itself. Correctness never depends on the cache: a LATER
-    * re-materialization recomputes through the same RDD instance, so
-    * the fixed partitioner and reused shuffle files land identical
-    * rows in identical partitions and the broadcast offsets stay
-    * valid — the cache only shields the window between the offset
-    * collect and the first assignment pass.
-    *
-    * The listener holds the cached RDD only WEAKLY: a frame that is
-    * built and then abandoned (a statement erroring after plan time in
-    * a long-lived Console/QueryServer session) must stay collectible —
-    * a strong reference here would pin the corpus-sized cached blocks
-    * forever AND keep the ContextCleaner from releasing them. Once the
-    * reference clears, the listener removes itself at the next job
-    * boundary. Unpersist fires only on a SUCCESSFUL matching job — a
-    * failed attempt re-arms, so the cache still shields the retry. */
-  private def unpersistAfterFirstUse(spark: org.apache.spark.sql.SparkSession,
-      cached: org.apache.spark.rdd.RDD[_],
-      out: org.apache.spark.rdd.RDD[_]): Unit = {
-    import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val outId = out.id
-    val ref = new java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]](cached)
-    val listener = new SparkListener {
-      private val jobId = new java.util.concurrent.atomic.AtomicInteger(-1)
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (ref.get == null) sc.removeSparkListener(this)
-        else if (jobId.get < 0 &&
-            js.stageInfos.exists(_.rddInfos.exists(_.id == outId)))
-          jobId.compareAndSet(-1, js.jobId)
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        if (je.jobId == jobId.get) je.jobResult match {
-          case JobSucceeded =>
-            Option(ref.get).foreach(_.unpersist(blocking = false))
-            sc.removeSparkListener(this)
-          case _ => jobId.set(-1) // failed attempt: re-arm for the retry
-        }
-    }
-    sc.addSparkListener(listener)
-  }
-
-  /** Input-side cache for the range-partitioned entry points below.
-    * `repartitionByRange` executes its child TWICE — once for the
-    * range sampler's sketch job, once for the shuffle map stage — so
-    * an expensive upstream (p13's survivor joins, t11's tokenize) is
-    * paid double. Persisting the input for exactly that window makes
-    * the sampler fill the cache and the map stage hit it; the cache is
-    * released synchronously right after each operator's eager offset
-    * phase (by which point the shuffle files exist), so its lifetime
-    * is one call. Every internal call site feeds a narrow metadata
-    * projection (ids + one long), so the cached bytes are small by
-    * design. */
-  private def cacheForRange(df: DataFrame): DataFrame =
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  // Each entry point reuses the RDD its eager offset phase and its
+  // assignment pass share; the enclosing Materialize.statement releases
+  // it. Correctness never depends on that cache: a re-materialization
+  // recomputes through the same RDD instance (fixed partitioner, reused
+  // shuffle files), so the broadcast offsets stay valid. The range-
+  // partitioned ones also reuse their (narrow) INPUT until the offset
+  // phase ends: `repartitionByRange` runs its child twice (sampler, then
+  // map stage), which would pay an expensive upstream (p13's survivor
+  // joins, t11's tokenize) double.
 
   /** Attach `name` = step · (1-based row index in natural scan order —
     * (partition, offset) order, matching the reference's single-
@@ -95,15 +44,12 @@ object RowNumbers {
     val spark = df.sparkSession
     val schema = StructType(df.schema.fields :+
       StructField(name, DoubleType, nullable = false))
-    // persist across zipWithIndex's two passes (the eager count job in
-    // its constructor and the later numbering pass) — same reasoning
-    // as scanCumsum: without it the child's post-shuffle work (sorts,
-    // projections) executes twice
-    val cached = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rdd = cached.zipWithIndex().map { case (r, i) =>
+    // reused across zipWithIndex's two passes (the eager count job in
+    // its constructor and the later numbering pass): without it the
+    // child's post-shuffle work (sorts, projections) executes twice
+    val rdd = Materialize.reuse(df.rdd).zipWithIndex().map { case (r, i) =>
       Row.fromSeq(r.toSeq :+ (i + 1) * step)
     }
-    unpersistAfterFirstUse(spark, cached, rdd)
     spark.createDataFrame(rdd, schema)
   }
 
@@ -114,10 +60,11 @@ object RowNumbers {
       step: Double = 1.0, numPartitions: Option[Int] = None): DataFrame = {
     val parts = numPartitions.getOrElse(
       df.sparkSession.sessionState.conf.numShufflePartitions)
-    val src = cacheForRange(df)
-    try scanOrder(src.repartitionByRange(parts, order: _*)
+    val src = Materialize.reuse(df)
+    val out = scanOrder(src.repartitionByRange(parts, order: _*)
       .sortWithinPartitions(order: _*), name, step)
-    finally src.unpersist(blocking = false) // scanOrder's zipWithIndex count job already ran
+    Materialize.release(src) // scanOrder's zipWithIndex count job already ran
+    out
   }
 
   /** Attach `name` = inclusive running sum of LongType column `value`
@@ -133,9 +80,7 @@ object RowNumbers {
     val idx = df.schema.fieldIndex(value)
     val schema = StructType(df.schema.fields :+
       StructField(name, LongType, nullable = false))
-    // persist across the two passes (see groupedCumsum for why)
-    val rdd = df.rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rdd = Materialize.reuse(df.rdd)
     val partTotals = rdd.mapPartitionsWithIndex { (i, it) =>
       var s = 0L; it.foreach(r => s += r.getLong(idx)); Iterator((i, s))
     }.collect().sortBy(_._1).map(_._2)
@@ -144,7 +89,6 @@ object RowNumbers {
       var s = offsets.value(i)
       it.map { r => s += r.getLong(idx); Row.fromSeq(r.toSeq :+ s) }
     }
-    unpersistAfterFirstUse(spark, rdd, out)
     spark.createDataFrame(out, schema)
   }
 
@@ -155,10 +99,11 @@ object RowNumbers {
       name: String = "cum", numPartitions: Option[Int] = None): DataFrame = {
     val parts = numPartitions.getOrElse(
       df.sparkSession.sessionState.conf.numShufflePartitions)
-    val src = cacheForRange(df)
-    try scanCumsum(src.repartitionByRange(parts, order: _*)
+    val src = Materialize.reuse(df)
+    val out = scanCumsum(src.repartitionByRange(parts, order: _*)
       .sortWithinPartitions(order: _*), value, name)
-    finally src.unpersist(blocking = false) // scanCumsum's offset collect already ran
+    Materialize.release(src) // scanCumsum's offset collect already ran
+    out
   }
 
   /** Per-KEY 1-based row numbering (`row_number() OVER (PARTITION BY
@@ -179,15 +124,14 @@ object RowNumbers {
     val parts = numPartitions.getOrElse(
       spark.sessionState.conf.numShufflePartitions)
     val sortCols = key.map(org.apache.spark.sql.functions.col) ++ order
-    val src = cacheForRange(df)
+    val src = Materialize.reuse(df)
     val keyed = src.repartitionByRange(parts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
     val kIdx = key.map(keyed.schema.fieldIndex)
-    // persist across the two passes (see groupedCumsum for why)
-    val rdd = keyed.rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // reused across the two passes (see groupedCumsum for why)
+    val rdd = Materialize.reuse(keyed.rdd)
     val runs: Array[(Int, Seq[(Seq[Any], Long)])] =
-      try rdd.mapPartitionsWithIndex { (i, it) =>
+      rdd.mapPartitionsWithIndex { (i, it) =>
         val buf = scala.collection.mutable.ArrayBuffer.empty[(Seq[Any], Long)]
         var cur: Seq[Any] = null
         var c = 0L
@@ -199,7 +143,7 @@ object RowNumbers {
         if (cur != null) buf += ((cur, c))
         Iterator((i, buf.toSeq))
       }.collect()
-      finally src.unpersist(blocking = false) // the collect ran the shuffle map off the cache
+    Materialize.release(src) // the collect ran the shuffle map off the cache
     // per (partition, key) start offset = rows of that key in EARLIER partitions
     val seen = scala.collection.mutable.Map.empty[Seq[Any], Long]
     val offsets = runs.sortBy(_._1).flatMap { case (i, ks) =>
@@ -222,7 +166,6 @@ object RowNumbers {
         Row.fromSeq(r.toSeq :+ n)
       }
     }
-    unpersistAfterFirstUse(spark, rdd, out)
     spark.createDataFrame(out, schema)
   }
 
@@ -242,22 +185,19 @@ object RowNumbers {
     val parts = numPartitions.getOrElse(
       spark.sessionState.conf.numShufflePartitions)
     val sortCols = key.map(org.apache.spark.sql.functions.col) ++ order
-    val src = cacheForRange(df)
+    val src = Materialize.reuse(df)
     val keyed = src.repartitionByRange(parts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
     val kIdx = key.map(keyed.schema.fieldIndex)
     val vIdx = keyed.schema.fieldIndex(value)
-    // persist across the two passes: the offset collect and the
+    // reused across the two passes: the offset collect and the
     // assignment must see IDENTICAL rows-per-partition. Without the
     // cache, an executor loss between the jobs recomputes the
     // un-persisted shuffle, and a nondeterministic upstream could land
-    // rows in different partitions than the offsets describe. Cached
-    // blocks are released explicitly once the first materialization
-    // completes (unpersistAfterFirstUse), not left to the ContextCleaner.
-    val rdd = keyed.rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // rows in different partitions than the offsets describe.
+    val rdd = Materialize.reuse(keyed.rdd)
     val runs: Array[(Int, Seq[(Seq[Any], Long)])] =
-      try rdd.mapPartitionsWithIndex { (i, it) =>
+      rdd.mapPartitionsWithIndex { (i, it) =>
         val buf = scala.collection.mutable.ArrayBuffer.empty[(Seq[Any], Long)]
         var cur: Seq[Any] = null
         var s = 0L
@@ -269,7 +209,7 @@ object RowNumbers {
         if (cur != null) buf += ((cur, s))
         Iterator((i, buf.toSeq))
       }.collect()
-      finally src.unpersist(blocking = false) // the collect ran the shuffle map off the cache
+    Materialize.release(src) // the collect ran the shuffle map off the cache
     val seen = scala.collection.mutable.Map.empty[Seq[Any], Long]
     val offsets = runs.sortBy(_._1).flatMap { case (i, ks) =>
       ks.map { case (k, s) =>
@@ -291,7 +231,6 @@ object RowNumbers {
         Row.fromSeq(r.toSeq :+ s)
       }
     }
-    unpersistAfterFirstUse(spark, rdd, out)
     spark.createDataFrame(out, schema)
   }
 }

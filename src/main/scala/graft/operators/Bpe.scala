@@ -19,8 +19,8 @@ import org.apache.spark.sql.types.LongType
   * of the winning pair (the merge table is inherently sequential and
   * tiny — this is the one driver-side loop every distributed BPE
   * trainer has), then a narrow regexp merge over the vocab. The vocab
-  * is cached per round and the previous round unpersisted, so lineage
-  * and storage stay O(1) across thousands of merges.
+  * is cut per round and the previous round released, so lineage and
+  * storage stay O(1) across thousands of merges.
   *
   * Words are represented as space-joined symbol strings ("l o w");
   * a merge of pair "l o" rewrites left-to-right non-overlapping
@@ -182,18 +182,18 @@ object Bpe {
       minFreq: Long = 2L, maxBatch: Int = 16,
       localVocabThreshold: Long = 2000000L): (Seq[Merge], Int) = {
     require(maxBatch >= 1, s"maxBatch must be >= 1, got $maxBatch")
-    // Lineage.cut per round, not cache(): a cache cuts execution but
-    // the logical plan still nests every prior round, and per-round
-    // plan analysis / plan-string generation grows without bound —
-    // a real tokenizer trains thousands of merges.
-    var v = graft.core.Lineage.cut(charVocab(docs, textCol))
+    // a cut per round, not a reuse: a persisted frame cuts execution
+    // but the logical plan still nests every prior round, and per-round
+    // plan analysis / plan-string generation grows without bound — a
+    // real tokenizer trains thousands of merges.
+    var v = graft.core.Materialize.cut(charVocab(docs, textCol))
     if (v.count() <= localVocabThreshold) {
       // Heaps'-bounded vocab ⇒ collect once and train in memory:
       // the whole merge loop costs ONE cluster aggregation, however
       // many merges are requested
       val collected = v.collect()
         .map(r => (r.getString(0), r.getLong(1))).toSeq
-      graft.core.Lineage.release(v)
+      graft.core.Materialize.release(v)
       return (trainInMemory(collected, numMerges, minFreq), 1)
     }
     val merges = Seq.newBuilder[Merge]
@@ -247,12 +247,12 @@ object Bpe {
         // Eager cut materializes the round, so at most two vocab
         // copies are ever resident; the superseded round's blocks are
         // released (the vocab row count never changes).
-        val next = graft.core.Lineage.cut(v.withColumn("sym", rewritten))
-        graft.core.Lineage.release(v)
+        val next = graft.core.Materialize.cut(v.withColumn("sym", rewritten))
+        graft.core.Materialize.release(v)
         v = next
       }
     }
-    graft.core.Lineage.release(v)
+    graft.core.Materialize.release(v)
     (merges.result(), rounds)
   }
 

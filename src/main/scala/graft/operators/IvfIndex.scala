@@ -10,6 +10,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Materialize
 import graft.queries.VectorQueries
 
 /** The persisted IVF index lifecycle — the storage half of the ANN
@@ -701,7 +702,7 @@ object IvfIndex {
           resid.select(col("vec_id"), col("embedding")),
           dim = centers.head._2.length, nHint = n)
       }
-    // persist the assigned (and coded) frame across its three readers:
+    // reuse the assigned (and coded) frame across its three readers:
     // the range partitioner's SAMPLING pass, the shuffle write, and
     // the sidecar's refresh-mean aggregate. Uncached, the
     // nearest-centroid encode ran twice (sample + write) and the
@@ -710,31 +711,29 @@ object IvfIndex {
     // from the same rows the write lands (floats pass through parquet
     // unchanged, and the Det-decimal mean is partition-order-exact),
     // so the sidecar is bit-identical to the re-read shape.
-    val toWrite = if (pq) withCodes(assigned, centers, books) else assigned
-    val cached = toWrite.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the shuffle write and the sidecar's means aggregate both read
-      // the cached frame and are independent until writeSidecar — run
-      // the aggregate on a second driver thread so it overlaps the
-      // write (guide §2.6 concurrent jobs; the block manager's
-      // per-block locks make a racing first materialization safe: one
-      // task computes a partition, the other waits for the block)
-      val meansTask = new java.util.concurrent.FutureTask[
-          (Seq[(Int, Array[Double])], Map[Long, Long])](() =>
-        VectorQueries.refreshedCentersWithCounts(
-          cached.select(col("embedding"), col("cell").cast(LongType).as("cell"))))
-      val meansThread = new Thread(meansTask, "graft-build-means")
-      meansThread.setDaemon(true)
-      meansThread.start()
-      write(cached, path, rowsHint = Some(n))
-      val (means, counts) =
-        try meansTask.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      writeSidecar(spark, path, Sidecar(centers, means, counts,
-        staleCells = Set.empty, pendingAppends = false, maxSeq = 0L,
-        version = 1L, books = books))
-    } finally cached.unpersist(blocking = false)
+    val cached = Materialize.reuse(
+      if (pq) withCodes(assigned, centers, books) else assigned)
+    // the shuffle write and the sidecar's means aggregate both read
+    // the cached frame and are independent until writeSidecar — run
+    // the aggregate on a second driver thread so it overlaps the
+    // write (guide §2.6 concurrent jobs; the block manager's
+    // per-block locks make a racing first materialization safe: one
+    // task computes a partition, the other waits for the block)
+    val meansTask = new java.util.concurrent.FutureTask[
+        (Seq[(Int, Array[Double])], Map[Long, Long])](() =>
+      VectorQueries.refreshedCentersWithCounts(
+        cached.select(col("embedding"), col("cell").cast(LongType).as("cell"))))
+    val meansThread = new Thread(meansTask, "graft-build-means")
+    meansThread.setDaemon(true)
+    meansThread.start()
+    write(cached, path, rowsHint = Some(n))
+    val (means, counts) =
+      try meansTask.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    writeSidecar(spark, path, Sidecar(centers, means, counts,
+      staleCells = Set.empty, pendingAppends = false, maxSeq = 0L,
+      version = 1L, books = books))
+    Materialize.release(cached)
     centers
   }
 
@@ -831,7 +830,7 @@ object IvfIndex {
     * arrivals landing) would keep its old files and resurrect the
     * deleted rows. After the write, any `touched` cell absent from
     * the frame has its directory removed outright. Callers pass `df`
-    * over localCheckpoint'd inputs, so the sizing count is cheap. */
+    * over cut inputs, so the sizing count is cheap. */
   private def overwriteCells(df: DataFrame, path: String,
       touched: Seq[Long]): Unit = {
     // ONE job yields both the present-cell set and the sizing count
@@ -901,11 +900,10 @@ object IvfIndex {
     // collect, stale-id sweep, vacated-cell check and the write are
     // five separate actions — without this each re-runs the caller's
     // assignment (and PQ encode) over the arrival source
-    val arrivals = assigned.select(
+    val arrivals = Materialize.cut(assigned.select(
       (Seq(col("vec_id"), col("embedding")) ++
         (if (indexHasPq) Seq(col("pq")) else Nil)) :+
-        col("cell").cast(LongType).as("cell"): _*)
-      .localCheckpoint(true)
+        col("cell").cast(LongType).as("cell"): _*))
     val side = readSidecar(spark, path)
     side.foreach(s => if (s.pendingAppends)
       throw new IllegalStateException(
@@ -924,9 +922,8 @@ object IvfIndex {
       .join(broadcast(arrivalIds), "vec_id")
       .select(col("cell")).distinct().collect().map(_.getLong(0)).toSeq
     val touched = (touched0 ++ staleCells).distinct.sorted
-    val existing = readFull(spark, path)
-      .filter(col("cell").isin(touched: _*))
-      .localCheckpoint(true)
+    val existing = Materialize.cut(readFull(spark, path)
+      .filter(col("cell").isin(touched: _*)))
     // survivors KEEP their seq through the rewrite (same contract as
     // compact — maintenance ops never erase version history); arrivals
     // stamp the current high-water mark (== compactedSeq here, since
@@ -938,6 +935,8 @@ object IvfIndex {
         lit(side.map(_.maxSeq).getOrElse(0L))))
     overwriteCells(merged.select(layoutCols(merged) :+ col("cell"): _*),
       path, touched)
+    Materialize.release(existing)
+    Materialize.release(arrivals)
     side.foreach { s =>
       val touchedSet = touched.toSet
       val (means, counts) = VectorQueries.refreshedCentersWithCounts(
@@ -969,11 +968,10 @@ object IvfIndex {
       s"append: no _centers sidecar at '$path' — build the index first"))
     requireMatchingShape(assigned, s.hasPq, "append")
     // one materialization across the guard, touched collect and write
-    val arrivals = assigned.select(
+    val arrivals = Materialize.cut(assigned.select(
       (Seq(col("vec_id"), col("embedding")) ++
         (if (s.hasPq) Seq(col("pq")) else Nil)) :+
-        col("cell").cast(LongType).as("cell"): _*)
-      .localCheckpoint(true)
+        col("cell").cast(LongType).as("cell"): _*))
     requireUniqueIds(arrivals, "append")
     val touched = arrivals.select(col("cell")).distinct().collect()
       .map(_.getLong(0)).sorted.toSeq
@@ -999,6 +997,7 @@ object IvfIndex {
       .write.mode("append")
       .option("parquet.page.row.count.limit", PageRowLimit.toString)
       .partitionBy("cell").parquet(path)
+    Materialize.release(arrivals)
     seq
   }
 
@@ -1118,11 +1117,11 @@ object IvfIndex {
       // drop beaten versions (anti-join on the full row version key;
       // the losers side recomputes pruned to target cells' rows);
       // a duplicate-free index skips the dedupe join outright
-      val surv = (if (s.pendingAppends)
+      val surv = Materialize.cut(if (s.pendingAppends)
           tgt.join(losers, Seq("vec_id", "seq", "cell"), "left_anti")
         else tgt)
-        .localCheckpoint(true)
       overwriteCells(surv, path, targets)
+      Materialize.release(surv)
     }
     // refresh means for every rewritten or stale cell (pruned read)
     val needMeans = (targets ++ s.staleCells).distinct.sorted
@@ -1489,7 +1488,7 @@ object IvfIndex {
       } else {
         // the winner-CARDINALITY estimate rides the checkpoint job for
         // FREE (observe + HLL over the shortlist rows — verified: the
-        // eager localCheckpoint is a QueryExecution action, so the
+        // eager local checkpoint is a QueryExecution action, so the
         // observation's future completes with it). When it proves the
         // batch SATURATED — expected distinct winners past the push
         // cap, or rivaling the probed corpus's page population
@@ -1506,9 +1505,8 @@ object IvfIndex {
         // scan per cell anyway, and a missed skip only means running
         // the same analysis r14 always ran.
         val obs = Observation()
-        val ck = short0.observe(obs, approx_count_distinct(
-            struct(col("cell"), col("n_id")), 0.02).as("w"))
-          .localCheckpoint(true)
+        val ck = Materialize.cut(short0.observe(obs, approx_count_distinct(
+            struct(col("cell"), col("n_id")), 0.02).as("w")))
         val est = try scala.concurrent.Await.result(obs.future,
             scala.concurrent.duration.Duration(30, "s")).getLong(0)
           catch { case _: java.util.concurrent.TimeoutException => -1L }
@@ -1629,8 +1627,7 @@ object IvfIndex {
               ExecutionContext.fromExecutorService(pool)
             try InFilterThreshold.atLeast(spark, maxIdsPerWave)(Await.result(
               Future.sequence(waves.map { w => Future {
-                w.map((branch _).tupled).reduce(_ unionByName _)
-                  .localCheckpoint(true)
+                Materialize.cut(w.map((branch _).tupled).reduce(_ unionByName _))
               }}), scala.concurrent.duration.Duration.Inf))
             finally pool.shutdown()
           }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Det, Tables}
+import graft.core.{Det, Materialize, Tables}
 import graft.functions.TextFunctions._
 import graft.queries.{OracleSql => O}
 
@@ -108,8 +108,9 @@ object DedupQueries {
     * `cutEvery` is the Bpe.scala lineage discipline:
     * past the gated iters=3 the per-round plan nesting would bloat
     * analysis long before the data hurts, so every `cutEvery`-th rank
-    * frame is truncated to a materialized leaf (Lineage.cut) and the
-    * previous leaf released. The default leaves the 3-round gated
+    * frame is truncated to a materialized leaf (Materialize.cut) and the
+    * previous leaf released; the last leaf, which the returned plan
+    * reads, is released by the enclosing Materialize.statement. The default leaves the 3-round gated
     * plan fully lazy (unchanged plan shape) and cuts from round 4 on;
     * DedupSpec pins cut ≡ uncut results. */
   def dupPagerankOf(pairsIn: DataFrame, iters: Int = 3,
@@ -130,8 +131,8 @@ object DedupQueries {
         .agg((lit(0.15) + lit(0.85) *
           sum(col("c").cast(graft.core.Det.dec)).cast(DoubleType)).as("r"))
       if (i % cutEvery == 0 && i < iters) {
-        val cut = graft.core.Lineage.cut(r)
-        lastCut.foreach(graft.core.Lineage.release)
+        val cut = Materialize.cut(r)
+        lastCut.foreach(Materialize.release)
         lastCut = Some(cut)
         r = cut
       }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{Det, Tables}
+import graft.core.{Det, Materialize, Tables}
 
 /** The curation pipeline as ONE composed DataFrame program — the
   * point of having every stage be a lazy query builder: quality
@@ -70,16 +70,16 @@ object PipelineQueries {
           .filter(col("keep") === 1).select(col("vec_id"))
         val cont = q("v08_embed_decontam").build(s, dir)
           .filter(col("contaminated") === 1).select(col("vec_id"))
-        val curated = Tables(s, dir, "embeddings")
+        // reused: the PQ fit re-reads it ~2·M times (tiny driver loops)
+        val curated = Materialize.reuse(Tables(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
           .filter(col("vec_id") >= 50)
           .join(keep, "vec_id")
-          .join(cont, Seq("vec_id"), "left_anti")
-          .cache() // the PQ fit re-reads it ~2·M times (tiny driver loops)
+          .join(cont, Seq("vec_id"), "left_anti"))
         val codes = VectorQueries.pqCodes(curated, dim = 64)
         // fits done — release so one JVM running many queries doesn't
         // accumulate a resident curated copy per run
-        curated.unpersist(blocking = false)
+        Materialize.release(curated)
         codes
       },
       Some {
@@ -366,39 +366,38 @@ object PipelineQueries {
     // justify re-scans). Narrow artifact: (doc_id, source, quality,
     // n_tok) — no text retained in cache. The only other text pass
     // left is the minhash signature scan (a different projection).
-    val prof = docs
+    val prof = Materialize.reuse(docs
       .select(col("doc_id"), col("source"), col("text"),
         graft.functions.TextProfileExprs.text_profile(col("text")).as("p"))
       .select(col("doc_id"), col("source"),
         TextQueries.qualityCol(col("text"), col("p")).as("quality"),
-        col("p").getField("n_tok").as("n_tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cdf = broadcast(TextQueries.sourceCdfOf(
-        prof.select(col("doc_id"), col("source"),
-          floor(col("quality").cast(graft.core.Det.dec) * lit(100))
-            .cast(LongType).as("bucket"))))
-      val pairs = pairsOpt.getOrElse(
-        DedupQueries.candidateStarsOf(DedupQueries.sigOf(
-          docs.select(col("doc_id"), col("text")))))
-      val canon = DedupQueries.canonicalPickFromQuality(
-          prof.select(col("doc_id"), col("quality")), pairs)
-        .filter(col("keep") === 1).select(col("doc_id"))
-      val surv = prof
-        .select(col("doc_id"), col("source"), col("n_tok"),
-          floor(col("quality").cast(graft.core.Det.dec) * lit(100))
-            .cast(LongType).as("bucket"))
-        .join(cdf, Seq("source", "bucket"))
-        .filter(col("cum") * 10 >= col("n_src") * 3)
-        .join(canon, "doc_id")
-        .select(col("doc_id"), col("source"),
-          coalesce(col("n_tok").cast(LongType), lit(0L)).as("n_tok"))
-      // tokenBudgetMixSized's grouped cumsum runs its offset pass
-      // EAGERLY, so by the time it returns the keyed RDD cache holds
-      // the survivors and prof can be released synchronously — the
-      // returned frame reads the keyed cache, never prof
-      tokenBudgetMixSized(surv, budget)
-    } finally prof.unpersist(blocking = false)
+        col("p").getField("n_tok").as("n_tok")))
+    val cdf = broadcast(TextQueries.sourceCdfOf(
+      prof.select(col("doc_id"), col("source"),
+        floor(col("quality").cast(graft.core.Det.dec) * lit(100))
+          .cast(LongType).as("bucket"))))
+    val pairs = pairsOpt.getOrElse(
+      DedupQueries.candidateStarsOf(DedupQueries.sigOf(
+        docs.select(col("doc_id"), col("text")))))
+    val canon = DedupQueries.canonicalPickFromQuality(
+        prof.select(col("doc_id"), col("quality")), pairs)
+      .filter(col("keep") === 1).select(col("doc_id"))
+    val surv = prof
+      .select(col("doc_id"), col("source"), col("n_tok"),
+        floor(col("quality").cast(graft.core.Det.dec) * lit(100))
+          .cast(LongType).as("bucket"))
+      .join(cdf, Seq("source", "bucket"))
+      .filter(col("cum") * 10 >= col("n_src") * 3)
+      .join(canon, "doc_id")
+      .select(col("doc_id"), col("source"),
+        coalesce(col("n_tok").cast(LongType), lit(0L)).as("n_tok"))
+    // tokenBudgetMixSized's grouped cumsum runs its offset pass
+    // EAGERLY, so by the time it returns the keyed RDD cache holds
+    // the survivors and prof can be released synchronously — the
+    // returned frame reads the keyed cache, never prof
+    val mixed = tokenBudgetMixSized(surv, budget)
+    Materialize.release(prof)
+    mixed
   }
 
   /** p12's builder on an arbitrary (doc_id, source, text) frame.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Det, Tables}
+import graft.core.{Det, Materialize, Tables}
 import graft.core.Sessions.workPath
 import graft.queries.{OracleSql => O}
 
@@ -366,14 +366,14 @@ object VectorQueries {
       case Some(rows) if rows.nonEmpty =>
         localLloyd(rows, k, iters)
       case _ =>
-        // when a real subsample was cut, cache it for the fit's
+        // when a real subsample was cut, reuse it for the fit's
         // duration: the corpus is scanned ONCE to materialize the
         // ≤256·k-row sample, and every Lloyd pass (and the seed sort)
         // then reads only the bounded cached rows
-        val sampled = fs ne e
-        if (sampled) fs.cache()
-        try kmeansFitFrom(fs, kmeansSeeds(fs, k), iters)
-        finally { if (sampled) fs.unpersist(blocking = false) }
+        if (fs ne e) Materialize.reuse(fs)
+        val fit = kmeansFitFrom(fs, kmeansSeeds(fs, k), iters)
+        Materialize.release(fs)
+        fit
     }
   }
 
@@ -784,19 +784,17 @@ object VectorQueries {
     * drift a periodic refresh produces. The assignment is computed
     * ONCE and persisted across its two consumers (the refresh means
     * and the dirty-cell re-score) — round 10 paid a second full-corpus
-    * nearest-center pass here; the move list is materialized through
-    * an eager local checkpoint so the cache can be released
-    * deterministically instead of waiting for the ContextCleaner. */
+    * nearest-center pass here; the move list is cut (eager local
+    * checkpoint) so the assignment can be released right away, and
+    * the enclosing Materialize.statement releases the move list. */
   def ivfRepair(e: DataFrame, k: Int = KMEANS_K,
       thresh: Double = IVF_REPAIR_THRESH): DataFrame = {
     val old = kmeansFit(e, k, KMEANS_ITERS - 1)
-    val assigned = kmeansAssign(e, old).persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val refreshed = refreshedCenters(assigned)
-      ivfRepairAssigned(assigned, old, refreshed, thresh)
-        .localCheckpoint(true)
-    } finally assigned.unpersist(blocking = false)
+    val assigned = Materialize.reuse(kmeansAssign(e, old))
+    val moves = Materialize.cut(
+      ivfRepairAssigned(assigned, old, refreshedCenters(assigned), thresh))
+    Materialize.release(assigned)
+    moves
   }
 
   /** v41 over a PERSISTED cell-partitioned index (the v45 layout):
@@ -1102,42 +1100,40 @@ object VectorQueries {
         return books
       case _ => ()
     }
-    val sampled = fs ne e
-    if (sampled) fs.cache()
-    try {
-      val seedRows = fs.withColumn("__h", seedHash(col("vec_id")))
-        .orderBy(col("__h").asc, col("vec_id").asc).limit(k)
-        .select(col("embedding")).collect()
-        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-      var books: Seq[Seq[(Int, Array[Double])]] = (0 until m).map { s =>
-        seedRows.zipWithIndex.map { case (v, j) =>
-          (j, v.slice(s * dSub, (s + 1) * dSub)) }.toSeq
+    if (fs ne e) Materialize.reuse(fs)
+    val seedRows = fs.withColumn("__h", seedHash(col("vec_id")))
+      .orderBy(col("__h").asc, col("vec_id").asc).limit(k)
+      .select(col("embedding")).collect()
+      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+    var books: Seq[Seq[(Int, Array[Double])]] = (0 until m).map { s =>
+      seedRows.zipWithIndex.map { case (v, j) =>
+        (j, v.slice(s * dSub, (s + 1) * dSub)) }.toSeq
+    }
+    for (_ <- 1 until iters) {
+      val cellCols = (0 until m).map(s =>
+        graft.functions.VectorExprs.nearest_centroid(
+          col("embedding"), books(s), dSub, s * dSub).as(s"__c$s"))
+      val rows = fs
+        .select(col("embedding") +: cellCols: _*)
+        .select(posexplode(col("embedding")).as(Seq("pos", "x")),
+          array((0 until m).map(s => col(s"__c$s")): _*).as("cells"))
+        .select(floor(col("pos") / lit(dSub)).cast(IntegerType).as("s"),
+          element_at(col("cells"),
+            (floor(col("pos") / lit(dSub)) + 1).cast(IntegerType)).as("cell"),
+          col("pos").cast(LongType).as("pos"), col("x"))
+        .groupBy(col("s"), col("cell"), col("pos"))
+        .agg(Det.davg(col("x")).as("c"))
+        .collect()
+      books = (0 until m).map { s =>
+        rows.filter(_.getInt(0) == s)
+          .groupBy(_.getLong(1)).toSeq.sortBy(_._1)
+          .map { case (cell, rs) =>
+            (cell.toInt, rs.sortBy(_.getLong(2))
+              .map(_.getDouble(3)).toArray) }
       }
-      for (_ <- 1 until iters) {
-        val cellCols = (0 until m).map(s =>
-          graft.functions.VectorExprs.nearest_centroid(
-            col("embedding"), books(s), dSub, s * dSub).as(s"__c$s"))
-        val rows = fs
-          .select(col("embedding") +: cellCols: _*)
-          .select(posexplode(col("embedding")).as(Seq("pos", "x")),
-            array((0 until m).map(s => col(s"__c$s")): _*).as("cells"))
-          .select(floor(col("pos") / lit(dSub)).cast(IntegerType).as("s"),
-            element_at(col("cells"),
-              (floor(col("pos") / lit(dSub)) + 1).cast(IntegerType)).as("cell"),
-            col("pos").cast(LongType).as("pos"), col("x"))
-          .groupBy(col("s"), col("cell"), col("pos"))
-          .agg(Det.davg(col("x")).as("c"))
-          .collect()
-        books = (0 until m).map { s =>
-          rows.filter(_.getInt(0) == s)
-            .groupBy(_.getLong(1)).toSeq.sortBy(_._1)
-            .map { case (cell, rs) =>
-              (cell.toInt, rs.sortBy(_.getLong(2))
-                .map(_.getDouble(3)).toArray) }
-        }
-      }
-      books
-    } finally { if (sampled) fs.unpersist(blocking = false) }
+    }
+    Materialize.release(fs)
+    books
   }
 
   /** The one-pass PQ ENCODE against FROZEN codebooks: a stateless
@@ -2269,11 +2265,10 @@ object VectorQueries {
         // inertia pass below scans the full corpus. Cached: the kpp
         // maxmin chain alone is k scans of the sample.
         val fs = fitSample(e, FIT_SAMPLE_PER_K * KMEANS_K)
-        val sampled = fs ne e
-        if (sampled) fs.cache()
-        try kmeansInertiaOf(e,
-          kmeansFitFrom(fs, kmeansppSeeds(fs, KMEANS_K), KMEANS_ITERS - 1))
-        finally { if (sampled) fs.unpersist(blocking = false) }
+        if (fs ne e) Materialize.reuse(fs)
+        val fit = kmeansFitFrom(fs, kmeansppSeeds(fs, KMEANS_K), KMEANS_ITERS - 1)
+        Materialize.release(fs)
+        kmeansInertiaOf(e, fit)
       },
       Some(kppInertiaSql())),
 
@@ -3278,12 +3273,12 @@ object VectorQueries {
   def ivfPqCodes(e: DataFrame, dim: Int, coarseK: Int = KMEANS_K,
       m: Int = PQ_M, k: Int = PQ_K, iters: Int = KMEANS_ITERS): DataFrame = {
     val coarse = kmeansFit(e, coarseK, iters - 1)
-    val resid = residuals(kmeansAssign(e, coarse), coarse).cache()
+    val resid = Materialize.reuse(residuals(kmeansAssign(e, coarse), coarse))
     val codes = pqCodes(resid.select(col("vec_id"), col("embedding")), dim, m, k, iters)
     // (pqCodes' count() of the 1:1 residual frame hits the cache)
     // the PQ fits inside pqCodes were the multi-read consumer; drop the
     // cache so repeated runs in one JVM don't pile up resident copies
-    resid.unpersist(blocking = false)
+    Materialize.release(resid)
     codes
       .join(resid.select(col("vec_id"), col("cell")), "vec_id")
       .select(col("vec_id"), col("cell"), col("sub"), col("code"))
@@ -3373,14 +3368,14 @@ object VectorQueries {
     val iters = KMEANS_ITERS
     val n = e.count() // one count shared by every sample threshold
     val coarse = kmeansFit(e, KMEANS_K, iters - 1, n)
-    val resid = residuals(kmeansAssign(e, coarse), coarse).cache()
+    val resid = Materialize.reuse(residuals(kmeansAssign(e, coarse), coarse))
     val codebooks = pqCodebooks( // batched sub-fits over the residuals
       resid.select(col("vec_id"), col("embedding")), dim, m, PQ_K, iters)
     // the eager fit loops above were the multi-read consumer; drop
     // the cache now so a long-lived session doesn't accumulate one
     // resident copy per run (the plan below recomputes the narrow
     // residual pass once at execution)
-    resid.unpersist(blocking = false)
+    Materialize.release(resid)
     val codeCols = (0 until m).map(ss =>
       graft.functions.VectorExprs.nearest_centroid(
         col("embedding"), codebooks(ss), dSub, ss * dSub).as(s"c$ss"))

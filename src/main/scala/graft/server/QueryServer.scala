@@ -8,7 +8,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
-import graft.core.Sessions
+import graft.core.{Materialize, Sessions}
 import graft.sources.Sinks
 import graft.sql.{GraftSession, Parser, Planner}
 import graft.trace.JobListener
@@ -208,30 +208,27 @@ final class QueryServer(graft: GraftSession, port: Int,
     // wastes the whole point of the Spark rebuild. /stop/ still
     // works: setJobGroup is thread-local, every handler thread tags
     // its jobs with the same group, and cancelJobGroup interrupts
-    // them all.
+    // them all. One Materialize.statement spans plan, save and reply.
     beginQuery()
     val (results, saved) =
-      try {
+      try Materialize.statement {
         spark.sparkContext.setJobGroup(jobGroup, query, interruptOnCancel = true)
         val session = graft.fork(password)
         val planned = Parser.splitStatements(query).map(s => (s, session.sql(s)))
-        try {
-          val savedPaths = savePath match {
-            case Some(base) =>
-              Sinks.savePaths(base, planned.size).zip(planned).map {
-                case (p, (_, df)) =>
-                  // cache across the two consumers: the CSV save and
-                  // the clipped JSON reply below would otherwise each
-                  // run the full query from scratch
-                  df.persist()
-                  if (singleFile) Sinks.saveCsv(df, p)
-                  else Sinks.saveCsvDir(df, p)
-              }
-            case None => Seq.empty[String]
-          }
-          (planned.map { case (stmt, df) => JsonResult.of(df, stmt) }, savedPaths)
-        } finally if (savePath.isDefined) // a failed save or reply too
-          planned.foreach(_._2.unpersist(blocking = false))
+        val savedPaths = savePath match {
+          case Some(base) =>
+            Sinks.savePaths(base, planned.size).zip(planned).map {
+              case (p, (_, df)) =>
+                // reused across the two consumers: the CSV save and
+                // the clipped JSON reply below would otherwise each
+                // run the full query from scratch
+                Materialize.reuse(df)
+                if (singleFile) Sinks.saveCsv(df, p)
+                else Sinks.saveCsvDir(df, p)
+            }
+          case None => Seq.empty[String]
+        }
+        (planned.map { case (stmt, df) => JsonResult.of(df, stmt) }, savedPaths)
       } finally inflight.decrementAndGet()
     JsonResult.bundle(results, "ok", saved)
   }
@@ -249,11 +246,12 @@ final class QueryServer(graft: GraftSession, port: Int,
         val query = extractField(body, "query")
           .getOrElse(throw new IllegalArgumentException("missing 'query' field"))
         val session = graft.fork(extractField(body, "password"))
-        val plans = Parser.splitStatements(query).map { stmt =>
+        // planning alone can materialize (BucketGuard's eager cut)
+        val plans = Materialize.statement(Parser.splitStatements(query).map { stmt =>
           val plan = session.sql(stmt).queryExecution
             .explainString(org.apache.spark.sql.execution.FormattedMode)
           s"""{"Query":"${JsonResult.esc(stmt)}","Plan":"${JsonResult.esc(plan)}"}"""
-        }
+        })
         s"""{"Status":"ok","Plans":[${plans.mkString(",")}]}"""
       } catch {
         case e: Throwable =>

@@ -118,10 +118,14 @@ final class GraftSession(val spark: SparkSession, defaultDir: Option[String] = N
           // SCALE_r3: 3.1×). A plain path read would lose the
           // bucketing and shuffle both sides every query.
           // An absolute path names its own file, never a data-dir
-          // table: probing `<dir>/<abs path>.parquet` first would cost
-          // each fresh session a failed read.
+          // table; a data-dir file is read only if it exists on its own
+          // (maybe hdfs://) filesystem, so no name pays a failed read.
           val inDir = if (new java.io.File(name).isAbsolute) None else defaultDir
-          inDir.flatMap(d => scala.util.Try(Tables(spark, d, key)).toOption) match {
+          inDir.filter(d => scala.util.Try {
+              val p = new org.apache.hadoop.fs.Path(s"$d/$key.parquet")
+              p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+            }.getOrElse(false))
+            .flatMap(d => scala.util.Try(Tables(spark, d, key)).toOption) match {
             case Some(df) => register(key, df); df
             case None if new java.io.File(resolvePath(name)).isDirectory =>
               // an extensionless DIRECTORY path is a written dataset —

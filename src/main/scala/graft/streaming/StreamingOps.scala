@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.core.Materialize
+
 /** Structured Streaming forms of the event operators (the reference has
   * no streaming surface — SURVEY.md §2.11 — these are the Spark-native
   * extension for the stream table `events`):
@@ -244,85 +246,87 @@ object StreamingOps {
         if (!followIndex) requireFrozen(s"before micro-batch $batchId")
         // one materialization across the cap count, the routing panel
         // and the gather (the threaded count keeps servePq's gather
-        // gate at zero extra driver jobs, like planServe)
-        val b = batch.localCheckpoint(true)
-        val n = b.count()
-        if (n > 0) {
-          require(n <= RunToTableMaxRows,
-            s"serveOnline: micro-batch has $n rows (cap $RunToTableMaxRows): " +
-              "serving batches must be query-sized")
-          var attempts = 0
-          var everRaced = false
-          var committedUnder: String = null
-          while (committedUnder == null) {
-            val (fp, side) = if (followIndex) resolve() else frozen
-            def raced(): Boolean =
-              IvfIndex.SidecarCache.currentFingerprint(spark, idxPath) != fp
-            def countRetry(cause: Throwable = null): Unit = {
-              attempts += 1
-              if (attempts >= 5) {
-                // retries exhausted with the fingerprint NEVER moving:
-                // the failures weren't a maintenance race — surface the
-                // genuine error rather than blaming index churn
-                if (cause != null && !everRaced) throw cause
-                val ex = new IllegalStateException(
-                  s"serveOnline: index at '$idxPath' churns faster than " +
-                    s"micro-batch $batchId can serve — pause maintenance or " +
-                    "widen the trigger interval")
-                if (cause != null) ex.initCause(cause)
-                throw ex
-              }
-            }
-            try {
-              val panel = b.select(col("q_id"), col("q_emb"),
-                graft.functions.VectorExprs.nearest_centroid(
-                  col("q_emb"), side.refresh, side.dim).as("cell"))
-              val served =
-                if (side.hasPq)
-                  IvfIndex.servePq(IvfIndex.readFull(spark, idxPath), b, panel,
-                    k, shortlist, side.serving, side.books,
-                    cellRows = side.counts, knownBatchRows = Some(n))
-                else IvfIndex.serve(IvfIndex.read(spark, idxPath), panel, k)
-              // idempotent per batchId: a replay overwrites its own
-              // subdirectory (readers see `batch` as a partition column
-              // after the served columns — positional consumers unaffected)
-              served.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-              // an index commit that raced THIS batch's gather: frozen
-              // mode aborts before the checkpoint marks the batch done
-              // (the replay overwrites the subdirectory, so the torn
-              // output is never visible durably); follow mode re-serves
-              // against the new generation and overwrites in place
-              if (!raced()) committedUnder = fp
-              else if (!followIndex) requireFrozen(s"during micro-batch $batchId")
-              else { everRaced = true; countRetry() }
-            } catch {
-              // a maintenance rewrite can also surface as the gather
-              // failing outright (compact deletes the files mid-scan —
-              // Spark throws, never silently drops them) — and it can
-              // fail BEFORE the new header lands: compact rewrites the
-              // cell files, runs a whole means-refresh job, and only
-              // then commits the sidecar (IvfIndex.compact), so the
-              // fingerprint may lag the failure by seconds. Follow mode
-              // therefore retries every NonFatal failure with a short
-              // backoff when the commit hasn't landed yet; if the
-              // retries exhaust and the fingerprint NEVER moved, the
-              // original error rethrows (countRetry) — it wasn't a
-              // race. Frozen mode stays loud: a raced failure surfaces
-              // as the clear contract violation (with the gather error
-              // as cause), anything else rethrows raw.
-              case e if scala.util.control.NonFatal(e) &&
-                  !e.isInstanceOf[java.util.ConcurrentModificationException] =>
-                if (raced()) everRaced = true
-                if (!followIndex) {
-                  requireFrozen(s"during micro-batch $batchId", e)
-                  throw e
+        // gate at zero extra driver jobs, like planServe); the batch's
+        // statement releases it and the serve's cuts
+        Materialize.statement {
+          val b = Materialize.cut(batch)
+          val n = b.count()
+          if (n > 0) {
+            require(n <= RunToTableMaxRows,
+              s"serveOnline: micro-batch has $n rows (cap $RunToTableMaxRows): " +
+                "serving batches must be query-sized")
+            var attempts = 0
+            var everRaced = false
+            var committedUnder: String = null
+            while (committedUnder == null) {
+              val (fp, side) = if (followIndex) resolve() else frozen
+              def raced(): Boolean =
+                IvfIndex.SidecarCache.currentFingerprint(spark, idxPath) != fp
+              def countRetry(cause: Throwable = null): Unit = {
+                attempts += 1
+                if (attempts >= 5) {
+                  // retries exhausted with the fingerprint NEVER moving:
+                  // the failures weren't a maintenance race — surface the
+                  // genuine error rather than blaming index churn
+                  if (cause != null && !everRaced) throw cause
+                  val ex = new IllegalStateException(
+                    s"serveOnline: index at '$idxPath' churns faster than " +
+                      s"micro-batch $batchId can serve — pause maintenance or " +
+                      "widen the trigger interval")
+                  if (cause != null) ex.initCause(cause)
+                  throw ex
                 }
-                countRetry(e)
-                if (!everRaced) Thread.sleep(500L * attempts)
+              }
+              try {
+                val panel = b.select(col("q_id"), col("q_emb"),
+                  graft.functions.VectorExprs.nearest_centroid(
+                    col("q_emb"), side.refresh, side.dim).as("cell"))
+                val served =
+                  if (side.hasPq)
+                    IvfIndex.servePq(IvfIndex.readFull(spark, idxPath), b, panel,
+                      k, shortlist, side.serving, side.books,
+                      cellRows = side.counts, knownBatchRows = Some(n))
+                  else IvfIndex.serve(IvfIndex.read(spark, idxPath), panel, k)
+                // idempotent per batchId: a replay overwrites its own
+                // subdirectory (readers see `batch` as a partition column
+                // after the served columns — positional consumers unaffected)
+                served.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+                // an index commit that raced THIS batch's gather: frozen
+                // mode aborts before the checkpoint marks the batch done
+                // (the replay overwrites the subdirectory, so the torn
+                // output is never visible durably); follow mode re-serves
+                // against the new generation and overwrites in place
+                if (!raced()) committedUnder = fp
+                else if (!followIndex) requireFrozen(s"during micro-batch $batchId")
+                else { everRaced = true; countRetry() }
+              } catch {
+                // a maintenance rewrite can also surface as the gather
+                // failing outright (compact deletes the files mid-scan —
+                // Spark throws, never silently drops them) — and it can
+                // fail BEFORE the new header lands: compact rewrites the
+                // cell files, runs a whole means-refresh job, and only
+                // then commits the sidecar (IvfIndex.compact), so the
+                // fingerprint may lag the failure by seconds. Follow mode
+                // therefore retries every NonFatal failure with a short
+                // backoff when the commit hasn't landed yet; if the
+                // retries exhaust and the fingerprint NEVER moved, the
+                // original error rethrows (countRetry) — it wasn't a
+                // race. Frozen mode stays loud: a raced failure surfaces
+                // as the clear contract violation (with the gather error
+                // as cause), anything else rethrows raw.
+                case e if scala.util.control.NonFatal(e) &&
+                    !e.isInstanceOf[java.util.ConcurrentModificationException] =>
+                  if (raced()) everRaced = true
+                  if (!followIndex) {
+                    requireFrozen(s"during micro-batch $batchId", e)
+                    throw e
+                  }
+                  countRetry(e)
+                  if (!everRaced) Thread.sleep(500L * attempts)
+              }
             }
           }
         }
-        ()
       }
     checkpointLocation.foreach(c => writer.option("checkpointLocation", c))
     writer.trigger(trigger).start()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.core.Sessions
+import graft.core.{Materialize, Sessions}
 
 /** Registry-wide physical-plan lint: builds EVERY gated query's plan
   * at the given fixture and flags the scale anti-patterns —
@@ -128,7 +128,7 @@ object PlanLint {
     var errors = List.empty[String]
     var checked = 0
     graft.queries.Registry.all.foreach { q =>
-      try {
+      try Materialize.statement {
         val df = streamingTwins.get(q.name)
           .map(f => f(spark, sfDir)).getOrElse(q.build(spark, sfDir))
         val exec = df.queryExecution.executedPlan

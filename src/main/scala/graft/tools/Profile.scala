@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.core.Sessions
+import graft.core.{Materialize, Sessions}
 import graft.queries.Registry
 import graft.server.JsonResult.esc
 import graft.trace.JobListener
@@ -85,7 +85,7 @@ object Profile {
     val sc = spark.sparkContext
     def build(name: String): DataFrame = Registry.queries(name)(spark, sfDir)
     def write(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
-    names.foreach(n => try write(build(n)) catch { case _: Throwable => () })
+    names.foreach(n => try Materialize.statement(write(build(n))) catch { case _: Throwable => () })
     sc.addSparkListener(jobs)
     spark.listenerManager.register(writes)
     sc.setLocalProperty(JobListener.Key, Tag)
@@ -95,7 +95,7 @@ object Profile {
       val start = System.currentTimeMillis()
       val t0 = System.nanoTime()
       var t1 = -1L
-      val err = try {
+      val err = try Materialize.statement {
         val df = build(name)
         t1 = System.nanoTime()
         write(df); None

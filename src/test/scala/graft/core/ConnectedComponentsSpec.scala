@@ -45,16 +45,22 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("superseded per-round checkpoints are released, not pinned for the job") {
-    // a 200-chain runs ~8 pointer-jumping rounds, each localCheckpoint
-    // pinning a label-set copy; after run() only the FINAL round's
-    // checkpoint may stay resident (the returned frame derives from it).
-    // Guards the LogicalRDD unpersist path against silently not matching.
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val labels = ConnectedComponents.run(
-      (0L until 200L).map(i => (i, i + 1)).toDF("src", "dst"), "src", "dst")
-    labels.count()
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.size <= 1, s"expected ≤1 resident checkpoint, found ${leaked.size}")
+    // a 200-chain runs ~8 pointer-jumping rounds of the distributed
+    // loop, each cut pinning a label-set copy. Inside the statement
+    // only the FINAL round may stay resident (the returned frame reads
+    // it); once the statement ends nothing does. Guards the LogicalRDD
+    // release path against silently not matching.
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Materialize.statement {
+      val (labels, rounds) = ConnectedComponents.runCounted(
+        (0L until 200L).map(i => (i, i + 1)).toDF("src", "dst"), "src", "dst")
+      assert(labels.count() == 201 && rounds > 2)
+      val resident = sc.getPersistentRDDs.keySet -- before
+      assert(resident.size <= 1, s"expected ≤1 resident checkpoint, found ${resident.size}")
+    }
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"expected no resident checkpoint, found ${leaked.size}")
   }
 
   test("driver-local fast path ≡ distributed loop, label for label (r15)") {

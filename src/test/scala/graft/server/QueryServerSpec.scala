@@ -194,6 +194,28 @@ class QueryServerSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("/explain/ and /query/ of a dedup statement leave no persisted RDD behind") {
+    val server = new QueryServer(GraftSession(spark, sf0001), port = 0)
+    val port = server.start()
+    try {
+      val client = HttpClient.newHttpClient()
+      def post(path: String) = client.send(
+        HttpRequest.newBuilder(URI.create(s"http://localhost:$port/$path/"))
+          .POST(HttpRequest.BodyPublishers.ofString(
+            """{"query":"dedup near doc_id, text from documents"}""")).build(),
+        HttpResponse.BodyHandlers.ofString()).body()
+      val sc = spark.sparkContext
+      for (path <- Seq("explain", "query")) {
+        val before = sc.getPersistentRDDs.keySet
+        // planning alone runs BucketGuard's eager cut
+        val body = post(path)
+        assert(body.contains(""""Status":"ok""""), body)
+        val left = sc.getPersistentRDDs.keySet -- before
+        assert(left.isEmpty, s"/$path/ left ${left.size} persisted RDD(s)")
+      }
+    } finally server.stop()
+  }
+
   // ── websocket push channel (reference /socket/, server.go:19-88) ──
 
   private def wsConnect(port: Int,

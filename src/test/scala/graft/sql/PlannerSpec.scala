@@ -2,6 +2,25 @@ package graft.sql
 
 import graft.SparkSpec
 
+/** A local filesystem under the `probefs` scheme that records each
+  * path Spark's data-source resolution touches (a table read), so a
+  * spec can tell a read from a plain existence check. */
+class ProbeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "probefs"
+  override def getUri: java.net.URI = java.net.URI.create("probefs:///")
+  private def seen(p: org.apache.hadoop.fs.Path): Unit =
+    if (Thread.currentThread.getStackTrace.exists(
+        _.getClassName.startsWith("org.apache.spark.sql.execution.datasources.DataSource")))
+      ProbeFs.read.add(p.toString)
+  override def getFileStatus(p: org.apache.hadoop.fs.Path) = { seen(p); super.getFileStatus(p) }
+  override def exists(p: org.apache.hadoop.fs.Path): Boolean = { seen(p); super.exists(p) }
+  override def listStatus(p: org.apache.hadoop.fs.Path) = { seen(p); super.listStatus(p) }
+}
+
+object ProbeFs {
+  val read = new java.util.concurrent.ConcurrentLinkedQueue[String]
+}
+
 /** Dialect end-to-end: queries through GraftSession over the test
   * fixtures. Includes a good/bad corpus in the spirit of the
   * reference's TestAll (reference main_test.go:16-179): bad queries
@@ -965,6 +984,31 @@ class PlannerSpec extends SparkSpec {
     // test: the name reaches the catalog lookup, which rejects it
     val e = intercept[Exception](GraftSession(spark, data).table("a:b"))
     assert(!String.valueOf(e.getMessage).contains("URI"), e)
+  }
+
+  test("a catalog-only name is never read under the data dir; a data-dir file still shadows a view") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration.set("fs.probefs.impl", classOf[ProbeFs].getName)
+    val local = freshDir("probedata").toString
+    val data = s"probefs://$local"
+    Seq(1L, 2L).toDF("v").write.parquet(s"$local/shadowed.parquet")
+    Seq(99L).toDF("v").createOrReplaceTempView("shadowed")
+    Seq(7L).toDF("v").createOrReplaceTempView("catalog_only")
+    try {
+      ProbeFs.read.clear()
+      val got = GraftSession(spark, data).sql("select v from catalog_only").as[Long].collect()
+      assert(got.toSeq == Seq(7L))
+      val reads = ProbeFs.read.asScala.filter(_.endsWith("catalog_only.parquet"))
+      assert(reads.isEmpty, s"read under the data dir: ${reads.mkString(", ")}")
+      val shadowed = GraftSession(spark, data).sql("select v from shadowed").as[Long].collect()
+      assert(shadowed.sorted.toSeq == Seq(1L, 2L), "the data-dir file must win over the view")
+      assert(ProbeFs.read.asScala.exists(_.endsWith("shadowed.parquet")),
+        "the data-dir file is read through the data dir's own filesystem")
+    } finally {
+      spark.catalog.dropTempView("shadowed")
+      spark.catalog.dropTempView("catalog_only")
+    }
   }
 
   test("nested session() gets a dedicated error, not 'not allowed here'") {
