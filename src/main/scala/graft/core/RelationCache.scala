@@ -16,9 +16,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Key namespaces:
   *  - `tbl:<path>` — [[Tables]]' parquet/json/orc/xml relations;
-  *  - `csv:<header>:<path>` — a CSV file's inferred relation (sample
-  *    jobs + type inference done once per file version; a header read
-  *    and an `nh` read of one path are separate entries);
+  *  - `csv:<header>:<path>` — a CSV file's inferred relation (the
+  *    driver-local head read + type inference done once per file
+  *    version; a miss runs no Spark job either; a header read and an
+  *    `nh` read of one path are separate entries);
   *  - `ivfraw:<path>` — a vector index's raw parquet relation, keyed
   *    on the sidecar generation.
   *

@@ -2478,12 +2478,14 @@ object VectorQueries {
             .select((col("vec_id") + lit(1000000L)).as("vec_id"),
               col("embedding")),
           centers)
-        val q = assigned.writeStream
-          .foreachBatch((batch: DataFrame, _: Long) =>
-            graft.operators.IvfIndex.upsert(s, path, batch))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.processAllAvailable(); q.stop()
+        graft.streaming.StreamingOps.runAvailable(s, "v48") { checkpoint =>
+          assigned.writeStream
+            .foreachBatch((batch: DataFrame, _: Long) =>
+              graft.operators.IvfIndex.upsert(s, path, batch))
+            .option("checkpointLocation", checkpoint)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+        }
         graft.operators.IvfIndex.read(s, path)
           .select(col("vec_id"), col("cell"))
       },
@@ -2551,12 +2553,14 @@ object VectorQueries {
         // long-running stream's file population and readLatest cost
         // stay bounded without a manual maintenance schedule
         // (StreamingSpec pins the trigger actually firing mid-stream)
-        val q = assigned.writeStream
-          .foreachBatch((batch: DataFrame, _: Long) =>
-            { graft.operators.IvfIndex.appendAndMaintain(s, path, batch); () })
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.processAllAvailable(); q.stop()
+        graft.streaming.StreamingOps.runAvailable(s, "v51") { checkpoint =>
+          assigned.writeStream
+            .foreachBatch((batch: DataFrame, _: Long) =>
+              { graft.operators.IvfIndex.appendAndMaintain(s, path, batch); () })
+            .option("checkpointLocation", checkpoint)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+        }
         graft.operators.IvfIndex.compact(s, path, maxFilesPerCell = 1)
         graft.operators.IvfIndex.read(s, path)
           .select(col("vec_id"), col("cell"))
@@ -2629,9 +2633,10 @@ object VectorQueries {
           .parquet(qdir))
         val stream = s.readStream.schema(q0.schema)
           .option("maxFilesPerTrigger", "1").parquet(qdir)
-        val sq = graft.streaming.StreamingOps.serveOnline(
-          s, stream, path, k = 5, shortlist = 20, out)
-        sq.processAllAvailable(); sq.stop()
+        graft.streaming.StreamingOps.runAvailable(s, "v52") { checkpoint =>
+          graft.streaming.StreamingOps.serveOnline(
+            s, stream, path, k = 5, shortlist = 20, out, Some(checkpoint))
+        }
         s.read.parquet(out)
           .select(col("q_id"), col("n_id"), col("sim"), col("rank"))
       },

@@ -1,7 +1,12 @@
 package graft.sources
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVExprUtils, CSVOptions}
+import org.apache.spark.sql.execution.datasources.{HadoopFileLinesReader, HadoopFsRelation}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 import graft.functions.CellKernels.csv_cell
@@ -17,10 +22,11 @@ import graft.sql.Durations
   *  - a value parseable as both date and duration prefers duration;
   *  - headerless files (`nh`) get col1..colN names.
   *
-  * The sample is a bounded driver-side collect (10k rows — same bound
-  * as the reference); the *cast* of the full data is one distributed
-  * native expression per column (graft.functions.CsvCell), so the scan
-  * itself stays parallel at any scale.
+  * The sample is a bounded driver-side read of the file head (10k
+  * rows, the reference's bound, read locally as the reference reads
+  * it, with no Spark job); the *cast* of the full data is one
+  * distributed native expression per column (graft.functions.CsvCell),
+  * so the scan itself stays parallel at any scale.
   */
 object CsvSource {
   sealed abstract class LatType(val rank: Int)
@@ -151,29 +157,91 @@ object CsvSource {
     acc
   }
 
+  /** Rows the inference sample holds (reference utils.go:434). */
+  val SampleRows = 10000
+
   /** Read a CSV with dialect inference. The inferred relation (the
-    * header job, the sample job and the type classification) is
-    * resolved once per file version: it sits in the session's
+    * driver-local head read and the type classification of [[infer]])
+    * is resolved once per file version: it sits in the session's
     * [[graft.core.RelationCache]] under `csv:<header>:<path>` and is
     * revalidated against the path's stamp on every call, so a
-    * rewritten file re-infers. Metadata only — every execution still
-    * scans the file. */
+    * rewritten file re-infers. Neither a hit nor a miss runs a Spark
+    * job; every execution still scans the file. */
   def read(spark: SparkSession, path: String, header: Boolean = true): DataFrame =
     graft.core.RelationCache.getOrBuild(spark, s"csv:$header:$path",
       graft.core.RelationCache.stamp(path))(infer(spark, path, header))
 
-  private def infer(spark: SparkSession, path: String, header: Boolean): DataFrame = {
-    val raw0 = spark.read
-      .option("header", header.toString)
-      .option("inferSchema", "false")
-      .csv(path)
-    val raw = if (header) raw0
-      else raw0.toDF(raw0.columns.indices.map(i => s"col${i + 1}"): _*)
+  /** The CSV relation at `path` with a one-string-column placeholder
+    * schema: the file listing the head read and the inferred relation
+    * share. Resolving it lists the files and runs no job. */
+  private[sources] def listing(spark: SparkSession, path: String,
+      header: Boolean): HadoopFsRelation =
+    Bridge.fileRelation(spark.read.option("header", header.toString)
+      .schema("value STRING").csv(path))
 
-    // bounded sample (reference samples ≤10k rows, utils.go:434)
-    val sample = raw.limit(10000).collect()
-    val types = raw.columns.indices.map { i =>
-      columnType(sample.iterator.map(row => if (row.isNullAt(i)) "" else row.getString(i)))
+  /** The column names and the first [[SampleRows]] records of the CSV
+    * relation `rel`, exactly as Spark's own two inference jobs (the
+    * header `take(1)` and `limit(SampleRows).collect()` over an
+    * all-string read) would return them, but read on the driver with
+    * no Spark job:
+    *  - files are visited in the order the scan's `FilePartition`s list
+    *    them, each split through Spark's line reader, so the sample is
+    *    the scan's first records;
+    *  - blank and comment lines are dropped, and each file's first
+    *    split drops the file's header line, as the scan does;
+    *  - the first remaining line of the first split that has one names
+    *    the columns (Spark's `makeSafeHeader`; `col1..colN` for `nh`);
+    *  - each line is tokenized by Spark's parser settings; a cell equal
+    *    to the null value is null, and short rows pad with nulls.
+    * A relation with no file fails as Spark's schema inference does. */
+  private[sources] def head(rel: HadoopFsRelation,
+      header: Boolean): (IndexedSeq[String], IndexedSeq[Array[String]]) = {
+    if (rel.location.inputFiles.isEmpty) throw Bridge.unableToInferSchema("CSV")
+    val spark = rel.sparkSession
+    val conf = spark.sessionState.conf
+    val options = new CSVOptions(rel.options, conf.csvColumnPruning,
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(rel.options)
+    val parser = new CsvParser(options.asParserSettings)
+    def tokens(line: String): Array[String] =
+      Option(parser.parseLine(line)).getOrElse(Array.empty[String])
+    var names: IndexedSeq[String] = null
+    def name(line: String): Unit = if (names == null) names = {
+      val t = tokens(line)
+      if (header) CSVUtils.makeSafeHeader(t, conf.caseSensitiveAnalysis, options).toIndexedSeq
+      else t.indices.map(i => s"col${i + 1}")
+    }
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Array[String]]
+    val files = Bridge.filePartitions(rel).iterator.flatMap(_.files) // an empty file has none
+    while (rows.size < SampleRows && files.hasNext) {
+      val file = files.next()
+      val reader = new HadoopFileLinesReader(file, options.lineSeparatorInRead, hadoopConf)
+      try {
+        val lines = reader.map(l => new String(l.getBytes, 0, l.getLength, options.charset))
+        if (header && file.start == 0) CSVExprUtils.extractHeader(lines, options).foreach(name)
+        val body = CSVExprUtils.filterCommentAndEmpty(lines, options).buffered
+        if (body.hasNext) name(body.head)
+        while (rows.size < SampleRows && body.hasNext) {
+          val t = tokens(body.next())
+          rows += Array.tabulate(names.size) { i =>
+            if (i < t.length && t(i) != options.nullValue) t(i) else null
+          }
+        }
+      } finally reader.close()
+    }
+    (Option(names).getOrElse(IndexedSeq.empty), rows.toIndexedSeq)
+  }
+
+  /** The inferred relation: the [[head]] sample classified per column,
+    * over the listing's relation with the all-string schema the head
+    * read named, so Spark runs no header job and lists the files once. */
+  private def infer(spark: SparkSession, path: String, header: Boolean): DataFrame = {
+    val rel = listing(spark, path, header)
+    val (names, sample) = head(rel, header)
+    val raw = spark.baseRelationToDataFrame(rel.copy(
+      dataSchema = StructType(names.map(StructField(_, StringType))))(spark))
+    val types = names.indices.map { i =>
+      columnType(sample.iterator.map(row => if (row(i) == null) "" else row(i)))
     }
 
     // one native kernel per cell: trim, null recognition and the

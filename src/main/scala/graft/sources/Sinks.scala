@@ -1,6 +1,14 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.util.concurrent.LinkedBlockingQueue
+
+import scala.concurrent.ExecutionContext
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -66,43 +74,24 @@ object Sinks {
   }
 
   /** Save as CSV at `path` (reference appends .csv when missing,
-    * files.go:158-180). CLI convenience form: the result lands as ONE
-    * actual .csv FILE at the path — Spark's writer always emits a
-    * part-file directory, so the single coalesced part is moved over
-    * the target afterward (a reference user expects `out.csv` to be a
-    * file, not `out.csv/part-0000…`). Local-filesystem semantics on
-    * purpose: this is the CLI path; the 100 TB path is
-    * [[saveCsvDir]], which keeps parallel part files. */
+    * files.go:158-180) as ONE actual .csv FILE — a reference user
+    * expects `out.csv` to be a file, not `out.csv/part-0000…`. The
+    * server's `saveMode: "single"`. The rows go through the same
+    * ordered writer as [[saveCsvStreaming]], into a sibling temp file
+    * that one atomic rename puts over the target: a reader sees the
+    * previous file or the complete new one, and a failed save leaves
+    * the previous file as it was. Local filesystem only; the 100 TB
+    * path is [[saveCsvDir]], which keeps parallel part files. */
   def saveCsv(df: DataFrame, path: String): String = {
-    val p = if (path.endsWith(".csv")) path else path + ".csv"
-    // the part-file move below uses java.io.File — valid only on the
-    // local filesystem. On HDFS/S3 the write would succeed remotely
-    // and then fail with a misleading "no part file" error, leaving
-    // the remote tmp dir behind: fail fast instead.
-    val scheme = new org.apache.hadoop.fs.Path(p).getFileSystem(
-      df.sparkSession.sessionState.newHadoopConf()).getScheme
-    if (scheme != "file")
-      sys.error(s"saveCsv writes a single local .csv file; path scheme " +
-        s"'$scheme' is not local — use saveCsvDir (parallel part files) instead")
-    val tmp = p + ".__spark_tmp__"
-    // escape=" gives RFC-4180 quote doubling (Go csv.Writer's form,
-    // matching printCsv/saveCsvStreaming) instead of Spark's default
-    // backslash escaping
-    formatted(df).coalesce(1).write.mode("overwrite")
-      .option("header", "true").option("escape", "\"")
-      .option("ignoreLeadingWhiteSpace", "false")
-      .option("ignoreTrailingWhiteSpace", "false")
-      .option("emptyValue", "") // bare empty, like the reference's Go csv.Writer
-      .csv(tmp)
-    val dir = new java.io.File(tmp)
-    val part = Option(dir.listFiles()).getOrElse(Array.empty)
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
-      .getOrElse(sys.error(s"no part file written under $tmp"))
-    val target = new java.io.File(p)
-    if (target.isDirectory) org.apache.commons.io.FileUtils.deleteDirectory(target)
-    java.nio.file.Files.move(part.toPath, target.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    val (p, target) = localCsv(df, path, "saveCsv writes a single local .csv file")
+    val tmp = target.resolveSibling(
+      s".${target.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      val out = Files.newOutputStream(tmp, StandardOpenOption.CREATE_NEW)
+      try writeOrdered(df, out) finally out.close()
+      if (Files.isDirectory(target)) FileUtils.deleteDirectory(target.toFile)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
     p
   }
 
@@ -158,35 +147,82 @@ object Sinks {
 
   /** Realtime single-file CSV save (reference files.go:85-156 streams
     * rows to the save file DURING execution, primed before the query
-    * runs, main.go:124-131): header lands immediately, then rows are
-    * appended and flushed as `toLocalIterator` drains each partition —
-    * so a multi-hour scan shows partial output on disk, like the
-    * reference, instead of nothing until the end. CLI convenience
-    * form: executors still compute partitions in parallel; only the
-    * final append is serialized through the driver, bounded by one
-    * partition's rows in memory at a time. The 100 TB path remains
-    * [[saveCsvDir]]. */
+    * runs, main.go:124-131): the header lands immediately, then each
+    * partition's rows are appended, in partition order, as soon as it
+    * and every partition before it have finished — so a multi-hour scan
+    * shows partial output on disk, like the reference, instead of
+    * nothing until the end. Executors compute and render the
+    * partitions in parallel, one job per window of
+    * `defaultParallelism` partitions; the driver holds at most one
+    * window's rendered partitions, and each job's results are capped by
+    * `spark.driver.maxResultSize`. A failed task fails the call and
+    * leaves the rows appended so far. CLI convenience form; the 100 TB
+    * path remains [[saveCsvDir]]. */
   def saveCsvStreaming(df: DataFrame, path: String): String = {
+    val (p, target) = localCsv(df, path, "saveCsvStreaming appends to a single local .csv file")
+    if (Files.isDirectory(target)) FileUtils.deleteDirectory(target.toFile)
+    val out = Files.newOutputStream(target) // truncates in place
+    try writeOrdered(df, out) finally out.close()
+    p
+  }
+
+  /** `path` with `.csv` appended when missing, and its local file; any
+    * other filesystem fails fast, naming the parallel writer to use. */
+  private def localCsv(df: DataFrame, path: String, what: String): (String, Path) = {
     val p = if (path.endsWith(".csv")) path else path + ".csv"
     val scheme = new org.apache.hadoop.fs.Path(p).getFileSystem(
       df.sparkSession.sessionState.newHadoopConf()).getScheme
     if (scheme != "file")
-      sys.error(s"saveCsvStreaming appends to a single local .csv file; path " +
-        s"scheme '$scheme' is not local — use saveCsvDir (parallel part files) instead")
-    val target = new java.io.File(p)
-    if (target.isDirectory) org.apache.commons.io.FileUtils.deleteDirectory(target)
+      sys.error(s"$what; path scheme '$scheme' is not local — use saveCsvDir " +
+        "(parallel part files) instead")
+    (p, Paths.get(p))
+  }
+
+  /** `df` as CSV into `out`: the header, flushed at once, then every
+    * partition's lines in partition order. Each task renders its
+    * partition to UTF-8 CSV bytes; one job runs per window of
+    * `defaultParallelism` partitions, and the driver appends a
+    * partition, with one flush, once it and all partitions before it
+    * are in. A failed job cancels the window and throws. */
+  private def writeOrdered(df: DataFrame, out: java.io.OutputStream): Unit = {
     val f = formatted(df)
-    // explicit UTF-8 — FileWriter would use the platform default
-    // charset and silently mangle non-ASCII text on C-locale boxes
-    val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      new java.io.FileOutputStream(target), java.nio.charset.StandardCharsets.UTF_8))
-    try {
-      w.write(f.columns.map(csvField).mkString(",")); w.newLine(); w.flush()
-      f.toLocalIterator().forEachRemaining { row =>
-        w.write(csvLine(f.columns.length, row)); w.newLine(); w.flush()
+    val ncols = f.columns.length
+    out.write((f.columns.map(csvField).mkString("", ",", "\n")).getBytes(UTF_8))
+    out.flush()
+    val rdd = f.queryExecution.toRdd
+    val sc = rdd.sparkContext
+    val render = (rows: Iterator[InternalRow]) => {
+      val sb = new java.lang.StringBuilder()
+      rows.foreach { row =>
+        var i = 0
+        while (i < ncols) {
+          if (i > 0) sb.append(',')
+          if (!row.isNullAt(i)) sb.append(csvField(row.getUTF8String(i).toString))
+          i += 1
+        }
+        sb.append('\n')
       }
-    } finally w.close()
-    p
+      sb.toString.getBytes(UTF_8)
+    }
+    (0 until rdd.getNumPartitions).grouped(math.max(1, sc.defaultParallelism)).foreach { window =>
+      val arrived = new LinkedBlockingQueue[Either[Throwable, (Int, Array[Byte])]]()
+      val job = sc.submitJob(rdd, render, window,
+        (i: Int, bytes: Array[Byte]) => arrived.put(Right(i -> bytes)), ())
+      job.onComplete(_.failed.foreach(e => arrived.put(Left(e))))(ExecutionContext.parasitic)
+      val parts = new Array[Array[Byte]](window.size)
+      var next = 0
+      try while (next < parts.length) {
+        arrived.take() match {
+          case Left(e) => throw e
+          case Right((i, bytes)) => parts(i) = bytes
+        }
+        while (next < parts.length && parts(next) != null) {
+          out.write(parts(next)); out.flush()
+          parts(next) = null
+          next += 1
+        }
+      } catch { case e: Throwable => job.cancel(); throw e }
+    }
   }
 
   /** One CSV field — RFC-4180 quoting matching both Spark's writer
@@ -199,12 +235,6 @@ object Sinks {
       "\"" + v.replace("\"", "\"\"") + "\""
     else v
 
-  /** One already-formatted row as a CSV line (null → bare empty). */
-  private def csvLine(ncols: Int, row: org.apache.spark.sql.Row): String =
-    (0 until ncols).map { i =>
-      if (row.isNullAt(i)) "" else csvField(row.getString(i))
-    }.mkString(",")
-
   /** Multi-query save paths: base, base-2, base-3 ...
     * (reference files.go:85-156). */
   def savePaths(base: String, n: Int): Seq[String] = {
@@ -212,13 +242,9 @@ object Sinks {
     (1 to n).map(i => if (i == 1) s"$stripped.csv" else s"$stripped-$i.csv")
   }
 
-  /** Print a result to stdout as CSV (CLI mode, reference main.go:149-158).
-    * Bounded by `limit` rows to keep the driver safe. */
-  def printCsv(df: DataFrame, limit: Int = 100000): Unit = {
-    val f = formatted(df)
-    println(f.columns.mkString(","))
-    f.limit(limit).toLocalIterator().forEachRemaining { row =>
-      println(csvLine(f.columns.length, row))
-    }
-  }
+  /** Print a result to stdout as CSV (CLI mode, reference main.go:149-158)
+    * through the savers' ordered writer. Bounded by `limit` rows to keep
+    * the driver safe. */
+  def printCsv(df: DataFrame, limit: Int = 100000): Unit =
+    writeOrdered(df.limit(limit), Console.out)
 }

@@ -40,6 +40,23 @@ object StreamingOps {
   def readEvents(spark: SparkSession, dir: String): DataFrame =
     graft.core.Tables.normalizeNanoTs(readTable(spark, dir, "events"))
 
+  /** Start a streaming query on a checkpoint dir in the per-application
+    * work dir, process all available input, then stop the query and
+    * delete the checkpoint, also when the query fails. Without a
+    * location Spark makes a temporary one under java.io.tmpdir, which
+    * it keeps when the query fails. `name` prefixes the dir's name. */
+  def runAvailable(spark: SparkSession, name: String)
+      (start: String => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    val checkpoint = graft.core.Sessions.workPath(spark, s"checkpoint_$name",
+      java.util.UUID.randomUUID().toString)
+    val q = start(checkpoint)
+    try q.processAllAvailable()
+    finally {
+      q.stop()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(checkpoint))
+    }
+  }
+
   /** Run a streaming frame to completion (one AvailableNow pass) into
     * a uniquely-named memory sink and return its rows as a local
     * DataFrame — the shared scaffold of every driver-visible streaming
@@ -56,11 +73,13 @@ object StreamingOps {
   def runToTable(spark: SparkSession, df: DataFrame, mode: String,
       prefix: String, maxRows: Long = RunToTableMaxRows): DataFrame = {
     val sink = prefix + java.util.UUID.randomUUID().toString.take(8)
-    val q = df.writeStream.outputMode(mode)
-      .format("memory").queryName(sink)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable(); q.stop()
+    runAvailable(spark, sink) { checkpoint =>
+      df.writeStream.outputMode(mode)
+        .format("memory").queryName(sink)
+        .option("checkpointLocation", checkpoint)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+    }
     val out = spark.table(sink)
     val n = out.count()
     require(n <= maxRows,

@@ -1,13 +1,17 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.errors.QueryCompilationErrors
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 
-/** Column ⇄ Expression bridge. Spark 4 hides these conversions behind
-  * private[sql]; extension libraries conventionally expose them from a
-  * file compiled into the org.apache.spark.sql package tree (same
-  * technique the ecosystem uses for custom Expressions). */
+/** Column ⇄ Expression bridge, plus the file-scan pieces CSV inference
+  * reads on the driver. Spark 4 hides these behind private[sql];
+  * extension libraries conventionally expose them from a file compiled
+  * into the org.apache.spark.sql package tree (same technique the
+  * ecosystem uses for custom Expressions). */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -24,4 +28,36 @@ object Bridge {
     case _ => throw new IllegalArgumentException(
       s"distinctAgg: not a function column: ${c.node}")
   }
+
+  /** The file relation `df` reads. */
+  def fileRelation(df: DataFrame): HadoopFsRelation =
+    df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    } match {
+      case Some(r: HadoopFsRelation) => r
+      case other => throw new IllegalArgumentException(s"fileRelation: not a file relation: $other")
+    }
+
+  /** The file splits a scan of `rel` reads, in the order its
+    * `FilePartition`s list them: the steps `FileSourceScanExec` takes
+    * for an unbucketed relation (split each listed file at the max
+    * split size, largest split first, then pack), without planning the
+    * scan or broadcasting its reader. No job runs. */
+  def filePartitions(rel: HadoopFsRelation): Seq[FilePartition] = {
+    val spark = rel.sparkSession
+    val dirs = rel.location.listFiles(Nil, Nil)
+    val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
+    val splits = dirs.flatMap { d =>
+      d.files.flatMap { f =>
+        PartitionedFileUtil.splitFiles(f, f.getPath,
+          rel.fileFormat.isSplitable(spark, rel.options, f.getPath), maxSplit, d.values)
+      }
+    }.sortBy(_.length)(Ordering[Long].reverse)
+    FilePartition.getFilePartitions(spark, splits, maxSplit)
+  }
+
+  /** The error Spark's file sources raise when a path holds no file to
+    * infer a schema from. */
+  def unableToInferSchema(format: String): Throwable =
+    QueryCompilationErrors.dataSchemaNotSpecifiedError(format)
 }

@@ -200,8 +200,8 @@ class CsvSourceSpec extends SparkSpec {
     val f = freshDir("csvhit").resolve("t.csv")
     Files.writeString(f, "id,v\n1,a\n2,b\n")
     var first, second: org.apache.spark.sql.DataFrame = null
-    assert(jobsDuring { first = CsvSource.read(spark, f.toString) } > 0,
-      "a miss runs the header and sample jobs")
+    assert(jobsDuring { first = CsvSource.read(spark, f.toString) } == 0,
+      "a miss reads its sample on the driver")
     assert(jobsDuring { second = CsvSource.read(spark, f.toString) } == 0,
       "a hit must not re-infer")
     assert(second eq first)
@@ -270,9 +270,138 @@ class CsvSourceSpec extends SparkSpec {
     spark.conf.set(key, "false")
     try {
       var a, b: org.apache.spark.sql.DataFrame = null
-      assert(jobsDuring { a = CsvSource.read(spark, f.toString) } > 0)
-      assert(jobsDuring { b = CsvSource.read(spark, f.toString) } > 0)
+      assert(jobsDuring { a = CsvSource.read(spark, f.toString) } == 0)
+      assert(jobsDuring { b = CsvSource.read(spark, f.toString) } == 0)
       assert(!(a eq b))
     } finally spark.conf.unset(key)
+  }
+
+  // ---- driver-local head read ≡ Spark's two inference jobs -----------
+
+  /** The inference input as Spark's own jobs produce it — the header
+    * `take(1)` of an unschema'd read, then `limit(SampleRows).collect()`
+    * over its all-string relation: the two-job path the head read
+    * replaced, kept here as its oracle. */
+  private def twoJobHead(path: String, header: Boolean): (Seq[String], Seq[Seq[String]]) = {
+    val raw0 = spark.read.option("header", header.toString)
+      .option("inferSchema", "false").csv(path)
+    val raw = if (header) raw0
+      else raw0.toDF(raw0.columns.indices.map(i => s"col${i + 1}"): _*)
+    val sample = raw.limit(CsvSource.SampleRows).collect().toSeq
+      .map(r => (0 until r.length).map(i => if (r.isNullAt(i)) null else r.getString(i)))
+    (raw.columns.toSeq, sample)
+  }
+
+  private def typeName(t: CsvSource.LatType): String = t match {
+    case CsvSource.LNull | CsvSource.LStr => "string"
+    case CsvSource.LInt => "long"
+    case CsvSource.LFloat => "double"
+    case CsvSource.LDate => "timestamp_ntz"
+    case CsvSource.LDur => "interval day to second"
+  }
+
+  /** The head read, and the schema `read` infers from it, equal the
+    * oracle's names, sample (in order) and classification; and a fresh
+    * read runs no Spark job. */
+  private def sameAsTwoJobs(path: String, header: Boolean = true): Unit = {
+    val (names, sample) = twoJobHead(path, header)
+    val (gotNames, gotSample) = CsvSource.head(CsvSource.listing(spark, path, header), header)
+    assert(gotNames == names, path)
+    assert(gotSample.map(_.toSeq) == sample, path)
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { df = CsvSource.read(spark, path, header) } == 0, path)
+    val want = names.indices.map { i =>
+      names(i) -> typeName(CsvSource.columnType(sample.iterator.map(r => Option(r(i)).getOrElse(""))))
+    }
+    assert(df.schema.fields.map(f => f.name -> f.dataType.typeName).toSeq == want, path)
+  }
+
+  private def write(path: java.nio.file.Path, text: String): String = {
+    Files.writeString(path, text); path.toString
+  }
+
+  test("head read equals the two-job path: single files, empty files, nh") {
+    val dir = freshDir("headone")
+    val big = new StringBuilder("id,amount,when,tag\n")
+    (1 to CsvSource.SampleRows + 1500).foreach { i =>
+      big.append(s"$i,${i * 0.5},2020-01-${1 + i % 28},t$i\n")
+    }
+    val one = write(dir.resolve("big.csv"), big.toString)
+    sameAsTwoJobs(one)
+    sameAsTwoJobs(one, header = false)
+    val hdrOnly = write(dir.resolve("hdr.csv"), "a,b,c\n")
+    sameAsTwoJobs(hdrOnly)
+    sameAsTwoJobs(hdrOnly, header = false)
+    val empty = write(dir.resolve("empty.csv"), "")
+    sameAsTwoJobs(empty)
+    sameAsTwoJobs(empty, header = false)
+    assert(CsvSource.head(CsvSource.listing(spark, empty, true), true)._1.isEmpty)
+  }
+
+  test("head read equals the two-job path: blank lines, CRLF, quoting, odd headers") {
+    val dir = freshDir("headshape")
+    val files = Seq(
+      // blank and whitespace-only lines before the header and among rows
+      "blank.csv" -> "\n  \n\na,b\n1,2\n\n   \n3,4\n\n",
+      "crlf.csv" -> "a,b\r\n1,x\r\n\r\n2,y\r\n",
+      // quoted comma, doubled quote, a quoted newline (a line break ends
+      // a record on a line-split scan), and a quoted empty
+      "quoted.csv" -> ("name,note\n\"a, b\",\"say \"\"hi\"\"\"\n" +
+        "\"multi\nline\",z\n\"\",\"\"\n"),
+      // duplicate names (case-insensitively too) and empty names
+      "dups.csv" -> "a,a,A,,b,\n1,2,3,4,5,6\n",
+      // short and long rows against the header
+      "ragged.csv" -> "a,b,c\n1\n1,2,3,4,5\n,,\n",
+      // null spellings stay cells for the classifier
+      "nulls.csv" -> "a,b\nNA,null\n,\n")
+    files.foreach { case (name, text) =>
+      val p = write(dir.resolve(name), text)
+      sameAsTwoJobs(p)
+      sameAsTwoJobs(p, header = false)
+    }
+  }
+
+  test("head read equals the two-job path: part files of different sizes, gzip") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    // three partitions of 3000, 6000 and 4500 rows: the scan reads the
+    // largest part first and the sample spans two files, so both the
+    // file order and each file's header skip show in the sample
+    val df = spark.range(0, 30000, 1, 3)
+      .filter(col("id") < 3000 || (col("id") >= 10000 && col("id") < 16000) ||
+        (col("id") >= 20000 && col("id") < 24500))
+      .select(col("id"), concat(lit("v"), col("id")).as("name"))
+    val dir = Sinks.saveCsvDir(df, s"${freshDir("headparts")}/parts")
+    val sizes = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      .map(_.length).toSeq
+    assert(sizes.size == 3 && sizes.distinct.size == 3, sizes.mkString(","))
+    sameAsTwoJobs(dir)
+    sameAsTwoJobs(dir, header = false)
+
+    val gz = freshDir("headgz").resolve("t.csv.gz")
+    val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
+    try out.write(("k,v\n" + (1 to 20000).map(i => s"$i,${i % 7}.5").mkString("\n"))
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    sameAsTwoJobs(gz.toString)
+
+    // the listing's splits are the ones the planned scan's own RDD reads
+    Seq(dir, gz.toString).foreach { p =>
+      val df = spark.read.option("header", "true").csv(p)
+      val scan = df.queryExecution.executedPlan.collectFirst {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s.inputRDD
+      }.get.asInstanceOf[org.apache.spark.sql.execution.datasources.FileScanRDD]
+      def splits(ps: Seq[org.apache.spark.sql.execution.datasources.FilePartition]) =
+        ps.map(_.files.map(f => (f.filePath.toString, f.start, f.length)).toSeq)
+      val listed = org.apache.spark.sql.graftbridge.Bridge.filePartitions(
+        CsvSource.listing(spark, p, header = true))
+      assert(splits(listed) == splits(scan.filePartitions), p)
+    }
+  }
+
+  test("head read: a directory with no file fails as Spark's inference does") {
+    val empty = freshDir("headnone").toString
+    val want = intercept[org.apache.spark.sql.AnalysisException](twoJobHead(empty, true))
+    val got = intercept[org.apache.spark.sql.AnalysisException](CsvSource.read(spark, empty))
+    assert(got.getMessage == want.getMessage)
   }
 }

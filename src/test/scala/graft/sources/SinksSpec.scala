@@ -220,4 +220,38 @@ class SinksSpec extends SparkSpec {
     back(Sinks.saveCsvStreaming(df, s"$suiteDir/rt_stream"))
     back(Sinks.saveCsvDir(df.repartition(2), s"$suiteDir/rt_dir"))
   }
+
+  // ---- ordered windowed writer ----------------------------------------
+
+  test("an 8-partition frame on 4 cores saves in 2 jobs; both savers write the same bytes") {
+    val df = spark.range(0, 800, 1, 8)
+      .select(col("id"), concat(lit("r,"), col("id")).as("s"), (col("id") / 3.0).as("d"))
+    assert(spark.sparkContext.defaultParallelism == 4)
+    var a, b = ""
+    assert(jobsDuring { b = Sinks.saveCsvStreaming(df, s"$suiteDir/win_stream") } == 2)
+    assert(jobsDuring { a = Sinks.saveCsv(df, s"$suiteDir/win_single") } == 2)
+    val fa = java.nio.file.Files.readString(java.nio.file.Paths.get(a))
+    assert(fa == java.nio.file.Files.readString(java.nio.file.Paths.get(b)))
+    // partition order is row order: the rows come back as ids 0..799
+    val ids = fa.split("\n").toSeq.drop(1).map(_.takeWhile(_ != ',').toLong)
+    assert(ids == (0L until 800L))
+  }
+
+  test("a task that throws mid-save fails both savers; saveCsv keeps the previous file") {
+    val boom = udf { (i: Long) =>
+      if (i == 650) throw new IllegalStateException("boom"); i
+    }
+    val df = spark.range(0, 800, 1, 8).select(boom(col("id")).as("id"))
+    val dir = freshDir("winfail")
+    val streamed = dir.resolve("s.csv").toString
+    val e1 = intercept[org.apache.spark.SparkException](Sinks.saveCsvStreaming(df, streamed))
+    assert(e1.getMessage.contains("boom"))
+
+    val single = dir.resolve("one.csv")
+    java.nio.file.Files.writeString(single, "previous\n")
+    val e2 = intercept[org.apache.spark.SparkException](Sinks.saveCsv(df, single.toString))
+    assert(e2.getMessage.contains("boom"))
+    assert(java.nio.file.Files.readString(single) == "previous\n")
+    assert(dir.toFile.list().toSet == Set("s.csv", "one.csv"), "no temp file left behind")
+  }
 }

@@ -44,6 +44,28 @@ class StreamingSpec extends SparkSpec {
     assert(ok.count() > 1 && ok.count() <= StreamingOps.RunToTableMaxRows)
   }
 
+  test("runToTable keeps its checkpoint in the work dir and removes it") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def temporary(): Set[String] =
+      Option(tmp.list()).fold(Set.empty[String])(_.filter(_.startsWith("temporary-")).toSet)
+    val work = new java.io.File(graft.core.Sessions.workDir(spark))
+    def checkpoints(): Set[String] =
+      Option(work.list()).fold(Set.empty[String])(_.filter(_.startsWith("checkpoint_")).toSet)
+    import org.apache.spark.sql.functions.{col, udf}
+    val stream = StreamingOps.readEvents(spark, sf0001).groupBy(col("event_type")).count()
+    val before = temporary()
+    val out = StreamingOps.runToTable(spark, stream, "complete", "graft_ckpt_")
+    assert(out.count() > 0)
+    // a failing query is the case where Spark keeps a temporary
+    // checkpoint it made itself
+    val boom = udf { (s: String) => if (s != null) throw new IllegalStateException("boom"); s }
+    val failing = StreamingOps.readEvents(spark, sf0001).select(boom(col("event_type")).as("t"))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      StreamingOps.runToTable(spark, failing, "append", "graft_ckpt_"))
+    assert(temporary() -- before == Set.empty)
+    assert(checkpoints() == Set.empty)
+  }
+
   test("watermarked sliding windows match the batch sliding plan") {
     val stream = StreamingOps.readEvents(spark, sf0001)
     val q = StreamingOps.slidingCounts(stream)
