@@ -15,14 +15,18 @@
 # prints, per end-to-end metric of BENCHMARK.json: each side's median
 # and quartiles, and the number of pairs the change won (ties count for
 # neither side); then per side the runs whose every answer was correct
-# and the operations attempted and failed.
+# and the operations attempted and failed; then, per statement template
+# (the statement with its literals blanked), each side's operation count,
+# median latency and slowest latency over all its runs, read from the
+# runs' perfbench/.work/runs/*/spec.json and out.json, so a claim shows
+# which statement classes moved and whether one operation stalled.
 #
 # It only reads perfbench/: both copies run their own perfbench/ as
 # archived, and nothing is written inside the repository.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
-  sed -n '2,20p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,25p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 parent_rev=$1
@@ -79,8 +83,8 @@ for seed in $seeds; do
   pair=$((pair + 1))
 done
 
-python3 - "$log" "$parent_dir/BENCHMARK.json" <<'EOF'
-import json, statistics, sys
+python3 - "$log" "$parent_dir/BENCHMARK.json" "$parent_dir" "$change_dir" <<'EOF'
+import glob, json, os, re, statistics, sys
 runs = [json.loads(l) for l in open(sys.argv[1])]
 bench = json.load(open(sys.argv[2]))
 side = {s: {r["pair"]: r for r in runs if r["side"] == s} for s in ("parent", "change")}
@@ -106,4 +110,32 @@ for s in ("parent", "change"):
     rs = [side[s][p] for p in pairs]
     print(f"{s}: {sum(r['correct'] for r in rs)}/{len(rs)} runs all correct, "
           f"{sum(r['attempted'] for r in rs)} operations, {sum(r['failed'] for r in rs)} failed")
+
+
+def template(op):
+    shape = re.sub(r"(?<![\w.])-?\d+(\.\d+)?\b", "?", re.sub(r"'[^']*'", "?", op["stmt"]))
+    return (f"[{op['mode']}] " if op.get("mode") else "") + shape
+
+
+lat = {}  # template -> side -> latencies of its ok operations
+for s, d in (("parent", sys.argv[3]), ("change", sys.argv[4])):
+    for run in glob.glob(os.path.join(d, "perfbench", ".work", "runs", "*")):
+        try:
+            spec = json.load(open(os.path.join(run, "spec.json")))
+            out = json.load(open(os.path.join(run, "out.json")))
+        except (OSError, ValueError):
+            continue
+        by_id = {op["id"]: op for op in spec["ops"]}
+        for o in out["ops"]:
+            if o.get("status") == "ok" and o.get("id") in by_id:
+                lat.setdefault(template(by_id[o["id"]]), {}).setdefault(s, []).append(o["lat"])
+if lat:
+    print(f"\n{'template':<56}{'parent n median max':>24}{'change n median max':>24}")
+    for t in sorted(lat):
+        cells = []
+        for s in ("parent", "change"):
+            v = lat[t].get(s, [])
+            cells.append(f"{len(v)} {statistics.median(v):.3f} {max(v):.3f}" if v else "-")
+        label = t if len(t) <= 54 else t[:51] + "..."
+        print(f"{label:<56}{cells[0]:>24}{cells[1]:>24}")
 EOF

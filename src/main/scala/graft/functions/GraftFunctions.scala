@@ -57,8 +57,4 @@ object GraftFunctions {
 
   private def aesKey(password: String): Column =
     unhex(sha2(lit(password).cast(BinaryType), 256))
-
-  /** Reference float output format `%.10g` (reference value.go:494) —
-    * for the CSV/stdout sink layer. */
-  def formatFloat(c: Column): Column = format_string("%.10g", c)
 }

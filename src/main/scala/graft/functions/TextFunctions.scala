@@ -142,10 +142,6 @@ object TextFunctions {
     terms.reduce((a, b) => a + b)
   }
 
-  /** Hamming distance between two simhash fingerprints. */
-  def hammingDist(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b)).cast(LongType) // codegen'd popcount
-
   /** Rolling-hash document fingerprint: polynomial hash of the whole
     * token-hash sequence (order-sensitive, unlike the minhash set) —
     * native fold ([[FoldHashExpr]]; HOF mirror pinned ≡ in
@@ -226,8 +222,6 @@ object TextFunctions {
   def meanTokenLenT(toks: Column): Column =
     aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast(DoubleType) /
       greatest(size(toks), lit(1)).cast(DoubleType)
-
-  def meanTokenLen(text: Column): Column = meanTokenLenT(tokens(text))
 
   /** Punctuation character ratio. */
   def punctRatio(text: Column): Column =

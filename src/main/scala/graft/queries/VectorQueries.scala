@@ -708,11 +708,6 @@ object VectorQueries {
       rows.map(r => r.getLong(0) -> r.getLong(2)).toMap)
   }
 
-  private def collectCenterRows(rows: DataFrame): Seq[(Int, Array[Double])] =
-    rows.collect().groupBy(_.getLong(0)).toSeq.sortBy(_._1)
-      .map { case (cell, rs) =>
-        (cell.toInt, rs.sortBy(_.getLong(1)).map(_.getDouble(2)).toArray) }
-
   /** Same-order squared L2 between two driver-side centers — the
     * left fold both engines replay (IEEE ops in pos order). */
   private def sqDistArr(a: Array[Double], b: Array[Double]): Double = {

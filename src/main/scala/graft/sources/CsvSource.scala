@@ -147,11 +147,15 @@ object CsvSource {
     * as ""). LStr is the top of the lattice, so classification stops
     * at the first cell that saturates the column — the remaining
     * cells cannot change the type, and every non-date string cell
-    * would otherwise pay the full date-pattern chain in [[narrowest]]. */
+    * would otherwise pay the full date-pattern chain in [[narrowest]].
+    * Each distinct cell is classified once: sampled columns repeat
+    * their values (TPC-H dates, flags, segments), and a date cell runs
+    * the numeric scan, the duration parse and the date-pattern chain. */
   def columnType(cells: Iterator[String]): LatType = {
+    val memo = new java.util.HashMap[String, LatType]()
     var acc: LatType = LNull
     while (acc != LStr && cells.hasNext) {
-      val t = narrowest(cells.next())
+      val t = memo.computeIfAbsent(cells.next(), narrowest(_))
       if (t.rank > acc.rank) acc = t
     }
     acc
@@ -166,10 +170,24 @@ object CsvSource {
     * [[graft.core.RelationCache]] under `csv:<header>:<path>` and is
     * revalidated against the path's stamp on every call, so a
     * rewritten file re-infers. Neither a hit nor a miss runs a Spark
-    * job; every execution still scans the file. */
-  def read(spark: SparkSession, path: String, header: Boolean = true): DataFrame =
-    graft.core.RelationCache.getOrBuild(spark, s"csv:$header:$path",
-      graft.core.RelationCache.stamp(path))(infer(spark, path, header))
+    * job. From the second read of one local file's version on, the
+    * relation is also served from the relation cache's typed in-memory
+    * tier ([[graft.core.RelationCache.columnar]]): the statement of the
+    * second read fills it, and later statements scan columnar batches
+    * instead of the file's text.
+    *
+    * Only a single file is cached this way: a cached scan yields ""
+    * for `input_file_name`, the first field of the dialect's scan-order
+    * key, so a directory's rows would lose their (file, offset) order;
+    * a single file's partitions already list its rows in byte order. */
+  def read(spark: SparkSession, path: String, header: Boolean = true): DataFrame = {
+    val stamp = graft.core.RelationCache.stamp(path)
+    val df = graft.core.RelationCache.getOrBuild(spark, s"csv:$header:$path", stamp)(
+      infer(spark, path, header))
+    val rel = Bridge.fileRelation(df)
+    graft.core.RelationCache.columnar(spark,
+      s"csv:$header:${rel.location.rootPaths.mkString(",")}", stamp, df)
+  }
 
   /** The CSV relation at `path` with a one-string-column placeholder
     * schema: the file listing the head read and the inferred relation

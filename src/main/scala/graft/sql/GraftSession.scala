@@ -83,15 +83,6 @@ final class GraftSession(val spark: SparkSession, defaultDir: Option[String] = N
     df
   }
 
-  /** Register every table in a scale-factor directory (TESTDATA.md). */
-  def registerDir(dir: String): this.type = {
-    Tables.all.foreach { n =>
-      try register(n, Tables(spark, dir, n))
-      catch { case _: Throwable => () }
-    }
-    this
-  }
-
   def table(name: String): DataFrame = table(name, noHeader = false)
 
   def table(name: String, noHeader: Boolean): DataFrame = recordUse {

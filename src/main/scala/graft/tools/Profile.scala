@@ -6,7 +6,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
-import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.catalyst.plans.logical.OverwriteByExpression
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -28,7 +28,7 @@ import graft.trace.JobListener
   * (default: the bench queries; sf dir from `SPARK_GRAFT_SF_DIR`). */
 object Profile {
 
-  private val Tag = "profile" // the timed passes' `graft.trace` tag
+  private val Tag = "profile" // prefix of the timed passes' `graft.trace` tags
 
   final case class Record(name: String, wallS: Double, buildS: Double,
       optimizeS: Double, planS: Double, execS: Double, start: Long,
@@ -62,16 +62,23 @@ object Profile {
     }
   }
 
+  /** The noop-write option that names a timed pass. */
+  private[tools] val Pass = "graft.profile.pass"
+
   /** Hands the noop write's planning tracker over from the listener
     * bus. That event follows all of the write's job events on the bus,
-    * so once it is in, so are the jobs. */
-  private final class WriteListener extends QueryExecutionListener {
+    * so once it is in, so are the jobs. Only the write of the armed
+    * pass opens the latch: an earlier pass's write event may still be
+    * queued when the next pass arms, and it carries another pass id. */
+  private[tools] final class WriteListener extends QueryExecutionListener {
+    @volatile private var pass = ""
     @volatile private var latch = new CountDownLatch(1)
     @volatile var tracker: Option[QueryPlanningTracker] = None
-    def arm(): Unit = { tracker = None; latch = new CountDownLatch(1) }
-    def await(): Unit = latch.await(60, TimeUnit.SECONDS)
+    def arm(id: String): Unit = { pass = id; tracker = None; latch = new CountDownLatch(1) }
+    def await(seconds: Long): Boolean = latch.await(seconds, TimeUnit.SECONDS)
     private def seen(qe: QueryExecution): Unit = qe.analyzed match {
-      case w: V2WriteCommand if w.table.name == "noop-table" =>
+      case w: OverwriteByExpression if w.table.name == "noop-table" &&
+          w.writeOptions.get(Pass).contains(pass) =>
         tracker = Some(qe.tracker); latch.countDown()
       case _ => ()
     }
@@ -79,35 +86,41 @@ object Profile {
     override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = seen(qe)
   }
 
+  /** A noop write of `df` that names `pass`, as [[WriteListener]] matches it. */
+  private[tools] def write(df: DataFrame, pass: String): Unit =
+    df.write.format("noop").mode("overwrite").option(Pass, pass).save()
+
   def profile(spark: SparkSession, sfDir: String, names: Seq[String]): Seq[Record] = {
     val jobs = new JobListener()
     val writes = new WriteListener
     val sc = spark.sparkContext
     def build(name: String): DataFrame = Registry.queries(name)(spark, sfDir)
-    def write(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
-    names.foreach(n => try Materialize.statement(write(build(n))) catch { case _: Throwable => () })
+    names.foreach(n => try Materialize.statement(write(build(n), "warm")) catch { case _: Throwable => () })
     sc.addSparkListener(jobs)
     spark.listenerManager.register(writes)
-    sc.setLocalProperty(JobListener.Key, Tag)
-    try names.map { name =>
-      jobs.reset(Tag)
-      writes.arm()
+    // each timed pass tags its jobs and its write with its own id, so a
+    // job still running when one record is taken is never charged to
+    // the next pass
+    try names.zipWithIndex.map { case (name, i) =>
+      val pass = s"$Tag:$i"
+      sc.setLocalProperty(JobListener.Key, pass)
+      writes.arm(pass)
       val start = System.currentTimeMillis()
       val t0 = System.nanoTime()
       var t1 = -1L
       val err = try Materialize.statement {
         val df = build(name)
         t1 = System.nanoTime()
-        write(df); None
+        write(df, pass); None
       } catch { case e: Throwable => Some(String.valueOf(e.getMessage)) }
       val t2 = System.nanoTime()
       if (t1 < 0) { t1 = t2; Thread.sleep(500) } // no write: let build jobs drain
-      else writes.await()
+      else writes.await(60)
       val phases = writes.tracker.fold(Map.empty[String, Double])(
         _.phases.map { case (k, v) => k -> v.durationMs / 1e3 }).withDefaultValue(0.0)
       val (wall, buildS) = ((t2 - t0) / 1e9, (t1 - t0) / 1e9)
       val (opt, plan) = (phases(QueryPlanningTracker.OPTIMIZATION), phases(QueryPlanningTracker.PLANNING))
-      Record(name, wall, buildS, opt, plan, wall - buildS - opt - plan, start, jobs.jobRows(Tag), err)
+      Record(name, wall, buildS, opt, plan, wall - buildS - opt - plan, start, jobs.jobRows(pass), err)
     } finally {
       sc.setLocalProperty(JobListener.Key, null)
       spark.listenerManager.unregister(writes)

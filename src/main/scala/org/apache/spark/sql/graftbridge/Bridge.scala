@@ -1,14 +1,17 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.errors.QueryCompilationErrors
 import org.apache.spark.sql.execution.PartitionedFileUtil
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 
-/** Column ⇄ Expression bridge, plus the file-scan pieces CSV inference
-  * reads on the driver. Spark 4 hides these behind private[sql];
+/** Column ⇄ Expression bridge, the file-scan pieces CSV inference
+  * reads on the driver, and the session clone the in-memory tier
+  * persists through. Spark 4 hides these behind private[sql];
   * extension libraries conventionally expose them from a file compiled
   * into the org.apache.spark.sql package tree (same technique the
   * ecosystem uses for custom Expressions). */
@@ -55,6 +58,19 @@ object Bridge {
     }.sortBy(_.length)(Ordering[Long].reverse)
     FilePartition.getFilePartitions(spark, splits, maxSplit)
   }
+
+  /** A clone of `spark` with `confs` set on the clone only: it copies
+    * the session's conf, functions and temporary views, and shares its
+    * context and so its `CacheManager`. */
+  def cloneSession(spark: SparkSession, confs: (String, String)*): SparkSession = {
+    val c = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    confs.foreach { case (k, v) => c.conf.set(k, v) }
+    c
+  }
+
+  /** A frame over the analyzed `plan`, bound to `spark`. */
+  def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** The error Spark's file sources raise when a path holds no file to
     * infer a schema from. */

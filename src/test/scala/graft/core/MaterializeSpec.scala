@@ -118,6 +118,23 @@ class MaterializeSpec extends SparkSpec {
     assert(r.storageLevel == StorageLevel.NONE)
   }
 
+  test("an owned frame outlives every statement until released; the caller's conf stays") {
+    val conf = spark.conf.getAll
+    val df = frame(40).selectExpr("v", "v % 7 AS m")
+    var held: org.apache.spark.sql.DataFrame = null
+    val left = leftBy(Materialize.statement {
+      held = Materialize.own(df)
+      assert(df.filter("m = 3").count() == 6) // a plan over df reads, and fills, the cache
+    })
+    assert(spark.conf.getAll == conf)
+    assert(left.size == 1, s"the statement must leave the owned cache: $left")
+    assert(held.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK, "every plan of df matches the cache")
+    Materialize.release(held)
+    assert((persisted & left).isEmpty)
+    assert(df.storageLevel == StorageLevel.NONE)
+  }
+
   test("src/main materializes only through Materialize and listens only through JobListener") {
     val root = Paths.get("src/main/scala")
     val files: Seq[Path] = Files.walk(root).iterator().asScala
