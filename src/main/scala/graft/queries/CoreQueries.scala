@@ -273,12 +273,12 @@ object CoreQueries {
              |WHERE o_orderkey IS NULL""".stripMargin)),
 
     // ── §2.9 X6 inc() ─────────────────────────────────────────────────
-    // Two-phase distributed numbering (RowNumbers.global): range
+    // Two-phase distributed numbering (RowNumbers.number): range
     // partition + per-partition offsets — no single-partition window.
     Q("q23_inc",
-      (s, dir) => graft.core.RowNumbers.global(
-        t(s, dir, "customer").select(col("c_custkey")),
-        Seq(col("c_custkey")), "rn", step = 1.0),
+      (s, dir) => graft.core.RowNumbers.number(
+        t(s, dir, "customer").select(col("c_custkey")), Seq(col("c_custkey")))
+        .select(col("c_custkey"), col("rn").cast(DoubleType).as("rn")),
       Some("""SELECT c_custkey, CAST(row_number() OVER (ORDER BY c_custkey) AS DOUBLE) AS rn
              |FROM customer""".stripMargin)),
 

@@ -52,11 +52,11 @@ object MultimodalQueries {
 
     // Aspect-ratio bucketed batching (image-gen training prep): images
     // classed into the five standard aspect buckets, then given a
-    // per-bucket batch index. The numbering is RowNumbers.grouped —
-    // range-partitioned two-phase, so a bucket's rows SPREAD across
-    // partitions instead of funneling into one reducer per bucket
-    // (five hot keys is exactly where a plain window collapses at
-    // scale). Threshold classing (not nearest-ratio) keeps the bucket
+    // per-bucket batch index. The numbering is RowNumbers.number keyed
+    // on bucket — range-partitioned two-phase, so a bucket's rows
+    // SPREAD across partitions instead of funneling into one reducer
+    // per bucket (five hot keys is exactly where a plain window
+    // collapses at scale). Threshold classing (not nearest-ratio) keeps the bucket
     // decision a few exact double compares both engines share.
     Q("m03_aspect_batches",
       (s, dir) => {
@@ -72,7 +72,7 @@ object MultimodalQueries {
           when(col("r") < 0.6, "9:16").when(col("r") < 0.85, "3:4")
             .when(col("r") < 1.15, "1:1").when(col("r") < 1.5, "4:3")
             .otherwise("16:9")).drop("r")
-        graft.core.RowNumbers.grouped(b, Seq("bucket"), Seq(col("doc_id")))
+        graft.core.RowNumbers.number(b, Seq(col("doc_id")), key = Seq("bucket"))
           .select(col("doc_id"), col("bucket"),
             expr("(rn - 1) div 16").as("batch_idx"))
       },

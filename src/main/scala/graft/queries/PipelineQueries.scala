@@ -112,7 +112,7 @@ object PipelineQueries {
     Q("p05_pretrain_build",
       (s, dir) =>
         graft.core.RowNumbers
-          .globalCumsum(pretrainSurvivors(s, dir), Seq(col("doc_id")), "n_tok", "cum")
+          .cumsum(pretrainSurvivors(s, dir), Seq(col("doc_id")), "n_tok")
           .select(col("doc_id"), col("n_tok"),
             (col("cum") - col("n_tok")).as("tok_start"),
             expr("(cum - n_tok) div 512").as("first_bin"),
@@ -240,9 +240,9 @@ object PipelineQueries {
     // most one doc — the standard mixing contract). Never RNG: the
     // same docs are selected on any cluster size, and a larger budget
     // admits a superset. The per-source running sum is
-    // RowNumbers.groupedCumsum — the two-phase range-partition shape,
-    // so a 100 TB source never funnels through one reducer the way a
-    // plain window would. All-integer output: ulp-proof gate.
+    // RowNumbers.cumsum keyed on source — the two-phase range-partition
+    // shape, so a 100 TB source never funnels through one reducer the
+    // way a plain window would. All-integer output: ulp-proof gate.
     Q("p12_token_budget_mix",
       (s, dir) => tokenBudgetMix(
         Tables(s, dir, "documents")
@@ -422,8 +422,8 @@ object PipelineQueries {
     val okey = ((col("doc_id") % lit(1000000L)) * lit(2654435761L)) % lit(1000003L)
     val keyed = sized.select(col("source"), col("doc_id"), col("n_tok"),
       okey.as("okey"))
-    graft.core.RowNumbers.groupedCumsum(keyed, Seq("source"),
-      Seq(col("okey").asc, col("doc_id").asc), "n_tok", "cum_tok")
+    graft.core.RowNumbers.cumsum(keyed, Seq(col("okey").asc, col("doc_id").asc),
+      "n_tok", key = Seq("source"), name = "cum_tok")
       .select(col("source"), col("doc_id"), col("n_tok"), col("cum_tok"),
         when(col("cum_tok") - col("n_tok") < lit(budget), lit(1L))
           .otherwise(lit(0L)).as("keep"))

@@ -628,7 +628,7 @@ object TextQueries {
     // whole corpus are conceptually concatenated in doc_id order and
     // cut into fixed L-token training sequences; each doc reports its
     // global token offset and the first/last sequence it lands in.
-    // The global running sum is RowNumbers.globalCumsum — range
+    // The global running sum is RowNumbers.cumsum — range
     // partition + per-partition sums + broadcast offsets — NOT a
     // `sum() OVER (ORDER BY …)` window, which would funnel 100 TB
     // through one `Exchange SinglePartition` task. Integer `div`
@@ -862,7 +862,7 @@ object TextQueries {
     // admitted in doc_id order until the source's running token total
     // crosses the cap). One source-keyed exchange; the running sum is
     // linear per partition. The same shape scales to a global budget
-    // via RowNumbers.globalCumsum (t11's two-phase distributed cumsum)
+    // via RowNumbers.cumsum (t11's two-phase distributed cumsum)
     // when a single source outgrows one partition.
     Q("t19_token_budget",
       (s, dir) => {
@@ -1432,7 +1432,7 @@ object TextQueries {
     * packing — corpus tokens conceptually concatenated in doc_id order
     * and cut into L-token training sequences; each doc reports its
     * global token offset and the first/last sequence it lands in. The
-    * global running sum is RowNumbers.globalCumsum (range partition +
+    * global running sum is RowNumbers.cumsum (range partition +
     * per-partition sums + broadcast offsets), NOT a `sum() OVER
     * (ORDER BY …)` window, which would funnel 100 TB through one
     * `Exchange SinglePartition` task. Integer `div` (not double
@@ -1445,8 +1445,7 @@ object TextQueries {
     val n = docs.select(col("doc_id"),
       coalesce(graft.functions.TextProfileExprs.text_profile(col("text"))
         .getField("n_tok"), lit(0L)).as("n_tok"))
-    graft.core.RowNumbers
-      .globalCumsum(n, Seq(col("doc_id")), "n_tok", "cum")
+    graft.core.RowNumbers.cumsum(n, Seq(col("doc_id")), "n_tok")
       .select(col("doc_id"), col("n_tok"),
         (col("cum") - col("n_tok")).as("tok_start"),
         expr(s"(cum - n_tok) div $l").as("first_bin"),
@@ -1507,8 +1506,7 @@ object TextQueries {
     val n = docs.select(col("doc_id"),
       coalesce(graft.functions.TextProfileExprs.text_profile(col("text"))
         .getField("n_tok"), lit(0L)).as("n_tok"))
-    val c = graft.core.RowNumbers
-      .globalCumsum(n, Seq(col("doc_id")), "n_tok", "cum")
+    val c = graft.core.RowNumbers.cumsum(n, Seq(col("doc_id")), "n_tok")
     // greatest(cum - 1, 0): on a degenerate all-zero-token corpus the
     // global max of cum - 1 is -1, and Spark's `div` truncates toward
     // zero while DuckDB's `//` floors — 0 vs -1 bins and a /0 fill

@@ -80,54 +80,53 @@ final class Parser(toks: Vector[Tok]) {
     else if (matches(peek, "packing")) { advance(); parsePacking() }
     else parseQuery()
 
-  /** `mix <idCol>[,] <textCol> from <table> [nh] [budget <n>]
-    * [per <srcCol>]`. */
-  private def parseMix(): MixStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
-    val idCol = colName()
-    accept(",")
-    val textCol = colName()
-    expect("from")
+  /** A pipeline statement's column operand. */
+  private def colName(): String = peek match {
+    case _: Word => advance().text
+    case t => throw ParseError(s"expected column name, found '${t.text}'")
+  }
+
+  /** A pipeline statement ends at EOF or `;`. */
+  private def endOfStatement(): Unit =
+    if (!peek.eq(EOF) && peekText != ";")
+      throw ParseError(s"unexpected trailing token '${peek.text}'")
+
+  /** `<kw> <table> [nh]`: a pipeline statement's single-table source —
+    * no alias, no join. An empty `kw` reads the bare `<table> [nh]`. */
+  private def fromTable(kw: String = "from"): FromClause = {
+    if (kw.nonEmpty) expect(kw)
     val table = parseTableRef()
     var noHeader = prefixNh
     while (accept("nh") || accept("noheader")) noHeader = true
+    FromClause(table, None, noHeader, intColumns = false, Nil)
+  }
+
+  /** `mix <idCol>[,] <textCol> from <table> [nh] [budget <n>]
+    * [per <srcCol>]`. */
+  private def parseMix(): MixStmt = {
+    val idCol = colName()
+    accept(",")
+    val textCol = colName()
+    val from = fromTable()
     val budget = if (accept("budget")) parseNumber() else 800L
     if (budget < 1) throw ParseError(s"mix budget must be at least 1, got $budget")
     val src = if (accept("per")) colName() else "source"
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    MixStmt(idCol, textCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil), budget, src)
+    endOfStatement()
+    MixStmt(idCol, textCol, from, budget, src)
   }
 
   /** `card <idCol>[,] <textCol> from <table> [nh]`. */
   private def parseCard(): CardStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",")
     val textCol = colName()
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    CardStmt(idCol, textCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil))
+    val from = fromTable()
+    endOfStatement()
+    CardStmt(idCol, textCol, from)
   }
 
   /** `calibrate <idCol>[,] <srcCol>[,] <textCol> from <table> [nh]`. */
   private def parseCalibrate(): CalibrateStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",")
     val srcCol = colName()
@@ -135,23 +134,14 @@ final class Parser(toks: Vector[Tok]) {
     val textCol = colName()
     if (Seq(idCol, srcCol, textCol).distinct.size != 3)
       throw ParseError("calibrate: id, source and text columns must be distinct")
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    CalibrateStmt(idCol, srcCol, textCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil))
+    val from = fromTable()
+    endOfStatement()
+    CalibrateStmt(idCol, srcCol, textCol, from)
   }
 
   /** `negatives <idCol>[,] <vecCol>[,] <labelCol> from <table> [nh]
     * [top <k>]`. */
   private def parseNegatives(): NegativesStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",")
     val vecCol = colName()
@@ -159,58 +149,37 @@ final class Parser(toks: Vector[Tok]) {
     val labelCol = colName()
     if (Seq(idCol, vecCol, labelCol).distinct.size != 3)
       throw ParseError("negatives: id, vector and label columns must be distinct")
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
+    val from = fromTable()
     val k = if (accept("top")) parseNumber() else 5L
     if (k < 1) throw ParseError(s"top must be at least 1, got $k")
     if (k > 1000000) throw ParseError(s"top must be at most 1e6, got $k")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    NegativesStmt(idCol, vecCol, labelCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil), k)
+    endOfStatement()
+    NegativesStmt(idCol, vecCol, labelCol, from, k)
   }
 
   /** `outliers <idCol>[,] <vecCol> from <table> [nh] [top <k>]`. */
   private def parseOutliers(): OutliersStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",")
     val vecCol = colName()
     if (idCol == vecCol)
       throw ParseError("outliers: id and vector columns must be distinct")
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
+    val from = fromTable()
     val k = if (accept("top")) parseNumber() else 20L
     if (k < 1) throw ParseError(s"top must be at least 1, got $k")
     if (k > 1000000) throw ParseError(s"top must be at most 1e6, got $k")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    OutliersStmt(idCol, vecCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil), k)
+    endOfStatement()
+    OutliersStmt(idCol, vecCol, from, k)
   }
 
   /** `repair <idCol>[,] <vecCol> from <table> [nh] [threshold <x>]`. */
   private def parseRepair(): RepairStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",")
     val vecCol = colName()
     if (idCol == vecCol)
       throw ParseError("repair: id and vector columns must be distinct")
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
+    val from = fromTable()
     val indexPath = if (accept("using")) Some(parsePathLit("repair")) else None
     val thresh = if (accept("threshold")) peek match {
       case Num(t) => advance(); t.toDouble
@@ -218,11 +187,8 @@ final class Parser(toks: Vector[Tok]) {
     } else graft.queries.VectorQueries.IVF_REPAIR_THRESH
     if (thresh <= 0)
       throw ParseError(s"threshold must be positive, got $thresh")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    RepairStmt(idCol, vecCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil), thresh,
-      indexPath)
+    endOfStatement()
+    RepairStmt(idCol, vecCol, from, thresh, indexPath)
   }
 
   /** A QUOTED filesystem path operand (index `into`, serve/repair
@@ -238,51 +204,33 @@ final class Parser(toks: Vector[Tok]) {
 
   /** `index <idCol>[,] <vecCol> from <table> [nh] into '<path>'`. */
   private def parseIndex(): IndexStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",")
     val vecCol = colName()
     if (idCol == vecCol)
       throw ParseError("index: id and vector columns must be distinct")
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
+    val from = fromTable()
     expect("into")
     val path = parsePathLit("index")
     val pq = accept("pq")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    IndexStmt(idCol, vecCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil), path, pq)
+    endOfStatement()
+    IndexStmt(idCol, vecCol, from, path, pq)
   }
 
   /** `ingest <idCol>[,] <vecCol> from <table> [nh] into '<path>'
     * [append]`. */
   private def parseIngest(): IngestStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",")
     val vecCol = colName()
     if (idCol == vecCol)
       throw ParseError("ingest: id and vector columns must be distinct")
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
+    val from = fromTable()
     expect("into")
     val path = parsePathLit("ingest")
     val append = accept("append")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    IngestStmt(idCol, vecCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil), path, append)
+    endOfStatement()
+    IngestStmt(idCol, vecCol, from, path, append)
   }
 
   /** `compact '<path>' [files <n>]`. */
@@ -292,18 +240,13 @@ final class Parser(toks: Vector[Tok]) {
     if (files < 1) throw ParseError(s"compact files must be at least 1, got $files")
     if (files > 100000)
       throw ParseError(s"compact files must be at most 100000, got $files")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
+    endOfStatement()
     CompactStmt(path, files)
   }
 
   /** `serve <idCol>[,] <vecCol> from '<path>' [query <table>]
     * [top <k>] [probe <n>]`. */
   private def parseServe(): ServeStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",")
     val vecCol = colName()
@@ -332,136 +275,77 @@ final class Parser(toks: Vector[Tok]) {
       throw ParseError(s"serve shortlist ($shortlist) must be at least top ($k)")
     if (shortlist > 10000)
       throw ParseError(s"serve shortlist must be at most 10000, got $shortlist")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
+    endOfStatement()
     ServeStmt(idCol, vecCol, path, query, k, probe, pq, shortlist)
   }
 
   /** `drift <vecCol> from <refTable> [nh] against <curTable> [nh]` —
     * the dialect's first two-table non-join statement. */
   private def parseDrift(): DriftStmt = {
-    val vecCol = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
-    expect("from")
-    val ref = parseTableRef()
-    var refNh = prefixNh
-    while (accept("nh") || accept("noheader")) refNh = true
-    expect("against")
-    val cur = parseTableRef()
-    var curNh = prefixNh
-    while (accept("nh") || accept("noheader")) curNh = true
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    DriftStmt(vecCol,
-      FromClause(ref, None, refNh, intColumns = false, Nil),
-      FromClause(cur, None, curNh, intColumns = false, Nil))
+    val vecCol = colName()
+    val ref = fromTable()
+    val cur = fromTable("against")
+    endOfStatement()
+    DriftStmt(vecCol, ref, cur)
   }
 
   /** `epochs <srcCol>[,] <textCol> from <table> [nh] [budget <n>]`. */
   private def parseEpochs(): EpochsStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val srcCol = colName()
     accept(",")
     val textCol = colName()
     if (srcCol == textCol)
       throw ParseError("epochs: source and text columns must be distinct")
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
+    val from = fromTable()
     val budget = if (accept("budget")) parseNumber() else 1000000L
     if (budget < 1) throw ParseError(s"budget must be at least 1, got $budget")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    EpochsStmt(srcCol, textCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil), budget)
+    endOfStatement()
+    EpochsStmt(srcCol, textCol, from, budget)
   }
 
   /** `retention <userCol>[,] <tsCol> from <table> [nh]`. */
   private def parseRetention(): RetentionStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val userCol = colName()
     accept(",")
     val tsCol = colName()
     if (userCol == tsCol)
       throw ParseError("retention: user and timestamp columns must be distinct")
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    RetentionStmt(userCol, tsCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil))
+    val from = fromTable()
+    endOfStatement()
+    RetentionStmt(userCol, tsCol, from)
   }
 
   /** `diff <textCol> from <oldTable> [nh] against <newTable> [nh]` —
     * the drift two-table shape. */
   private def parseDiff(): DiffStmt = {
-    val textCol = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
-    expect("from")
-    val old = parseTableRef()
-    var oldNh = prefixNh
-    while (accept("nh") || accept("noheader")) oldNh = true
-    expect("against")
-    val cur = parseTableRef()
-    var curNh = prefixNh
-    while (accept("nh") || accept("noheader")) curNh = true
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    DiffStmt(textCol,
-      FromClause(old, None, oldNh, intColumns = false, Nil),
-      FromClause(cur, None, curNh, intColumns = false, Nil))
+    val textCol = colName()
+    val old = fromTable()
+    val cur = fromTable("against")
+    endOfStatement()
+    DiffStmt(textCol, old, cur)
   }
 
   /** `fertility <langCol>[,] <textCol> from <table> [nh]`. */
   private def parseFertility(): FertilityStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val langCol = colName()
     accept(",")
     val textCol = colName()
     if (langCol == textCol)
       throw ParseError("fertility: language and text columns must be distinct")
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    FertilityStmt(langCol, textCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil))
+    val from = fromTable()
+    endOfStatement()
+    FertilityStmt(langCol, textCol, from)
   }
 
   /** `packing <idCol>[,] <textCol> from <table> [nh]
     * [sizes <n>[, <n>…]]` — sizes default to 256, 512, 1024. */
   private def parsePacking(): PackingStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",")
     val textCol = colName()
     if (idCol == textCol)
       throw ParseError("packing: id and text columns must be distinct")
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
+    val from = fromTable()
     val sizes =
       if (accept("sizes")) {
         val buf = scala.collection.mutable.ArrayBuffer(parseNumber())
@@ -473,31 +357,20 @@ final class Parser(toks: Vector[Tok]) {
     }
     if (sizes.distinct.size != sizes.size)
       throw ParseError("packing sizes must be distinct")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    PackingStmt(idCol, textCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil), sizes)
+    endOfStatement()
+    PackingStmt(idCol, textCol, from, sizes)
   }
 
   /** `trend <tsCol>[,] <keyCol> from <table> [nh] [top <k>]`. */
   private def parseTrend(): TrendStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val tsCol = colName()
     accept(",")
     val keyCol = colName()
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
+    val from = fromTable()
     val k = if (accept("top")) parseNumber() else 3L
     if (k < 1) throw ParseError(s"trend top must be at least 1, got $k")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    TrendStmt(tsCol, keyCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil), k)
+    endOfStatement()
+    TrendStmt(tsCol, keyCol, from, k)
   }
 
   /** `sample <idCol> from <table> [nh]
@@ -506,15 +379,8 @@ final class Parser(toks: Vector[Tok]) {
     * x10): the n rows selected by deterministic weighted keys;
     * `per <g>` makes it an independent per-group draw (x13). */
   private def parseSample(): SampleStmt = {
-    val idCol = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
-    val from = FromClause(table, None, noHeader, intColumns = false, Nil)
+    val idCol = colName()
+    val from = fromTable()
     if (accept("top")) {
       val n = parseNumber()
       if (n < 1) throw ParseError(s"sample top must be at least 1, got $n")
@@ -527,108 +393,69 @@ final class Parser(toks: Vector[Tok]) {
         case _: Word => advance().text
         case t => throw ParseError(s"expected group column, found '${t.text}'")
       }) else None
-      if (!peek.eq(EOF) && peekText != ";")
-        throw ParseError(s"unexpected trailing token '${peek.text}'")
+      endOfStatement()
       SampleStmt(idCol, from, 10L, Some(n), Some(w), per)
     } else {
       val pct = if (accept("pct")) parseNumber() else 10L
       if (pct < 1 || pct > 99)
         throw ParseError(s"sample pct must be in [1, 99], got $pct")
-      if (!peek.eq(EOF) && peekText != ";")
-        throw ParseError(s"unexpected trailing token '${peek.text}'")
+      endOfStatement()
       SampleStmt(idCol, from, pct)
     }
   }
 
   /** `quantize <idCol>[,] <vecCol> from <table> [nh]`. */
   private def parseQuantize(): QuantizeStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",")
     val vecCol = colName()
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    QuantizeStmt(idCol, vecCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil))
+    val from = fromTable()
+    endOfStatement()
+    QuantizeStmt(idCol, vecCol, from)
   }
 
   /** `pack <idCol>[,] <textCol> from <table> [nh] [size <l>]`. */
   private def parsePack(): PackStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",")
     val textCol = colName()
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
+    val from = fromTable()
     val l = if (accept("size")) parseNumber() else 512L
     if (l < 1) throw ParseError(s"pack size must be at least 1, got $l")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    PackStmt(idCol, textCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil), l)
+    endOfStatement()
+    PackStmt(idCol, textCol, from, l)
   }
 
   /** `chunk <idCol>[,] <textCol> from <table> [nh] [size <n>]
     * [overlap <m>]`. */
   private def parseChunk(): ChunkStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",")
     val textCol = colName()
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
+    val from = fromTable()
     val size = if (accept("size")) parseNumber() else 64L
     val overlap = if (accept("overlap")) parseNumber() else 16L
     if (size < 1) throw ParseError(s"chunk size must be at least 1, got $size")
     if (overlap < 0 || overlap >= size)
       throw ParseError(s"chunk overlap must be in [0, size), got $overlap for size $size")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    ChunkStmt(idCol, textCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil), size, overlap)
+    endOfStatement()
+    ChunkStmt(idCol, textCol, from, size, overlap)
   }
 
   /** `profile <table> [nh]`. */
   private def parseProfile(): ProfileStmt = {
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    ProfileStmt(FromClause(table, None, noHeader, intColumns = false, Nil))
+    val from = fromTable(kw = "")
+    endOfStatement()
+    ProfileStmt(from)
   }
 
   /** `search <idCol>[,] <textCol> from <table> [nh] for '<terms>'
     * [top <k>]`. */
   private def parseSearch(): SearchStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",")
     val textCol = colName()
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
+    val from = fromTable()
     expect("for")
     val termsRaw = peek match {
       case Str(s) => advance(); s
@@ -640,22 +467,14 @@ final class Parser(toks: Vector[Tok]) {
     if (terms.isEmpty) throw ParseError("search terms must contain at least one word")
     val k = if (accept("top")) parseNumber() else 20L
     if (k < 1) throw ParseError(s"top must be at least 1, got $k")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    SearchStmt(idCol, textCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil), terms, k)
+    endOfStatement()
+    SearchStmt(idCol, textCol, from, terms, k)
   }
 
   /** `split <idCol> from <table> [nh] [into <p1> <p2> <p3>]`. */
   private def parseSplit(): SplitStmt = {
-    val idCol = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
+    val idCol = colName()
+    val from = fromTable()
     val pcts =
       if (accept("into")) {
         val ps = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -670,88 +489,53 @@ final class Parser(toks: Vector[Tok]) {
       throw ParseError("split percentages must be positive")
     if (pcts.sum != 100L)
       throw ParseError(s"split percentages must sum to 100, got ${pcts.sum}")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    SplitStmt(idCol, FromClause(table, None, noHeader, intColumns = false, Nil), pcts)
+    endOfStatement()
+    SplitStmt(idCol, from, pcts)
   }
 
   /** `cluster <idCol>[,] <vecCol> from <table> [nh] [into <k>]`. */
   private def parseCluster(): ClusterStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",")
     val vecCol = colName()
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
+    val from = fromTable()
     val k = if (accept("into")) parseNumber() else 4L
     if (k < 2) throw ParseError(s"cluster count must be at least 2, got $k")
     if (k > 256) throw ParseError(s"cluster count must be at most 256, got $k")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    ClusterStmt(idCol, vecCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil), k)
+    endOfStatement()
+    ClusterStmt(idCol, vecCol, from, k)
   }
 
   /** `shard <idCol> from <table> [nh] [into <n>]`. */
   private def parseShard(): ShardStmt = {
-    val idCol = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
+    val idCol = colName()
+    val from = fromTable()
     val n = if (accept("into")) parseNumber() else 16L
     if (n < 1) throw ParseError(s"shard count must be at least 1, got $n")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    ShardStmt(idCol, FromClause(table, None, noHeader, intColumns = false, Nil), n)
+    endOfStatement()
+    ShardStmt(idCol, from, n)
   }
 
   /** `interleave <idCol>[,] <srcCol> from <table> [nh]`. */
   private def parseInterleave(): InterleaveStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",")
     val srcCol = colName()
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    InterleaveStmt(idCol, srcCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil))
+    val from = fromTable()
+    endOfStatement()
+    InterleaveStmt(idCol, srcCol, from)
   }
 
   /** `similar <idCol>[,] <vecCol> from <table> [nh] [top <k>]`. */
   private def parseSimilar(): SimilarStmt = {
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",")
     val vecCol = colName()
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
+    val from = fromTable()
     val k = if (accept("top")) parseNumber() else 5L
     if (k < 1) throw ParseError(s"top must be at least 1, got $k")
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
-    SimilarStmt(idCol, vecCol,
-      FromClause(table, None, noHeader, intColumns = false, Nil), k)
+    endOfStatement()
+    SimilarStmt(idCol, vecCol, from, k)
   }
 
   /** `dedup near|exact|best <idCol>[,] <textCol> from <table> [nh]` —
@@ -764,25 +548,17 @@ final class Parser(toks: Vector[Tok]) {
       else if (accept("semantic")) "semantic"
       else throw ParseError(
         "expected 'near', 'exact', 'best' or 'semantic' after dedup")
-    def colName(): String = peek match {
-      case _: Word => advance().text
-      case t => throw ParseError(s"expected column name, found '${t.text}'")
-    }
     val idCol = colName()
     accept(",") // commas optional, dialect-wide
     val textCol = colName()
-    // single-table FROM, parsed directly (parseFrom would swallow the
-    // `threshold` keyword as a table alias): table ref + optional nh —
-    // no aliases, no joins on the dedup surface
-    expect("from")
-    val table = parseTableRef()
-    var noHeader = prefixNh
-    while (accept("nh") || accept("noheader")) noHeader = true
+    // single-table FROM (parseFrom would swallow the `threshold`
+    // keyword as a table alias) — no aliases, no joins on the dedup
+    // surface
+    val from = fromTable()
     if (matches(peek, "join") || matches(peek, "inner") ||
         matches(peek, "left") || matches(peek, "outer") ||
         matches(peek, "sjoin") || matches(peek, "bjoin"))
       throw ParseError("dedup takes a single table (no joins)")
-    val from = FromClause(table, None, noHeader, intColumns = false, Nil)
     val threshold =
       if (accept("threshold")) {
         if (mode != "near" && mode != "semantic") throw ParseError(
@@ -795,8 +571,7 @@ final class Parser(toks: Vector[Tok]) {
           throw ParseError(s"threshold must be in [0, 1], got $t")
         Some(t)
       } else None
-    if (!peek.eq(EOF) && peekText != ";")
-      throw ParseError(s"unexpected trailing token '${peek.text}'")
+    endOfStatement()
     DedupStmt(mode, idCol, textCol, from, threshold)
   }
 

@@ -747,7 +747,7 @@ final class Planner(resolve: (String, Boolean) => DataFrame,
 
   /** `pack id, text from t [size l]` — lowers VERBATIM to the t11
     * builder (TextQueries.seqPack): distributed global cumsum via
-    * RowNumbers.globalCumsum, never a single-partition window. */
+    * RowNumbers.cumsum, never a single-partition window. */
   def planPack(st: PackStmt): DataFrame = {
     val base = resolve(st.from.table, st.from.noHeader)
     graft.queries.TextQueries.seqPack(
@@ -783,10 +783,10 @@ final class Planner(resolve: (String, Boolean) => DataFrame,
     }
     // inc() numbers the retained rows in scan order (reference
     // selector.go:204-207 increments per evaluated row, post-where).
-    // RowNumbers.scanOrder (zipWithIndex two-phase shape) keeps every
-    // partition numbering itself in parallel; a window over a global
-    // ORDER BY would funnel the whole dataset through one task. The
-    // zip boundary drops attribute qualifiers, so the frame is first
+    // RowNumbers.number (two-phase offsets) keeps every partition
+    // numbering itself in parallel; a window over a global ORDER BY
+    // would funnel the whole dataset through one task. The RDD
+    // boundary drops attribute qualifiers, so the frame is first
     // renamed positionally (__inN) and the catalog rewritten to match —
     // duplicate names across joined files stay unambiguous.
     val needsInc =
@@ -796,8 +796,8 @@ final class Planner(resolve: (String, Boolean) => DataFrame,
     // Scan-order CONTRACT (multi-file inputs): rows number in
     // (lexicographic file name, byte offset within file) order — the
     // same order DuckDB's read_csv glob scans, and the natural
-    // "concatenate the files" reading. Implemented by range-sorting on
-    // (input_file_name, monotonically_increasing_id) before the zip:
+    // "concatenate the files" reading. Implemented by numbering in
+    // (input_file_name, monotonically_increasing_id) order:
     // on a single file this is byte order (unchanged semantics); on
     // non-file inputs (joins, registered frames) input_file_name is
     // empty so the key degrades to mid = (partition, offset) — the
@@ -810,15 +810,13 @@ final class Planner(resolve: (String, Boolean) => DataFrame,
         val named = tagged.select(cat0.entries.zipWithIndex.map {
           case ((_, _, c, _), i) => c.as(s"__in$i")
         } ++ Seq(col("__scanfile"), col("__scanoff")): _*)
-        val ordered = named
-          .repartitionByRange(col("__scanfile"), col("__scanoff"))
-          .sortWithinPartitions(col("__scanfile"), col("__scanoff"))
-        val zipped = graft.core.RowNumbers.scanOrder(ordered, IncCol)
+        val numbered = graft.core.RowNumbers
+          .number(named, Seq(col("__scanfile"), col("__scanoff")), name = IncCol)
           .drop("__scanfile", "__scanoff")
         val entries = cat0.entries.zipWithIndex.map {
           case ((qual, n, _, t), i) => (qual, n, col(s"__in$i"), t)
         }
-        (zipped, Cat(entries))
+        (numbered, Cat(entries))
       } else (afterWhere0, cat0)
     // session(ts, gap, part) hoist: each distinct call becomes ONE
     // hidden window column on the post-where frame (see hoistSessions);
@@ -1475,7 +1473,7 @@ final class Planner(resolve: (String, Boolean) => DataFrame,
         (GraftFunctions.decrypt(typed(args.head, cat, agg)._1, passwordArg(args, cat)), TStr)
       case "inc" =>
         // inc([step]) — scan-ordered numbering; plan() pre-attached the
-        // distributed row index (RowNumbers.scanOrder two-phase shape),
+        // distributed row index (RowNumbers.number two-phase shape),
         // so this is a plain column reference: parallel, no
         // single-partition window anywhere in the plan.
         val step = args.headOption.collect { case Lit(raw, _) => raw.toDouble }.getOrElse(1.0)

@@ -11,6 +11,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Sessions
+import graft.trace.JobListener
 
 /** Shared session (one per suite, lazy), built by the engine's one
   * session policy with a fixed 4 cores. */
@@ -38,6 +39,29 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (suiteRoot != null)
         Files.walk(suiteRoot).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
     } finally super.afterAll()
+
+  private val jobTags = new AtomicInteger
+
+  /** The Spark jobs `body` runs, by id, tagged through a [[JobListener]]
+    * and read once every one of them has ended. */
+  def jobRowsOf(body: => Any): Seq[JobListener.Job] = {
+    val sc = spark.sparkContext
+    val listener = new JobListener()
+    val tag = s"spec-${jobTags.incrementAndGet()}"
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(JobListener.Key, tag)
+      try body finally sc.setLocalProperty(JobListener.Key, null)
+      var (prev, n) = (-1, 0)
+      while ({ n = listener.jobRows(tag).size; n != prev || listener.activeJobs(tag) > 0 }) {
+        prev = n; Thread.sleep(200)
+      }
+      listener.jobRows(tag)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** How many Spark jobs `body` runs, counted by [[jobRowsOf]]. */
+  def jobsOf(body: => Any): Int = jobRowsOf(body).size
 
   /** Spark jobs started while `body` runs. Listener events arrive
     * asynchronously, so the count is read once it has stopped moving —

@@ -3,7 +3,6 @@ package graft.core
 import java.nio.file.{Files, Path, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.classic
@@ -16,7 +15,6 @@ import org.apache.spark.storage.StorageLevel
 import graft.SparkSpec
 import graft.sources.CsvSource
 import graft.sql.GraftSession
-import graft.trace.JobListener
 
 /** The typed in-memory tier of [[RelationCache.columnar]]: the second
   * read of a CSV file version caches its typed relation, the statement
@@ -52,25 +50,6 @@ class ColumnarTierSpec extends SparkSpec {
   private def answer(df: DataFrame): Seq[Row] =
     df.filter(col("amt") > 20).groupBy("k").agg(count(lit(1)), sum("amt"), min("d"))
       .orderBy("k").collect().toSeq
-
-  private val jobTags = new AtomicInteger
-
-  /** Spark jobs `body` runs, counted by a [[JobListener]] tag. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val listener = new JobListener()
-    val tag = s"tier-${jobTags.incrementAndGet()}"
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(JobListener.Key, tag)
-      try body finally sc.setLocalProperty(JobListener.Key, null)
-      var (prev, n) = (-1, 0)
-      while ({ n = listener.jobRows(tag).size; n != prev || listener.activeJobs(tag) > 0 }) {
-        prev = n; Thread.sleep(200)
-      }
-      n
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** A query that needs no exchange, so adaptive execution does not
     * plan its cache scan as a stage of its own. */

@@ -140,9 +140,9 @@ class MaterializeSpec extends SparkSpec {
     val files: Seq[Path] = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 50, s"scanned too few sources under $root")
-    def hits(pattern: String, allowed: String): Seq[String] = {
+    def hits(pattern: String, allowed: String*): Seq[String] = {
       val re = pattern.r
-      files.filterNot(_.endsWith(allowed)).flatMap { f =>
+      files.filterNot(f => allowed.exists(f.endsWith(_))).flatMap { f =>
         Files.readAllLines(f).asScala.zipWithIndex.collect {
           case (line, i) if re.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
         }
@@ -156,5 +156,14 @@ class MaterializeSpec extends SparkSpec {
       "graft/trace/JobListener.scala")
     assert(listeners.isEmpty,
       "listen through graft.trace.JobListener:\n" + listeners.mkString("\n"))
+    // RDD zipWithIndex (called with parens, or on a line naming an RDD;
+    // a Scala collection's zipWithIndex takes none) and any per-partition
+    // offset pass outside RowNumbers would be another copy of its
+    // two-phase numbering
+    val zips = hits("""zipWithIndex\(|(?i)rdd.*zipWithIndex|zipWithUniqueId""")
+    assert(zips.isEmpty, "number rows through graft.core.RowNumbers:\n" + zips.mkString("\n"))
+    val offsetPasses = hits("""mapPartitionsWithIndex""", "graft/core/RowNumbers.scala")
+    assert(offsetPasses.isEmpty,
+      "number rows through graft.core.RowNumbers:\n" + offsetPasses.mkString("\n"))
   }
 }
